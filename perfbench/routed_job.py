@@ -3,26 +3,39 @@
 Processors: extract_log_line (python) -> parse_auto -> filter parse_ok ->
 resource_attrs -> route. Three exclusive sinks errors/ops/archive, with
 lineage. One pass is one ``run_job`` call on a fresh config.
+
+A sink's latency in a pass runs from the ``run_job`` call to the last file
+landing under that sink's path: how soon the sink's output is visible.
+With one write per sink the sinks land one after another. Each sink's
+latency is its median over the passes; latency_p50_s and latency_p90_s
+are percentiles across the sinks.
 """
 
 from __future__ import annotations
 
 import shutil
+import time
 
 import numpy as np
 
 from common import WORK, Stopwatch, median, percentile
-from inputs import WARMUP_SEED, PagesInput
+from inputs import WARMUP_SEED, PagesInput, Pool
 
-N_DOCS = 1000          # 20 000 pages per pass
-N_DOCS_WARMUP = 50     # 1 000 pages, same shape
+N_PAGES = 100_000
+N_PAGES_WARMUP = 1_000
 SINKS = ("errors", "ops", "archive")
 # The timed region is a fixed number of passes, --seconds / PASS_S, so both
-# commits of a comparison do the same work; PASS_S is about one pass on a
-# 4-core host. A time-bounded loop would fit 2 to 4 passes, and since the
-# first passes after warm-up are still slower (JIT), the median would move
-# with the count.
-PASS_S = 2.5
+# commits of a comparison do the same work; three at --seconds 20 (a pass
+# takes 3.5-5 s on a 4-core host). A time-bounded loop would fit a varying
+# number of passes.
+PASS_S = 6.0
+# Passes run before the timed ones, checked but not timed. On the 4-core
+# host the first full-size pass in a JVM took 2-5 s longer than the later
+# ones (twice their CPU time: the JIT compiles the hot paths), whatever the
+# warm-up's size up to 40 000 pages, and whichever input it read; the
+# second was still 0.5-1 s slower, which the median of the timed passes
+# absorbs.
+SETTLE_PASSES = 1
 
 
 def config(pages: str, out: str) -> dict:
@@ -66,6 +79,12 @@ def oracle_counts(inp: PagesInput) -> dict[str, int]:
     }
 
 
+def last_landed(path) -> float:
+    """mtime of the newest file under path (0 if there is none)."""
+    return max((f.stat().st_mtime for f in path.rglob("*") if f.is_file()),
+               default=0.0)
+
+
 def disk_rows(path) -> tuple[int, int, int]:
     """(rows, files, bytes) of the parquet files under path."""
     import pyarrow.parquet as pq
@@ -82,21 +101,24 @@ class RoutedJob:
     name = "routed_job"
 
     def __init__(self, seed: int) -> None:
-        self.inp = PagesInput(seed, N_DOCS)
-        self.warm = PagesInput(WARMUP_SEED, N_DOCS_WARMUP)
+        self.inp = PagesInput(seed, N_PAGES)
+        self.warm = PagesInput(WARMUP_SEED, N_PAGES_WARMUP)
         self.out = WORK / "out" / self.name
         self.oracle: dict[str, int] = {}
+        self.settled = False
 
     # -- set-up ------------------------------------------------------------
-    def prepare(self, spark, inp: PagesInput) -> bool:
-        """Check inp's cache entry, building it and its oracle if missing;
-        True if anything was built."""
-        built = inp.ensure(spark)
-        if "oracle" not in inp.extra:
-            inp.extra["oracle"] = oracle_counts(inp)
-            inp.save()
-            built = True
-        return built
+    def prepare(self, pool: Pool) -> None:
+        """Build the warm-up and run inputs and their oracles if missing."""
+        for inp in (self.warm, self.inp):
+            inp.ensure(pool)
+            if "oracle" not in inp.extra:
+                inp.extra["oracle"] = oracle_counts(inp)
+                inp.save()
+
+    def ready(self) -> bool:
+        """Both inputs and their oracles check out (nothing is built)."""
+        return all(i.valid() and "oracle" in i.extra for i in (self.warm, self.inp))
 
     def warmup(self, spark) -> None:
         from rotel_spark.plans.pipeline import run_job
@@ -111,15 +133,18 @@ class RoutedJob:
     def _clean(self) -> None:
         shutil.rmtree(self.out, ignore_errors=True)
 
-    def run_pass(self, spark, i: int) -> tuple[Stopwatch, list[str]]:
-        """One timed run_job call, then its untimed output checks."""
+    def run_pass(self, spark, i: int) -> tuple[Stopwatch, list[float], list[str]]:
+        """One timed run_job call, then (untimed) each sink's latency and
+        the output checks."""
         from rotel_spark.plans.pipeline import run_job
 
         self._clean()
         cfg = config(str(self.inp.pages), str(self.out))
+        t0 = time.time()
         with Stopwatch() as sw:
             got = run_job(spark, cfg, run_id=f"pass{i}")
-        return sw, self.check(got)
+        lat = [last_landed(self.out / s) - t0 for s in SINKS]
+        return sw, lat, self.check(got)
 
     def check(self, got: dict[str, int]) -> list[str]:
         import pyarrow.parquet as pq
@@ -138,36 +163,47 @@ class RoutedJob:
 
     # -- timed region --------------------------------------------------------
     def measure(self, spark, seconds: float, keep_output: bool = False) -> dict:
+        """SETTLE_PASSES untimed passes on the first call in a process, then
+        the timed ones; every pass's output is checked."""
         self.oracle = self.inp.extra["oracle"]
+        settle = 0 if self.settled else SETTLE_PASSES
+        self.settled = True
         walls, cpus, errors, failed = [], [], [], 0
-        passes = max(2, round(seconds / PASS_S))
-        for i in range(passes):
-            sw, errs = self.run_pass(spark, i)
+        lats: list[list[float]] = []
+        passes = max(3, round(seconds / PASS_S))
+        for i in range(settle + passes):
+            sw, lat, errs = self.run_pass(spark, i)
             walls.append(sw.wall)
             cpus.append(sw.cpu)
+            lats.append(lat)
             errors += [f"pass {i}: {e}" for e in errs]
             failed += bool(errs)
         if not keep_output:
             self._clean()
-        wall = median(walls)
+        timed = slice(settle, None)
+        wall = median(walls[timed])
+        sink_lat = [median(per_sink) for per_sink in zip(*lats[timed])]
         return {
-            "attempted": passes,
+            "attempted": settle + passes,
             "failed": failed,
             "errors": errors,
             "metrics": {
                 "wall_s": wall,
                 "records_per_s": self.inp.n_pages / wall,
-                "cpu_s": median(cpus),
-                "latency_p50_s": wall,
-                "latency_p90_s": percentile(walls, 90),
+                "cpu_s": median(cpus[timed]),
+                "latency_p50_s": median(sink_lat),
+                "latency_p90_s": percentile(sink_lat, 90),
             },
-            "info": {"passes": passes, "walls": walls, "pages": self.inp.n_pages},
+            "info": {"settle_passes": settle, "timed_passes": passes,
+                     "walls": walls, "sink_latencies": lats,
+                     "pages": self.inp.n_pages},
         }
 
     # -- traced run ----------------------------------------------------------
     def traced(self, spark, seconds: float, tracer) -> dict:
-        """Timed passes with spans around run_job and the eager calls it
-        makes, then the prefix cascade (see tracing.py)."""
+        """Timed passes (after an untraced measure, so no settling pass)
+        with spans around run_job and the eager calls it makes, then the
+        prefix cascade (see tracing.py)."""
         import rotel_spark.lineage as lineage
         import rotel_spark.plans.pipeline as pipeline
         import rotel_spark.sinks.writer as writer
@@ -176,8 +212,7 @@ class RoutedJob:
 
         tracer.wrap(pipeline, "run_job", "plans.run_job")
         tracer.wrap(pipeline.Pipeline, "run", "plans.plan")
-        tracer.wrap(writer, "fan_out", "sinks.fan_out",
-                    attrs=lambda df, sinks, *a, **k: {"writes": len(sinks)})
+        tracer.wrap(writer, "fan_out", "sinks.fan_out")
         tracer.wrap(lineage, "write_lineage", "lineage.write_lineage")
         tracer.wrap(lineage, "committed_ranges", "lineage.committed_ranges")
         res = self.measure(spark, seconds, keep_output=True)
@@ -209,7 +244,6 @@ class RoutedJob:
             "parsers.ok_ratio": sum(self.oracle.values()) / self.inp.n_pages,
             "plans.plan_s": per_root("plans.plan"),
             "sinks.fan_out_s": per_root("sinks.fan_out"),
-            "sinks.writes": per_root("sinks.fan_out", lambda s: s["writes"]),
             "sinks.files": files,
             "sinks.bytes": size,
             "lineage.resume_check_s": median([resume_check(r) for r in roots]),

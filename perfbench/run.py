@@ -1,6 +1,6 @@
 """Benchmark entry point.
 
-    python3 perfbench/run.py --workload routed_job --seed 1 --seconds 10 --trace 0
+    python3 perfbench/run.py --workload routed_job --seed 1 --seconds 20 --trace 0
 
 Runs one workload in this fresh process at local[nproc] with a pinned
 heap, checks its outputs, and prints one JSON line last: with --trace 0
@@ -9,9 +9,12 @@ separate traced run, never used for end-to-end numbers). Progress and
 details go to stderr. Exits 1 if any output check fails, 2 if the program
 under test cannot be imported.
 
-setup_s is the median of N_SETUPS set-ups, each in a fresh process: the
-first N_SETUPS - 1 in child processes started one after another, the last
-in this process, which then runs the timed region.
+Inputs missing from the cache are built first, untimed, in a child
+process (inputs.py), so no build shares a process with a set-up or the
+timed region. setup_s is then the median of N_SETUPS set-ups, each in a
+fresh process: the first N_SETUPS - 1 in child processes started one
+after another, the last in this process, which then runs the timed
+region.
 """
 
 from __future__ import annotations
@@ -60,28 +63,47 @@ def child(args: list[str], timeout: float) -> dict:
     return last_json(p.stdout)
 
 
+def build_inputs(wl) -> None:
+    """Build the pool (once per checkout; it needs a JVM) and the
+    workload's inputs if the cache lacks them."""
+    from inputs import Pool
+
+    pool = Pool()
+    if not pool.valid():
+        log("building the input pool")
+        spark = common.start_spark()
+        try:
+            pool.build(spark)
+        finally:
+            common.stop_spark(spark)
+        # pools of an older inputs.py or fixtures.py are never used again
+        for old in pool.dir.parent.glob("pool-*"):
+            if old != pool.dir:
+                shutil.rmtree(old, ignore_errors=True)
+    wl.prepare(pool)
+
+
 def set_up_here(wl, started: float, extra_conf=None):
-    """Start the JVM and session, check the warm-up input's cache entry
-    (building it if missing, untimed), run the warm-up pass. Returns
-    (spark, seconds to ready): the process age at `started` plus the time
-    since, minus any build."""
+    """Start the JVM and session, check the input cache, run the warm-up
+    pass. Returns (spark, seconds to ready): the process age at `started`
+    plus the time since."""
     t_start = time.perf_counter()
     spark = common.start_spark(extra_conf)
-    t0 = time.perf_counter()
-    built = wl.prepare(spark, wl.warm)
-    build = time.perf_counter() - t0 if built else 0.0
+    if not wl.ready():
+        raise RuntimeError("an input is missing from the cache or fails its check")
     wl.warmup(spark)
-    return spark, started + time.perf_counter() - t_start - build
+    return spark, started + time.perf_counter() - t_start
 
 
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--workload", required=True)
     ap.add_argument("--seed", type=int, default=1)
-    ap.add_argument("--seconds", type=float, default=10)
+    ap.add_argument("--seconds", type=float, default=20)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
-    ap.add_argument("--setups", type=int, default=N_SETUPS,
-                    help="set-up samples; 0 = set up, report it, and exit")
+    ap.add_argument("--role", choices=("run", "setup", "build"), default="run",
+                    help="setup: set up, report it and exit; build: build "
+                    "missing inputs and exit (both used by a run's children)")
     args = ap.parse_args(argv)
 
     age = common.process_age_s()
@@ -103,32 +125,34 @@ def main(argv: list[str] | None = None) -> int:
     noise = common.HostNoise()
     spark = None
     try:
-        if args.setups == 0:
-            spark, s = set_up_here(wl, age)
-            print(json.dumps({"setup_s": s}))
+        if args.role == "build":
+            build_inputs(wl)
+            print(json.dumps({"built": True}), flush=True)
             return 0
+        if args.role == "setup":
+            spark, s = set_up_here(wl, age)
+            print(json.dumps({"setup_s": s}), flush=True)
+            return 0
+        if not wl.ready():
+            child(base + ["--role", "build"], 170)
+            log("inputs built")
         if args.trace:
             from tracing import traced_run
 
-            untraced = child(
-                base + ["--seconds", str(args.seconds), "--setups", "1"], 170
-            )
             spark, res = traced_run(
-                wl, lambda w, conf: set_up_here(w, age, conf), args.seconds,
-                untraced["metrics"]["wall_s"]["value"], log,
+                wl, lambda w, conf: set_up_here(w, age, conf), args.seconds, log
             )
         else:
             setups = [
-                child(base + ["--setups", "0"], 150)["setup_s"]
-                for _ in range(args.setups - 1)
+                child(base + ["--role", "setup"], 150)["setup_s"]
+                for _ in range(N_SETUPS - 1)
             ]
             # this process's own sample: its age on entry (interpreter start
             # and imports) plus its own start, not the children's time
             spark, s = set_up_here(wl, age)
             setups.append(s)
             log("set-up samples " + " ".join(f"{x:.2f}" for x in setups))
-            wl.prepare(spark, wl.inp)
-            log("input ready; timed region starts")
+            log("timed region starts")
             res = wl.measure(spark, args.seconds)
             log("timed region and checks done")
             res["metrics"]["setup_s"] = common.median(setups)

@@ -4,7 +4,7 @@ draining a backlog.
 ``--seconds`` x FILES_PER_S log-line files are in the watched directory
 when the stream starts, and the stream reads them MAX_FILES_PER_TRIGGER at
 a time, so every run makes the same number of equal micro-batches, back to
-back. Four sinks: three severity bands on severity_number plus an
+back (five at 20 s). Four sinks: three severity bands on severity_number plus an
 overlapping ``all`` sink, so ``fan_out`` takes its persist-then-N-writes
 path. (The ``route`` processor needs ``domain``, which raw text lines
 lack.)
@@ -24,16 +24,16 @@ import time
 from collections import Counter
 
 from common import WORK, median, percentile, tree_cpu_s
-from inputs import WARMUP_SEED, PagesInput
+from inputs import WARMUP_SEED, PagesInput, Pool
 from routed_job import disk_rows
 
-N_DOCS = 750             # 15 000 log lines, reused cyclically if needed
-N_DOCS_WARMUP = 100
 LINES_PER_FILE = 150
-FILES_PER_S = 10         # of --seconds: 100 files, 100 latency samples
-MAX_FILES_PER_TRIGGER = 10
+FILES_PER_S = 5          # of --seconds: 100 files at 20 s, 100 latency samples
+N_PAGES = 15_000         # log lines for 100 files, reused cyclically if needed
+MAX_FILES_PER_TRIGGER = 20
 TRIGGER_MS = 200         # run_stream's default
 WARMUP_FILES = 6
+COLUMNS = ["page_id", "log_line"]
 DRAIN_TIMEOUT_S = 120
 BANDS = {
     "hi": "severity_number >= 17",
@@ -106,13 +106,18 @@ class StreamMicrobatch:
     name = "stream_microbatch"
 
     def __init__(self, seed: int) -> None:
-        self.inp = PagesInput(seed, N_DOCS)
-        self.warm = PagesInput(WARMUP_SEED, N_DOCS_WARMUP)
+        self.inp = PagesInput(seed, N_PAGES, COLUMNS)
+        self.warm = PagesInput(WARMUP_SEED, WARMUP_FILES * LINES_PER_FILE, COLUMNS)
         self.out = WORK / "out" / self.name
 
-    def prepare(self, spark, inp: PagesInput) -> bool:
-        """Check inp's cache entry, building it if missing; True if built."""
-        return inp.ensure(spark)
+    def prepare(self, pool: Pool) -> None:
+        """Build the warm-up and run inputs if missing."""
+        for inp in (self.warm, self.inp):
+            inp.ensure(pool)
+
+    def ready(self) -> bool:
+        """Both inputs check out (nothing is built)."""
+        return self.warm.valid() and self.inp.valid()
 
     def check(self, spark, watched) -> list[str]:
         """Rows per sink equal a batch parse_auto over the same files, and
@@ -181,6 +186,7 @@ class StreamMicrobatch:
         shutil.rmtree(self.out, ignore_errors=True)
 
     def measure(self, spark, seconds: float) -> dict:
+        """Drain --seconds x FILES_PER_S files, then check the sinks."""
         shutil.rmtree(self.out, ignore_errors=True)
         n_files = max(1, int(seconds * FILES_PER_S))
         files = render_files(self.inp, n_files, self.out / "in")
@@ -215,9 +221,9 @@ class StreamMicrobatch:
 
     # -- traced run ----------------------------------------------------------
     def traced(self, spark, seconds: float, tracer) -> dict:
-        """The timed stream with spans around fan_out and plan construction,
-        micro-batch spans from recentProgress, then the prefix cascade over
-        the same files."""
+        """The timed stream again (after an untraced one), with spans around
+        fan_out and plan construction, micro-batch spans from
+        recentProgress, then the prefix cascade over the same files."""
         from datetime import datetime
 
         import rotel_spark.plans.pipeline as pipeline
@@ -226,8 +232,7 @@ class StreamMicrobatch:
         from tracing import cascade
 
         tracer.wrap(pipeline.Pipeline, "run", "plans.plan")
-        tracer.wrap(writer, "fan_out", "sinks.fan_out",
-                    attrs=lambda df, sinks, *a, **k: {"writes": len(sinks)})
+        tracer.wrap(writer, "fan_out", "sinks.fan_out")
         res = self.measure(spark, seconds)
         tracer.unwrap_all()
 
@@ -273,7 +278,6 @@ class StreamMicrobatch:
             "plans.plan_s": median(
                 [s["end"] - s["start"] for s in tracer.named("plans.plan")]),
             "sinks.fan_out_s": median([s["end"] - s["start"] for s in fan]),
-            "sinks.writes": median([s["writes"] for s in fan]),
             "sinks.files": files,
             "sinks.bytes": size,
             "lineage.resume_check_s": 0.0,

@@ -10,7 +10,8 @@
   to .perfbench_work/traces/ at the end.
 - Spark's event log (turned on through ``build_spark(extra_conf=...)``)
   gives task metrics; each job's go to the innermost span open when the
-  job was submitted.
+  job was submitted. Its SQL executions give ``sinks.writes``: the write
+  commands Spark started inside each ``fan_out`` call.
 - Layers that Spark fuses lazily into one stage (scan, extract, parse,
   stages) are split by a prefix cascade, each prefix written to ``noop``.
 - Codec throughput is timed on one fixed payload encoded from the
@@ -20,6 +21,7 @@
 from __future__ import annotations
 
 import json
+import re
 import shutil
 import time
 import uuid
@@ -78,13 +80,13 @@ class Tracer:
                            "parent": parent, "run_id": self.run_id,
                            "id": len(self.spans), **attrs})
 
-    def wrap(self, owner, attr: str, name: str, attrs=None) -> None:
+    def wrap(self, owner, attr: str, name: str) -> None:
         """Replace owner.attr by a wrapper that records a span per call."""
         fn = getattr(owner, attr)
         tracer = self
 
         def traced(*a, **kw):
-            s = tracer.open(name, **(attrs(*a, **kw) if attrs else {}))
+            s = tracer.open(name)
             try:
                 return fn(*a, **kw)
             finally:
@@ -143,6 +145,11 @@ class Tracer:
 # ---------------------------------------------------------------------------
 
 EVENT_LOG = WORK / "eventlog"
+# root nodes of SQL executions that write a table or files (V1 and V2)
+WRITE_NODE = re.compile(
+    r"InsertInto|SaveIntoDataSource|AsSelect|AppendData|OverwriteByExpression"
+    r"|OverwritePartitionsDynamic"
+)
 
 
 def event_log_conf() -> dict[str, str]:
@@ -157,9 +164,11 @@ def event_log_conf() -> dict[str, str]:
     }
 
 
-def fold_event_log() -> list[dict]:
-    """One record per job: submission time and summed task metrics."""
+def fold_event_log() -> tuple[list[dict], list[float]]:
+    """One record per job (submission time and summed task metrics), and
+    the start times of the SQL executions that write."""
     jobs: dict[int, dict] = {}
+    writes: list[float] = []
     stage_job: dict[int, int] = {}
     blocks: set[str] = set()
     for f in EVENT_LOG.iterdir():
@@ -184,6 +193,9 @@ def fold_event_log() -> list[dict]:
                 j["input_bytes"] += m["Input Metrics"]["Bytes Read"]
                 j["shuffle_bytes"] += m["Shuffle Write Metrics"]["Shuffle Bytes Written"]
                 j["spill_bytes"] += m["Memory Bytes Spilled"] + m["Disk Bytes Spilled"]
+            elif ev.endswith("SQLExecutionStart"):
+                if WRITE_NODE.search(e["sparkPlanInfo"]["nodeName"]):
+                    writes.append(e["time"] / 1000)
             elif ev == "SparkListenerBlockUpdated":
                 info = e["Block Updated Info"]
                 bid = info["Block ID"]
@@ -193,7 +205,7 @@ def fold_event_log() -> list[dict]:
                     # attribute to the latest job submitted before it
                     if jobs:
                         jobs[max(jobs)]["persist_bytes"] += size
-    return list(jobs.values())
+    return list(jobs.values()), writes
 
 
 def spark_totals(roots: list[dict], jobs: list[dict]) -> list[dict]:
@@ -274,24 +286,40 @@ def codec_rates(sink_df) -> dict[str, float]:
 # the traced run
 # ---------------------------------------------------------------------------
 
-def traced_run(wl, set_up, seconds: float, untraced_wall: float, log):
-    """Set up with the event log on, run the workload's traced passes with
-    every wrapper in place, then the cascade and the codec timings. Stops
-    the session itself (the event log is complete only then) and returns
-    (None, result)."""
+def traced_run(wl, set_up, seconds: float, log):
+    """Set up with the event log on, run the workload's timed region
+    untraced, traced (every wrapper in place; then the cascade and the
+    codec timings), and untraced again. trace.overhead_ratio divides by the mean
+    of the two untraced walls, which brackets the traced one, so the JVM
+    settling further from region to region cancels out. Stops the session
+    itself (the event log is complete only then) and returns (None, result)."""
     spark, setup_s = set_up(wl, event_log_conf())
     log(f"traced set-up {setup_s:.2f}s")
-    wl.prepare(spark, wl.inp)
     tracer = Tracer()
     try:
+        before = wl.measure(spark, seconds)
         res = wl.traced(spark, seconds, tracer)
         layers = res.pop("layers")
+        # the codec payload is read from the traced region's output, which
+        # the next region overwrites
         layers.update(codec_rates(res.pop("codec_df")))
+        after = wl.measure(spark, seconds)
+        untraced_wall = (before["metrics"]["wall_s"] + after["metrics"]["wall_s"]) / 2
+        log(f"untraced wall_s {before['metrics']['wall_s']:.2f} "
+            f"{after['metrics']['wall_s']:.2f}")
+        for u in (before, after):
+            res["attempted"] += u["attempted"]
+            res["failed"] += u["failed"]
+            res["errors"] += [f"untraced: {e}" for e in u["errors"]]
     finally:
         tracer.unwrap_all()
         common.stop_spark(spark)
 
-    jobs = fold_event_log()
+    jobs, writes = fold_event_log()
+    layers["sinks.writes"] = median([
+        sum(s["start"] <= t <= s["end"] for t in writes)
+        for s in tracer.named("sinks.fan_out")
+    ])
     roots = res.pop("roots")
     totals = spark_totals(roots, jobs)
     walls = [r["end"] - r["start"] for r in roots]
