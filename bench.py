@@ -7,7 +7,7 @@ Prints ONE JSON line:
 
 The headline number is the E2E pipeline: synthesize pages (html binary
 included) → extract embedded log line → multi-format parse → route →
-fan-out to 3 routed sinks + 1 broadcast sink (parquet). records/sec is
+fan-out to 3 routed sinks (parquet, one write job). records/sec is
 parsed-and-routed records per wall-clock second; mb_per_sec counts the
 html bytes groked (BASELINE.json metric).
 """
@@ -31,6 +31,15 @@ CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 BENCH_REPS = int(os.environ.get("ROTEL_BENCH_REPS", "200"))
 
 
+def route_sinks(path: str, fmt: str = "parquet") -> list[dict]:
+    """The three routed sinks, one per route value, under path."""
+    return [
+        {"name": r, "predicate": f"route = '{r}'", "path": f"{path}/{r}",
+         "format": fmt}
+        for r in ("errors", "ops", "archive")
+    ]
+
+
 def run_pipeline_bench(
     spark,
     sf_dir: str,
@@ -39,7 +48,6 @@ def run_pipeline_bench(
     partitions: int = 256,
     mrpf: int = 65536,
     sink: str = "parquet",
-    salt: int | None = None,
     warmup_reps: int | None = None,
 ) -> dict:
     """Timed path: scan stored pages table → extract log line from html
@@ -112,37 +120,15 @@ def run_pipeline_bench(
             F.length("html").alias("html_bytes"),
         )
 
-    from rotel_spark.sinks.writer import write_routed
+    from rotel_spark.sinks.writer import fan_out
 
     # 64k records/file for the throughput measurement — the 8192 batch
     # semantic stays the pipeline default (count parity is on per-sink
     # totals, not batch shapes; SURVEY.md §2.4), but 8192 at 1M+ rows
     # means hundreds of files whose commit overhead dominates wall time
     def run_once(path: str, src=None) -> dict[str, int]:
-        if sink == "noop":
-            from pyspark.sql.observation import Observation
-
-            obs = Observation(f"noop:{path}")
-            routes = ["errors", "ops", "archive"]
-            df = pipeline(src).observe(
-                obs,
-                *[
-                    F.sum(
-                        F.when(F.col("route") == r, 1).otherwise(0)
-                    ).alias(r)
-                    for r in routes
-                ],
-            )
-            df.write.format("noop").mode("overwrite").save()
-            return {r: obs.get[r] or 0 for r in routes}
-        # salt=None by default: a salted repartition before the write
-        # bounds output file count but shuffles every (wide) row —
-        # measured 2× slower end-to-end than writing scan-aligned
-        # partitions with concurrent writers. Opt in for genuinely
-        # skewed routes.
-        return write_routed(
-            pipeline(src), path, max_records_per_file=mrpf,
-            salt_partitions=salt,
+        return fan_out(
+            pipeline(src), route_sinks(path, sink), max_records_per_file=mrpf
         )
 
     # warm-up (JIT/codegen/page-cache), discarded per BASELINE.md protocol
@@ -180,7 +166,9 @@ def run_pipeline_bench(
         total_bytes = 0
     else:
         total_bytes = (
-            spark.read.parquet(f"{out_dir}/routed")
+            spark.read.parquet(
+                *(s["path"] for s in route_sinks(f"{out_dir}/routed"))
+            )
             .agg(F.sum("html_bytes"))
             .collect()[0][0]
             or 0

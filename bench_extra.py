@@ -145,7 +145,9 @@ def cmd_pipeline() -> None:
     from rotel_spark.operators.filters import drop_unparsed
     from rotel_spark.parsers.auto import parse_auto
     from rotel_spark.plans.routing import with_route
-    from rotel_spark.sinks.writer import write_routed
+    from rotel_spark.sinks.writer import fan_out
+
+    from bench import route_sinks
 
     reps = int(os.environ.get("ROTEL_BENCH_REPS", "200"))
     spark = _spark()
@@ -194,7 +196,8 @@ def cmd_pipeline() -> None:
     try:
         for i in range(2):
             t0 = time.time()
-            write_routed(final, f"{out_dir}/routed", max_records_per_file=65536)
+            fan_out(final, route_sinks(f"{out_dir}/routed"),
+                    max_records_per_file=65536)
             print(f"5-full-write[{i}]: {time.time() - t0:.3f}", flush=True)
     finally:
         shutil.rmtree(out_dir, ignore_errors=True)

@@ -36,12 +36,6 @@ def routing_partition(attrs: Column, num_partitions: int) -> Column:
     return F.pmod(attrs_hash(attrs), F.lit(num_partitions)).cast("int")
 
 
-def salt_column(key: Column, n_salt: int) -> Column:
-    """Salt for hot-key mitigation before routing aggregates/writes
-    (north rule; SURVEY.md §4): pmod(xxhash64(key), n_salt)."""
-    return F.pmod(F.xxhash64(key), F.lit(n_salt)).cast("int")
-
-
 def md5_hash64(col: Column) -> Column:
     """Engine-portable 60-bit hash: first 15 hex chars of md5 as a
     BIGINT — bit-identical in DuckDB via

@@ -5,105 +5,96 @@ pending offset* per file/partition (/root/reference/src/receivers/
 file/offset_tracker.rs:50-63; kafka offset_tracker.rs:36-57), persisted
 as JSON state every 1 s (offset_committer.rs:27-44). Spark has no
 per-row ack channel, so lineage becomes data (SURVEY.md §1.4): after
-each successful sink commit we MERGE per-partition ranges + counters
-into a checkpoint table; resume anti-joins the source against
-committed ranges so only unprocessed ranges re-run.
+every sink of a run committed we append ONE range row — the min and
+max of the range key plus counters — to a checkpoint table; resume
+anti-joins the source against committed ranges so only unprocessed
+ranges re-run.
 
-Range key: page_id (monotone row id). A range is committed only after
-ALL sinks for the run committed — the same "ack fires when the last
-ref resolves" rule as payload.rs:426-439.
+Range key: page_id (monotone row id). The range and counters are
+``observe()``d on the frame handed to the sink writer, so they come
+from the same tasks that wrote the rows: no persist, no second pass.
+One range per run is sound because it is committed only after ALL
+sinks for the run committed — the same "ack fires when the last ref
+resolves" rule as payload.rs:426-439 — and the run processed every
+source row in it that an earlier commit had not already covered.
 
 Delivery semantics: sink rows are exactly-once (every committed row is
 inside a committed range by construction); DROPPED rows falling outside
-all committed ranges (e.g. a garbage line at a partition boundary) may
-be re-observed on resume — dead-letter/quarantine output is therefore
-at-least-once, matching the reference's at-least-once stance
+all committed ranges (a garbage line below the run's min or above its
+max) may be re-observed on resume — dead-letter/quarantine output is
+therefore at-least-once, matching the reference's at-least-once stance
 (offset_tracker.rs pending semantics).
 """
 
 from __future__ import annotations
 
 import json
-import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-CHECKPOINT_SCHEMA = (
-    "run_id string, stage string, partition_id int, src_min long, "
-    "src_max long, rows_in long, rows_parsed long, rows_dropped long, "
-    "sink_counts string, committed_at timestamp"
-)
+from pyspark.sql.observation import Observation
 
 
-def partition_ranges(df: DataFrame, key: str = "page_id") -> DataFrame:
-    """Per-input-partition (min,max,count) over the range key."""
-    return (
-        df.withColumn("_pid", F.spark_partition_id())
-        .groupBy("_pid")
-        .agg(
-            F.min(key).alias("src_min"),
-            F.max(key).alias("src_max"),
-            F.count(F.lit(1)).alias("rows_in"),
-        )
-        .withColumnRenamed("_pid", "partition_id")
+def observe_lineage(
+    df: DataFrame, key: str = "page_id", parsed_col: str | None = "parse_ok"
+) -> tuple[DataFrame, Observation]:
+    """Attach the run's range and counters to df; they are read from
+    the returned Observation once an action over df has run."""
+    obs = Observation()
+    parsed = (
+        F.sum(F.col(parsed_col).cast("long"))
+        if parsed_col and parsed_col in df.columns
+        else F.count(F.lit(1))
     )
-
-
-def write_lineage(
-    df: DataFrame,
-    path: str,
-    run_id: str,
-    stage: str = "export",
-    key: str = "page_id",
-    sink_counts: dict[str, int] | None = None,
-    parsed_col: str | None = "parse_ok",
-) -> None:
-    """Append committed ranges + counters for this run."""
-    agg = [
+    return df.observe(
+        obs,
         F.min(key).alias("src_min"),
         F.max(key).alias("src_max"),
         F.count(F.lit(1)).alias("rows_in"),
-    ]
-    if parsed_col and parsed_col in df.columns:
-        agg.append(
-            F.sum(F.col(parsed_col).cast("long")).alias("rows_parsed")
-        )
-    else:
-        agg.append(F.count(F.lit(1)).alias("rows_parsed"))
-    ranges = (
-        df.withColumn("_pid", F.spark_partition_id())
-        .groupBy("_pid")
-        .agg(*agg)
-        .withColumnRenamed("_pid", "partition_id")
-        .withColumn("run_id", F.lit(run_id))
-        .withColumn("stage", F.lit(stage))
-        .withColumn("rows_dropped", F.col("rows_in") - F.col("rows_parsed"))
-        .withColumn("sink_counts", F.lit(json.dumps(sink_counts or {})))
-        .withColumn(
-            "committed_at", F.timestamp_seconds(F.lit(int(time.time())))
-        )
-    )
-    ranges.select(
-        "run_id",
-        "stage",
-        "partition_id",
-        "src_min",
-        "src_max",
-        "rows_in",
-        "rows_parsed",
-        "rows_dropped",
-        "sink_counts",
-        "committed_at",
+        F.coalesce(parsed, F.lit(0)).alias("rows_parsed"),
+    ), obs
+
+
+def write_lineage(
+    observed: dict,
+    path: str,
+    run_id: str,
+    stage: str = "export",
+    sink_counts: dict[str, int] | None = None,
+) -> None:
+    """Append the committed range + counters observed for this run: one
+    row (run_id, stage, src_min, src_max, rows_in, rows_parsed,
+    rows_dropped, sink_counts, committed_at)."""
+    n_in, n_parsed = observed["rows_in"], observed["rows_parsed"]
+    SparkSession.active().range(1).select(
+        F.lit(run_id).alias("run_id"),
+        F.lit(stage).alias("stage"),
+        *[
+            F.lit(v).cast("long").alias(k)
+            for k, v in (
+                ("src_min", observed["src_min"]),
+                ("src_max", observed["src_max"]),
+                ("rows_in", n_in),
+                ("rows_parsed", n_parsed),
+                ("rows_dropped", n_in - n_parsed),
+            )
+        ],
+        F.lit(json.dumps(sink_counts or {})).alias("sink_counts"),
+        F.current_timestamp().alias("committed_at"),
     ).write.mode("append").parquet(path)
 
 
-def committed_ranges(spark: SparkSession, path: str, run_id: str) -> DataFrame:
-    try:
-        cp = spark.read.parquet(path)
-    except Exception:
-        return spark.createDataFrame([], CHECKPOINT_SCHEMA)
-    return cp.filter(F.col("run_id") == run_id)
+def committed_ranges(
+    spark: SparkSession, path: str, run_id: str
+) -> DataFrame | None:
+    """This run's committed ranges; None, without any Spark job, when
+    nothing was ever committed at path."""
+    from .sinks.writer import hadoop_path
+
+    fs, p = hadoop_path(spark, path)
+    if not fs.exists(p):
+        return None
+    return spark.read.parquet(path).filter(F.col("run_id") == run_id)
 
 
 def resume_filter(
@@ -114,7 +105,7 @@ def resume_filter(
     """Drop rows whose key falls inside any committed range.
 
     Range anti-join via broadcast (checkpoint is tiny: one row per
-    partition per run) — at 100 TB the source never shuffles for this.
+    run) — at 100 TB the source never shuffles for this.
     """
     ranges = F.broadcast(
         checkpoint.select("src_min", "src_max").distinct()

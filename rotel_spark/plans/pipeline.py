@@ -7,8 +7,9 @@ every stage is a pure ``DataFrame -> DataFrame`` function, applied in
 declared order (processor chaining semantics,
 src/topology/processors.rs:561-573 — ordered, each sees the previous
 output). Catalyst fuses the whole chain into one physical plan; there
-is no per-stage materialization unless a stage opts into persist (the
-fan-out boundary does — fanout.rs clone-per-consumer ≈ persist).
+is no per-stage materialization: the fan-out to every sink is one
+partitioned write over that plan (sinks/writer.py), and the lineage
+counters ride the same job through ``observe()``.
 
 Example config::
 
@@ -36,7 +37,6 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 Stage = Callable[[DataFrame], DataFrame]
 
@@ -154,15 +154,15 @@ def run_job(
     per-sink row counts.
 
     transactional_batch: enables crash-safe batch commit for file
-    sinks (requires lineage_path). Each invocation writes its sink
-    output into an invisible staging dir (`_staging_<batch>` — the
-    leading underscore hides it from Spark readers), then atomically
-    renames it to `batch=<batch>` (visible; partition-discovery
-    compatible), then commits the lineage ranges. Crash windows:
-      * during the write — only invisible staging dirs exist; the
-        v2-committer task files that survived the crash are cleaned
-        on the next attempt;
-      * after rename, before lineage commit — the next attempt
+    sinks (requires lineage_path). Each invocation's single write lands
+    in an invisible staging dir (``_staging_<batch>-*`` — the leading
+    underscore hides it from Spark readers), from which each sink's
+    rows are renamed to `<sink>/batch=<batch>` (visible; partition-
+    discovery compatible), then the lineage range is committed. Crash
+    windows:
+      * during the write — only the invisible staging dir exists; the
+        next attempt of the batch overwrites it and removes it;
+      * after the renames, before lineage commit — the next attempt
         detects visible batch dirs with no matching lineage stage and
         rolls them back before re-processing.
     Either way a re-driven batch produces exactly-once sink rows.
@@ -170,47 +170,20 @@ def run_job(
     on an object store the rename step is replaced by a table-format
     commit, same two-phase structure (north rule: resumable
     mid-pipeline after executor loss)."""
-    import os
-    import shutil
+    import json
 
     from ..fixtures import extract_log_line, load_pages_full
-    from ..lineage import committed_ranges, resume_filter, write_lineage
-    from ..sinks.writer import fan_out
+    from ..lineage import (
+        committed_ranges,
+        observe_lineage,
+        resume_filter,
+        write_lineage,
+    )
+    from ..sinks.writer import fan_out, hadoop_path
 
-    batch_stage = None
-    if transactional_batch is not None:
-        if not config.get("lineage_path"):
-            raise ValueError("transactional_batch requires lineage_path")
-        batch_stage = f"export:{transactional_batch}"
-        cp_all = committed_ranges(spark, config["lineage_path"], run_id)
-        committed_stages = {
-            r["stage"]
-            for r in cp_all.select("stage").distinct().collect()
-        }
-        if batch_stage in committed_stages:
-            # fully committed batch — idempotent re-drive is a no-op;
-            # return the recorded counts
-            import json as _json
-
-            row = (
-                cp_all.filter(F.col("stage") == batch_stage)
-                .select("sink_counts")
-                .first()
-            )
-            return _json.loads(row["sink_counts"]) if row else {}
-        for s in config["sinks"]:
-            if not s.get("path"):
-                continue
-            visible = os.path.join(
-                s["path"], f"batch={transactional_batch}"
-            )
-            staging = os.path.join(
-                s["path"], f"_staging_{transactional_batch}"
-            )
-            # roll back orphans from a crashed prior attempt
-            for orphan in (visible, staging):
-                if os.path.exists(orphan):
-                    shutil.rmtree(orphan)
+    lineage_path = config.get("lineage_path")
+    if transactional_batch is not None and not lineage_path:
+        raise ValueError("transactional_batch requires lineage_path")
 
     src = config["source"]
     if src["kind"] == "pages_synthetic":
@@ -221,12 +194,30 @@ def run_job(
     else:
         raise ValueError(f"unknown source kind: {src['kind']}")
 
-    # resume: skip ranges already committed for this run_id
-    # (min-pending-offset semantics, offset_tracker.rs:50-63)
-    if config.get("lineage_path"):
-        cp = committed_ranges(spark, config["lineage_path"], run_id)
-        if cp.limit(1).count() > 0:
-            df = resume_filter(df, cp, key=config.get("lineage_key", "page_id"))
+    key = config.get("lineage_key", "page_id")
+    batch_stage = None
+    if lineage_path:
+        # resume: skip ranges already committed for this run_id
+        # (min-pending-offset semantics, offset_tracker.rs:50-63); the
+        # checkpoint is read once, and not at all when none exists
+        cp = committed_ranges(spark, lineage_path, run_id)
+        committed = cp.collect() if cp is not None else []
+        if transactional_batch is not None:
+            batch_stage = f"export:{transactional_batch}"
+            done = [r for r in committed if r["stage"] == batch_stage]
+            if done:
+                # fully committed batch — idempotent re-drive is a
+                # no-op; return the recorded counts
+                return json.loads(done[0]["sink_counts"])
+            # roll back orphans from a crashed prior attempt
+            for s in config["sinks"]:
+                if s.get("path"):
+                    fs, p = hadoop_path(
+                        spark, f"{s['path']}/batch={transactional_batch}"
+                    )
+                    fs.delete(p, True)
+        if committed:
+            df = resume_filter(df, cp, key=key)
 
     out = build_pipeline(config).run(df)
 
@@ -259,59 +250,38 @@ def run_job(
             }
         )
 
-    # persist through BOTH fan-out and lineage: the committed ranges
-    # must come from the same materialized partitions that fed the sink
-    # writes (a re-execution could lay out spark_partition_id
-    # differently and commit ranges for rows never written — breaking
-    # the exactly-once resume contract), and lineage must not re-run
-    # the parse DAG
     if batch_stage is not None:
-        # two-phase commit: write into invisible staging dirs
-        staged_pairs = []
-        staged_sinks = []
-        for s in sinks:
-            if s.get("path") and s.get("format", "parquet") != "noop":
-                staging = os.path.join(
-                    s["path"], f"_staging_{transactional_batch}"
-                )
-                visible = os.path.join(
-                    s["path"], f"batch={transactional_batch}"
-                )
-                staged_pairs.append((staging, visible))
-                staged_sinks.append({**s, "path": staging})
-            else:
-                staged_sinks.append(s)
-        sinks = staged_sinks
+        # two-phase commit: fan_out stages its write in a hidden
+        # _staging_<batch>-* dir and renames each sink's rows into the
+        # visible batch dir; the lineage commit below is phase 2
+        sinks = [
+            {**s, "path": f"{s['path']}/batch={transactional_batch}",
+             "mode": "overwrite"}
+            if s.get("path") and s.get("format", "parquet") != "noop"
+            else s
+            for s in sinks
+        ]
 
-    need_lineage = bool(config.get("lineage_path"))
-    if need_lineage:
-        out = out.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        counts = fan_out(
-            out,
-            sinks,
-            max_records_per_file=config.get("batch", {}).get(
-                "max_records_per_file", 8192
-            ),
-            persist=not need_lineage,
+    # the lineage range and counters ride the sink write itself: no
+    # persist, and they come from the very tasks that wrote the rows
+    if lineage_path:
+        out, observed = observe_lineage(out, key)
+    counts = fan_out(
+        out,
+        sinks,
+        max_records_per_file=config.get("batch", {}).get(
+            "max_records_per_file", 8192
+        ),
+        batch=transactional_batch,
+    )
+    if lineage_path:
+        # commit marks the run processed; a crash before here is healed
+        # by the next attempt's orphan rollback
+        write_lineage(
+            observed.get,
+            lineage_path,
+            run_id=run_id,
+            stage=batch_stage or "export",
+            sink_counts=counts,
         )
-        if batch_stage is not None:
-            # phase 2a: atomic renames make every sink's batch visible
-            for staging, visible in staged_pairs:
-                if os.path.exists(staging):
-                    os.rename(staging, visible)
-        if need_lineage:
-            # phase 2b: lineage commit marks the batch processed; a
-            # crash between 2a and here is healed by the next
-            # attempt's orphan rollback
-            write_lineage(
-                out,
-                config["lineage_path"],
-                run_id=run_id,
-                stage=batch_stage or "export",
-                sink_counts=counts,
-            )
-    finally:
-        if need_lineage:
-            out.unpersist()
     return counts

@@ -1,4 +1,4 @@
-"""Routing — the fan-out key expression and skew-aware repartitioning.
+"""Routing — the fan-out key expression.
 
 The reference fans every batch out to ALL exporters of its telemetry
 type (/root/reference/src/topology/fanout.rs:17-20,92-95); named sinks
@@ -6,17 +6,16 @@ come from ``--exporters name:type,...`` (src/init/config.rs:55-98).
 The north rule adds routing *by expression* (severity × domain) — our
 engine supports both modes (route-filtered and broadcast-to-all).
 
-Skew: hot domains (fixtures put ~39% of rows on one host) are salted
-before routed writes/aggregates — ``repartition(route, salt)`` — so no
-single task owns a hot route (SURVEY.md §4, north rule).
+Skew: hot domains (fixtures put ~39% of rows on one host) are not
+repartitioned before the routed write — the write is narrow, each task
+writes the rows it holds for every route, so no single task owns a hot
+route (sinks/writer.py).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-from ..functions.hashing import salt_column
 
 # default sink names by severity band
 ROUTE_SQL = (
@@ -55,20 +54,3 @@ def with_route(df: DataFrame, buckets: int = 8) -> DataFrame:
     return df.withColumn(
         "route", route_expr(F.col("severity_number"))
     ).withColumn("domain_partition", domain_partition(F.col("domain"), buckets))
-
-
-def salted_repartition(
-    df: DataFrame, key: str, n_salt: int = 16, num_partitions: int | None = None
-) -> DataFrame:
-    """Repartition by (key, salt) so a hot key spreads over n_salt tasks.
-
-    Use before routed writes; for aggregates Catalyst's partial/final
-    hash-agg already two-phases, so explicit salting there is only
-    needed when a final-stage group is still too hot (SURVEY.md §2.7).
-    """
-    salted = df.withColumn("_salt", salt_column(F.col(key), n_salt))
-    if num_partitions:
-        out = salted.repartition(num_partitions, F.col(key), F.col("_salt"))
-    else:
-        out = salted.repartition(F.col(key), F.col("_salt"))
-    return out.drop("_salt")

@@ -1,10 +1,15 @@
-"""Fan-out sink writer — persist once, write per sink.
+"""Fan-out sink writer — one write job for every sink.
 
 Reference semantics (/root/reference/src/topology/fanout.rs:17-20,
 144-153): every batch goes to all configured exporters of its type,
-cloned for all-but-the-last consumer. Spark mapping: persist the parsed
-DataFrame once, then run one write action per sink — parse cost is paid
-once, not once per sink (SURVEY.md §4 custom work #3).
+and the source is acked once, after the last exporter confirms
+(payload.rs:426-439). Spark mapping (SURVEY.md §2.5 option (b)): tag
+each row with the indices of the sinks whose predicate it matches,
+explode the tags, and run ONE write partitioned by the tag into a
+hidden ``_staging_*`` directory. Each ``_sink=<i>`` directory (or, for
+an ``append`` sink, its files) is then moved into the sink's own path.
+Parse, stages and routing run once, with no cached copy, however many
+sinks overlap.
 
 Batch sizing: the reference flushes at max_size=8192 records
 (src/topology/batch.rs:15-23); batch boundaries in Spark are output
@@ -18,132 +23,155 @@ itself instead of a second pass over the data.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import uuid
+
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.observation import Observation
 from pyspark.storagelevel import StorageLevel
 
+SINK_COL = "_sink"
 
-def write_routed(
-    df: DataFrame,
-    path: str,
-    route_col: str = "route",
-    routes: list[str] | None = None,
-    max_records_per_file: int = 8192,
-    salt_partitions: int | None = None,
-) -> dict[str, int]:
-    """Single-pass routed fan-out: ONE write partitioned by route,
-    per-sink dirs = partition subdirectories, per-sink counts ride the
-    same job via observe. vs fan_out(): no persist, no N passes — at
-    100 TB this is the difference between scanning the parse output
-    once and N+1 times. (SURVEY.md §2.5 option (b).)
 
-    salt_partitions: repartition on (route, salt) first so a hot route
-    spreads across tasks instead of serializing into one writer
-    (north-rule skew handling).
+def hadoop_path(spark: SparkSession, path: str):
+    """(FileSystem, qualified Path) of path, for any scheme Hadoop knows."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
+    return fs, fs.makeQualified(p)
 
-    File sizing (guide §6): each input task writes one file per route
-    it sees, so task count × routes = file count. The bench scan
-    arrives in ~8 waves of tasks (8×cores), which is right for compute
-    tail-amortization but produces cores×8×routes tiny files — file
-    open/commit overhead dominated the measured write (3.5 s for 768
-    ~60 KB files vs 1.4 s for 192 files at 1M rows). Coalesce the
-    write to ROTEL_WRITE_TASKS (default defaultParallelism: one wave
-    of writers, 8× fewer files than the scan; interleaved A/B at BOTH
-    1M and 10M rows put 1× ahead of 2× — 1.14 s vs 1.68 s and 5.82 s
-    vs 6.14 s — commit/open overhead shrinks faster than the lost
-    second wave costs). coalesce() only ever REDUCES partition count,
-    so small inputs are untouched; at cluster scale total-cores write
-    tasks is the same sizing rule (files ≈ bytes/(cores·routes),
-    further split by maxRecordsPerFile), not a local[32] constant.
-    """
-    import os
 
-    from ..plans.routing import salted_repartition
-
-    if salt_partitions:
-        df = salted_repartition(df, route_col, n_salt=salt_partitions)
+def _save(df, fmt, partition_by, mode, path, max_records_per_file) -> None:
+    w = df.write.mode(mode).option("maxRecordsPerFile", max_records_per_file)
+    if partition_by:
+        w = w.partitionBy(*partition_by)
+    if fmt == "noop":
+        w.format("noop").save()
     else:
-        spark = df.sparkSession
-        target = int(
-            os.environ.get(
-                "ROTEL_WRITE_TASKS",
-                spark.sparkContext.defaultParallelism,
-            )
-        )
-        if target > 0:
-            df = df.coalesce(target)
-    routes = routes or ["errors", "ops", "archive"]
-    obs = Observation("routed_write")
-    metrics = [
-        F.sum(F.when(F.col(route_col) == r, 1).otherwise(0)).alias(r)
-        for r in routes
-    ] + [
-        # rows outside the declared routes still land in their own
-        # partition dir; count them so Σcounts == rows written (no
-        # silent leakage in the parity check)
-        F.sum(
-            F.when(~F.col(route_col).isin(routes), 1).otherwise(0)
-        ).alias("_other")
-    ]
-    out = df.observe(obs, *metrics)
-    (
-        out.write.mode("overwrite")
-        .option("maxRecordsPerFile", max_records_per_file)
-        # log-record rows are dominated by ~unique strings (body, url):
-        # the parquet dictionary build is pure CPU that almost always
-        # falls back for them, and zstd already captures what little
-        # repetition the narrow columns carry. Measured on the 9.5M-row
-        # routed write: ~15.6s -> ~13.9s for +8% bytes (395 -> 426 MB).
-        .option("parquet.enable.dictionary", "false")
-        .partitionBy(route_col)
-        .parquet(path)
-    )
-    got = obs.get
-    counts = {r: got[r] or 0 for r in routes}
-    if got["_other"]:
-        counts["_other"] = got["_other"]
-    return counts
+        w.format(fmt).save(path)
 
 
 def fan_out(
     df: DataFrame,
     sinks: list[dict],
     max_records_per_file: int = 8192,
-    persist: bool = True,
+    batch: str | None = None,
 ) -> dict[str, int]:
     """Write df to every sink; returns {sink_name: rows_written}.
 
     sink spec: {"name": str, "path": str, "predicate": str | None,
                 "format": "parquet" | "json" | "noop",
-                "partition_by": [col, ...] | None}
+                "partition_by": [col, ...] | None,
+                "mode": "overwrite" | "append"}
     predicate=None → broadcast-to-all (rotel fanout); a predicate makes
-    it a routed sink (north rule).
+    it a routed sink (north rule). A row whose predicate is NULL is not
+    written, as with ``filter``.
+
+    Sinks that differ in format or partition_by, or live on another
+    filesystem, cannot share a write: each such group gets its own, and
+    df is persisted only when there is more than one group.
+
+    batch: names the staging directory, and the files moved into
+    ``append`` sinks, after it; a retried batch first removes the files
+    an earlier attempt of it left. Without it every call is new.
     """
-    if persist and len(sinks) > 1:
+    spark = df.sparkSession
+    groups: dict[tuple, list] = {}
+    for spec in sinks:
+        if spec.get("mode", "overwrite") not in ("overwrite", "append"):
+            raise ValueError(f"sink {spec['name']}: unsupported mode")
+        fmt = spec.get("format", "parquet")
+        fs = dst = None
+        if fmt != "noop":
+            fs, dst = hadoop_path(spark, spec["path"])
+        key = (fmt, tuple(spec.get("partition_by") or ()),
+               fs and fs.getUri().toString())
+        groups.setdefault(key, []).append((spec, fs, dst))
+    tag = batch if batch is not None else uuid.uuid4().hex
+    multi = len(groups) > 1
+    if multi:
         df = df.persist(StorageLevel.MEMORY_AND_DISK)
     counts: dict[str, int] = {}
     try:
-        for spec in sinks:
-            sink_df = df
-            if spec.get("predicate"):
-                sink_df = sink_df.filter(spec["predicate"])
-            obs = Observation(f"sink:{spec['name']}")
-            sink_df = sink_df.observe(obs, F.count(F.lit(1)).alias("rows"))
-            fmt = spec.get("format", "parquet")
-            w = sink_df.write.mode(spec.get("mode", "overwrite")).option(
-                "maxRecordsPerFile", max_records_per_file
-            )
-            if spec.get("partition_by"):
-                w = w.partitionBy(*spec["partition_by"])
-            if fmt == "noop":
-                w.format("noop").save()
-            elif fmt == "json":
-                w.json(spec["path"])
-            else:
-                w.parquet(spec["path"])
-            counts[spec["name"]] = obs.get["rows"]
+        for g, ((fmt, partition_by, _), targets) in enumerate(groups.items()):
+            counts.update(_write_group(
+                df, targets, fmt, list(partition_by), max_records_per_file,
+                f"_staging_{tag}-{g}", batch,
+            ))
     finally:
-        if persist and len(sinks) > 1:
+        if multi:
             df.unpersist()
+    return {s["name"]: counts[s["name"]] for s in sinks}
+
+
+def _write_group(df, targets, fmt, partition_by, max_records_per_file,
+                 staging_name, batch) -> dict[str, int]:
+    """One partitioned write of the rows of every (spec, fs, path) in
+    targets, then the moves into the sinks' paths."""
+    tags = F.array_compact(F.array(*[
+        F.when(F.expr(s["predicate"]), F.lit(i)) if s.get("predicate")
+        else F.lit(i)
+        for i, (s, _, _) in enumerate(targets)
+    ]))
+    obs = Observation()
+    tagged = df.withColumn(SINK_COL, F.explode(tags)).observe(obs, *[
+        F.expr(f"count_if({SINK_COL} = {i})").alias(str(i))
+        for i in range(len(targets))
+    ])
+    Path = df.sparkSession._jvm.org.apache.hadoop.fs.Path
+    fs = targets[0][1]
+    if fmt == "noop":
+        _save(tagged, fmt, None, "overwrite", None, max_records_per_file)
+    else:
+        staging = Path(targets[0][2].getParent(), staging_name)
+        _save(tagged, fmt, [SINK_COL, *partition_by], "overwrite",
+              staging.toString(), max_records_per_file)
+    got = obs.get
+    counts = {s["name"]: got[str(i)] for i, (s, _, _) in enumerate(targets)}
+    if fmt == "noop":
+        return counts
+    for i, (spec, _, dst) in enumerate(targets):
+        mode = spec.get("mode", "overwrite")
+        if not counts[spec["name"]]:
+            # a partitioned write makes no directory for an empty sink:
+            # write its schema-only output as a write of its own would,
+            # but leave an existing append sink as it is
+            if mode == "overwrite" or not fs.exists(dst):
+                _save(df.limit(0), fmt, partition_by, mode, spec["path"],
+                      max_records_per_file)
+            continue
+        src = Path(staging, f"{SINK_COL}={i}")
+        if mode == "overwrite":
+            fs.delete(dst, True)
+            fs.mkdirs(dst.getParent())
+            _rename(fs, src, dst)
+        else:
+            _move_files(Path, fs, src, dst, len(partition_by), batch)
+        fs.create(Path(dst, "_SUCCESS"), True).close()
+    fs.delete(staging, True)
     return counts
+
+
+def _move_files(Path, fs, src, dst, depth: int, batch: str | None) -> None:
+    """Move the data files under src into dst, keeping their partition
+    subdirectories; with a batch, first delete that batch's files."""
+    prefix = f"{batch}-" if batch is not None else ""
+    levels = "*/" * depth
+    if batch is not None:
+        for old in fs.globStatus(Path(dst, f"{levels}{prefix}*")) or []:
+            fs.delete(old.getPath(), False)
+    fs.mkdirs(dst)
+    for f in fs.globStatus(Path(src, f"{levels}part-*")):
+        p = f.getPath()
+        sub, parent = [prefix + p.getName()], p.getParent()
+        for _ in range(depth):
+            sub.insert(0, parent.getName())
+            parent = parent.getParent()
+        target = Path(dst, "/".join(sub))
+        if depth:
+            fs.mkdirs(target.getParent())
+        _rename(fs, p, target)
+
+
+def _rename(fs, src, dst) -> None:
+    if not fs.rename(src, dst):
+        raise OSError(f"could not move {src.toString()} to {dst.toString()}")

@@ -1,6 +1,6 @@
 """A/B the routed parquet write (guide §6): codec level, file count,
-dictionary. Measurement-only helper; the timed path is identical to
-bench.py's write_routed composition."""
+dictionary. Measurement-only helper: bench.py's pipeline, written with
+one write partitioned by route."""
 import os
 import shutil
 import sys

@@ -95,6 +95,7 @@ def test_crash_resume_exactly_once(spark, sources, tmp_path):
     # staging orphans exist (invisible to readers), nothing visible
     errors_dir = tmp / "errors"
     assert not (errors_dir / "batch=b1").exists()
+    assert list(tmp.rglob("_staging_*"))
 
     # simulate the rename-committed/lineage-missing window too: a
     # visible batch=b1 dir with real data but no lineage row
@@ -108,6 +109,9 @@ def test_crash_resume_exactly_once(spark, sources, tmp_path):
         spark, _cfg(tmp, sources["full"], poison=False),
         run_id="r", transactional_batch="b1",
     )
+
+    # the re-drive removed the crashed attempt's staging dir
+    assert not list(tmp.rglob("_staging_*"))
 
     # per-sink totals across batches == the clean single-shot run
     for name in ("errors", "ops", "archive"):

@@ -9,7 +9,12 @@ import pathlib
 from pyspark.sql import functions as F
 
 from rotel_spark.fixtures import extract_log_line, load_pages_full
-from rotel_spark.lineage import committed_ranges, resume_filter, write_lineage
+from rotel_spark.lineage import (
+    committed_ranges,
+    observe_lineage,
+    resume_filter,
+    write_lineage,
+)
 from rotel_spark.plans.pipeline import build_pipeline, run_job
 from rotel_spark.sinks.writer import fan_out
 
@@ -101,6 +106,13 @@ def test_routed_row_equality(spark, sf_unit, tmp_path):
         assert sink.count() == exp.count()
 
 
+def _observed(df):
+    """Lineage values observed on one pass over df."""
+    df, obs = observe_lineage(df)
+    df.write.format("noop").mode("overwrite").save()
+    return obs.get
+
+
 def test_lineage_written_and_resume_skips_committed(spark, sf_unit, tmp_path):
     """Checkpoint semantics (offset_tracker.rs:50-63): committed ranges
     are never re-processed on resume."""
@@ -108,7 +120,7 @@ def test_lineage_written_and_resume_skips_committed(spark, sf_unit, tmp_path):
     lineage = str(tmp_path / "_lineage")
 
     first = pages.filter(F.col("page_id") < 1000)
-    write_lineage(first, lineage, run_id="rX", sink_counts={"all": 0})
+    write_lineage(_observed(first), lineage, run_id="rX", sink_counts={"all": 0})
     cp = committed_ranges(spark, lineage, "rX")
     assert cp.count() > 0
     assert cp.agg(F.sum("rows_in")).collect()[0][0] == first.count()
@@ -118,7 +130,9 @@ def test_lineage_written_and_resume_skips_committed(spark, sf_unit, tmp_path):
     assert remaining.filter(F.col("page_id") < 1000).count() == 0
 
     # idempotent second leg: process remaining, commit, nothing left
-    write_lineage(remaining, lineage, run_id="rX", sink_counts={"all": 0})
+    write_lineage(
+        _observed(remaining), lineage, run_id="rX", sink_counts={"all": 0}
+    )
     cp2 = committed_ranges(spark, lineage, "rX")
     assert resume_filter(pages, cp2).count() == 0
 
@@ -170,3 +184,120 @@ def test_fanout_broadcast_to_all(spark, tmp_path):
     assert counts == {"a": 100, "b": 100}
     assert spark.read.parquet(str(tmp_path / "a")).count() == 100
     assert spark.read.parquet(str(tmp_path / "b")).count() == 100
+
+
+def _part_files(root: pathlib.Path) -> list[pathlib.Path]:
+    return [f for f in root.rglob("*part-*") if not f.name.endswith(".crc")]
+
+
+def test_run_job_writes_every_sink_in_one_job(spark, sf_unit, tmp_path):
+    """rotel sends each batch to every sink and acks once (payload.rs:
+    426-439): all four sinks, routed and broadcast, come from one write
+    job, so every part file carries that job's UUID."""
+    import re
+
+    cfg = _config(tmp_path, sf_unit)
+    run_job(spark, cfg, run_id="r1")
+    uuids = set()
+    for name in ("errors", "ops", "archive", "all"):
+        files = _part_files(tmp_path / name)
+        assert files, name
+        for f in files:
+            uuids.add(re.search(r"part-\d+-([0-9a-f-]{36})", f.name).group(1))
+    assert len(uuids) == 1, uuids
+    assert not list(tmp_path.glob("_staging_*"))
+
+
+def test_empty_sinks(spark, sf_unit, tmp_path):
+    """A sink that matches no rows reads back with the frame's schema and
+    0 rows; an append sink that matches no rows is left as it was."""
+    cfg = _config(tmp_path, sf_unit)
+    app = tmp_path / "none_append"
+    spark.range(3).write.parquet(str(app))
+    before = sorted(p.name for p in app.iterdir())
+    cfg["sinks"] += [
+        {"name": "none", "predicate": "route = 'nowhere'",
+         "path": str(tmp_path / "none")},
+        {"name": "none_append", "predicate": "route = 'nowhere'",
+         "path": str(app), "mode": "append"},
+    ]
+    counts = run_job(spark, cfg, run_id="r1")
+    assert counts["none"] == counts["none_append"] == 0
+    empty = spark.read.parquet(str(tmp_path / "none"))
+    assert empty.count() == 0
+    assert empty.schema == spark.read.parquet(str(tmp_path / "all")).schema
+    assert sorted(p.name for p in app.iterdir()) == before
+    assert spark.read.parquet(str(app)).count() == 3
+
+
+def test_null_predicate_excludes_row(spark, sf_unit, tmp_path):
+    """A predicate that evaluates to NULL drops the row, as filter does."""
+    cfg = _config(tmp_path, sf_unit)
+    cfg["sinks"].append(
+        {"name": "errors_or_null",
+         "predicate": "CASE WHEN route = 'errors' THEN true END",
+         "path": str(tmp_path / "errors_or_null")}
+    )
+    counts = run_job(spark, cfg, run_id="r1")
+    assert counts["errors_or_null"] == counts["errors"] > 0
+    got = spark.read.parquet(str(tmp_path / "errors_or_null"))
+    exp = spark.read.parquet(str(tmp_path / "errors"))
+    assert got.select("page_id").exceptAll(exp.select("page_id")).count() == 0
+    assert got.count() == exp.count()
+
+
+def test_resume_check_without_checkpoint_runs_no_job(
+    spark, sf_unit, tmp_path, monkeypatch
+):
+    """A fresh lineage path is detected through its filesystem: no Spark
+    job runs between the checkpoint read and the pipeline build."""
+    import rotel_spark.lineage as lineage
+    from rotel_spark.plans.pipeline import Pipeline
+
+    sc = spark.sparkContext
+    group = "resume-check-test"
+    seen: dict[str, list[int]] = {}
+    real_ranges, real_run = lineage.committed_ranges, Pipeline.run
+
+    def ranges(*a, **kw):
+        seen["ranges"] = list(sc.statusTracker().getJobIdsForGroup(group))
+        return real_ranges(*a, **kw)
+
+    def run(self, df):
+        seen.setdefault(
+            "plan", list(sc.statusTracker().getJobIdsForGroup(group))
+        )
+        return real_run(self, df)
+
+    monkeypatch.setattr(lineage, "committed_ranges", ranges)
+    monkeypatch.setattr(Pipeline, "run", run)
+    sc.setJobGroup(group, group)
+    try:
+        run_job(spark, _config(tmp_path, sf_unit), run_id="r1")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sorted(seen["ranges"]) == sorted(seen["plan"])
+
+
+def test_fanout_write_groups(spark, tmp_path):
+    """Sinks that cannot share a write (another format, another
+    partitioning, noop) each get their own; counts and outputs are as
+    for one write per sink."""
+    df = spark.range(100).withColumn("p", F.col("id") % 3)
+    counts = fan_out(
+        df,
+        [
+            {"name": "a", "predicate": "id < 50", "path": str(tmp_path / "a")},
+            {"name": "j", "predicate": "id >= 40", "format": "json",
+             "path": str(tmp_path / "j")},
+            {"name": "p", "partition_by": ["p"], "path": str(tmp_path / "p")},
+            {"name": "n", "predicate": "p = 0", "format": "noop"},
+        ],
+    )
+    assert counts == {"a": 50, "j": 60, "p": 100, "n": 34}
+    assert spark.read.parquet(str(tmp_path / "a")).count() == 50
+    assert spark.read.json(str(tmp_path / "j")).count() == 60
+    part = spark.read.parquet(str(tmp_path / "p"))
+    assert sorted(part.columns) == ["id", "p"]
+    assert part.filter("p = 2").count() == 33
+    assert not list(tmp_path.glob("_staging_*"))
