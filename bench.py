@@ -5,11 +5,12 @@ Prints ONE JSON line:
    "queries": {...per-query sec...}, "sf": ...,
    "records_per_sec": ..., "mb_per_sec": ...}
 
-The headline number is the E2E pipeline: synthesize pages (html binary
+The headline number is the E2E pipeline: ``plans.pipeline.run_job`` on
+``pipeline_config`` — scan the stored pages table (html binary
 included) → extract embedded log line → multi-format parse → route →
-fan-out to 3 routed sinks (parquet, one write job). records/sec is
-parsed-and-routed records per wall-clock second; mb_per_sec counts the
-html bytes groked (BASELINE.json metric).
+broadcast enrich → fan-out to 3 routed parquet sinks in one write job.
+records/sec is parsed-and-routed records per wall-clock second;
+mb_per_sec counts the html bytes groked (BASELINE.json metric).
 """
 
 from __future__ import annotations
@@ -20,9 +21,20 @@ import shutil
 import sys
 import tempfile
 import time
+from collections.abc import Callable
 
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from rotel_spark.fixtures import (
+    DEFAULT_REPS,
+    extract_log_line,
+    materialize_pages,
+    pages_cache_path,
+    tld_registry_sql,
+)
+from rotel_spark.functions.urls import tld_of
+from rotel_spark.plans.pipeline import run_job
 from rotel_spark.session import build_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -30,149 +42,120 @@ CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 # pages rows = documents rows × reps (sf0.1 → 5000 × 200 = 1M)
 BENCH_REPS = int(os.environ.get("ROTEL_BENCH_REPS", "200"))
 
+# Measurement integrity: shared hosts show bursty CPU steal, which has
+# inflated per-query numbers 6-9× against clean re-runs. Every timed
+# item is sampled until its TWO BEST samples agree within CERT_RATIO
+# (two independent observations of the same plan cost certify each
+# other), capped at MAX_ATTEMPTS. The recorded number is the best
+# (least-contaminated) sample; the recorded variance is best2/best1 —
+# above CERT_RATIO lands the item in unstable_queries.
+CERT_RATIO = 1.5
+MAX_ATTEMPTS = 7
 
-def route_sinks(path: str, fmt: str = "parquet") -> list[dict]:
+
+def best2_ratio(samples: list[float]) -> float:
+    b = sorted(samples)[:2]
+    return b[-1] / max(b[0], 1e-9)
+
+
+def certified_samples(sample: Callable[[], float]) -> list[float]:
+    """Two samples, then more until the best two certify each other."""
+    samples = [sample(), sample()]
+    while best2_ratio(samples) > CERT_RATIO and len(samples) < MAX_ATTEMPTS:
+        samples.append(sample())
+    return samples
+
+
+def route_sinks(path: str) -> list[dict]:
     """The three routed sinks, one per route value, under path."""
     return [
-        {"name": r, "predicate": f"route = '{r}'", "path": f"{path}/{r}",
-         "format": fmt}
+        {"name": r, "predicate": f"route = '{r}'", "path": f"{path}/{r}"}
         for r in ("errors", "ops", "archive")
     ]
 
 
-def run_pipeline_bench(
-    spark,
-    sf_dir: str,
-    reps: int,
-    out_dir: str,
-    partitions: int = 256,
-    mrpf: int = 65536,
-    sink: str = "parquet",
-    warmup_reps: int | None = None,
-) -> dict:
-    """Timed path: scan stored pages table → extract log line from html
-    → multi-format parse → broadcast enrich → route → fan-out writes.
-    Table generation is untimed data-prep (materialized once per
-    sf×reps, like TESTDATA). sink='noop' skips the write (used by the
-    scaling diagnostics to split compute from I/O)."""
-    from rotel_spark.fixtures import (
-        extract_log_line,
-        materialize_pages,
-        tld_registry_sql,
+def enrich_tld(df: DataFrame) -> DataFrame:
+    """Broadcast tld enrichment plus the sinks' projection. The lookup
+    is a map-side hash join riding the parse pass, no shuffle
+    (north star: parse → enrich → route; Datadog mapping-table
+    analog)."""
+    tld_lookup = F.broadcast(
+        df.sparkSession.sql(tld_registry_sql()).withColumnRenamed(
+            "tld", "reg_tld"
+        )
     )
-    from rotel_spark.functions.urls import tld_of
-    from rotel_spark.operators.filters import drop_unparsed
-    from rotel_spark.parsers.auto import parse_auto
-    from rotel_spark.plans.routing import with_route
+    enriched = df.withColumn("xtld", tld_of(F.col("url"))).join(
+        tld_lookup, F.col("xtld") == F.col("reg_tld"), "left"
+    )
+    return enriched.select(
+        "page_id", "url", "domain", "body", "log_source", "status",
+        "severity_number", "severity_text", "time_unix_nano", "route",
+        "domain_partition", "tld_type", "region",
+        F.length("html").alias("html_bytes"),
+    )
 
+
+def pipeline_config(pages_path: str, out_dir: str) -> dict:
+    """The benchmarked pipeline as a ``run_job`` config: the stored
+    pages table → extract → parse → route → enrich → three sinks."""
+    return {
+        "source": {"kind": "parquet", "path": pages_path},
+        "processors": [
+            {"kind": "python", "fn": extract_log_line},
+            {"kind": "parse_auto"},
+            {"kind": "filter", "expr": "parse_ok"},
+            {"kind": "route"},
+            {"kind": "python", "fn": enrich_tld},
+        ],
+        "sinks": route_sinks(out_dir),
+        # 64k records/file for the throughput measurement — the 8192
+        # batch semantic stays the pipeline default (count parity is on
+        # per-sink totals, not batch shapes; SURVEY.md §2.4), but 8192
+        # at 1M+ rows means hundreds of files whose commit overhead
+        # dominates wall time
+        "batch": {"max_records_per_file": 65536},
+    }
+
+
+def run_pipeline_bench(spark, sf_dir: str, reps: int, out_dir: str) -> dict:
+    """Time ``run_job`` on ``pipeline_config``. Table generation is
+    untimed data-prep (materialized once per sf×reps, like TESTDATA)."""
     # File-split granularity: FileSourceScan packs small files into
     # ~(total bytes / maxPartitionBytes) tasks, which at this input
-    # size coarsens the scan to roughly core-count tasks — the event-
-    # log profile shows the whole timed job is ONE map stage whose
-    # last-wave tail then bounds utilization (measured util 0.88 at
-    # 8c/26 tasks, 0.92 at 32c/32 tasks). Require ≥8 waves of tasks
-    # per core so the tail is amortized at BOTH scaling levels. At
-    # 100 TB the natural split count (bytes/128MB) dwarfs 8×cores and
-    # this floor is a no-op.
-    waves = int(os.environ.get("ROTEL_MIN_PARTITION_WAVES", "8"))
-    if waves:
-        spark.conf.set(
-            "spark.sql.files.minPartitionNum",
-            str(waves * spark.sparkContext.defaultParallelism),
-        )
+    # size coarsens the scan to roughly core-count tasks whose last-
+    # wave tail then bounds utilization. Require ≥8 waves of tasks per
+    # core so the tail is amortized. At 100 TB the natural split count
+    # (bytes/128MB) dwarfs 8×cores and this floor is a no-op.
+    spark.conf.set(
+        "spark.sql.files.minPartitionNum",
+        str(8 * spark.sparkContext.defaultParallelism),
+    )
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
     # 256 files: a 100 TB Iceberg table has file-level parallelism far
-    # beyond core count; locally, 64 files = only 2 task waves at 32
-    # cores and stragglers cap scaling (measured: p64→p256 = +37%
-    # throughput at 32c), while p256 still gives 8-row waves at 8 cores
-    table = f"/tmp/rotel_pages_{tag}_x{reps}_p{partitions}"
-    pages = materialize_pages(
-        spark, sf_dir, reps, table, partitions=partitions
-    )
-    tld_lookup = F.broadcast(
-        spark.sql(tld_registry_sql()).withColumnRenamed("tld", "reg_tld")
-    )
-
-    wpages = None
-    if warmup_reps:
-        # cheap warm-up variant: full JIT/codegen warm-up on a small
-        # same-shape table; the big table's page cache persists across
-        # arm processes on this 128 GB host, so re-scanning all of it
-        # per warm-up only burns protocol wall-clock
-        wtable = f"/tmp/rotel_pages_{tag}_x{warmup_reps}_p{partitions}"
-        wpages = materialize_pages(
-            spark, sf_dir, warmup_reps, wtable, partitions=partitions
-        )
-
-    def pipeline(src=None):
-        df = extract_log_line(src if src is not None else pages)
-        parsed = with_route(drop_unparsed(parse_auto(df)))
-        # broadcast enrichment rides the same pass (north star: parse →
-        # enrich → route; Datadog mapping-table analog) — map-side hash
-        # join, no shuffle
-        enriched = parsed.withColumn("xtld", tld_of(F.col("url"))).join(
-            tld_lookup, F.col("xtld") == F.col("reg_tld"), "left"
-        )
-        return enriched.select(
-            "page_id", "url", "domain", "body", "log_source", "status",
-            "severity_number", "severity_text", "time_unix_nano", "route",
-            "domain_partition", "tld_type", "region",
-            F.length("html").alias("html_bytes"),
-        )
-
-    from rotel_spark.sinks.writer import fan_out
-
-    # 64k records/file for the throughput measurement — the 8192 batch
-    # semantic stays the pipeline default (count parity is on per-sink
-    # totals, not batch shapes; SURVEY.md §2.4), but 8192 at 1M+ rows
-    # means hundreds of files whose commit overhead dominates wall time
-    def run_once(path: str, src=None) -> dict[str, int]:
-        return fan_out(
-            pipeline(src), route_sinks(path, sink), max_records_per_file=mrpf
-        )
+    # beyond core count; few files leave only a couple of task waves
+    # and stragglers cap scaling
+    table = f"/tmp/rotel_pages_{tag}_x{reps}_p256"
+    materialize_pages(spark, sf_dir, reps, table, partitions=256)
 
     # warm-up (JIT/codegen/page-cache), discarded per BASELINE.md protocol
-    run_once(f"{out_dir}/warmup", wpages)
-    # best-of-N timed passes (same integrity rule as the query suite:
-    # this host's bursty noise corrupts single samples; the best pass
-    # is the least-contaminated observation of plan cost)
-    best_of = int(os.environ.get("ROTEL_BENCH_BEST_OF", "2"))
-    max_attempts = int(os.environ.get("ROTEL_BENCH_MAX_ATTEMPTS", "7"))
-    cert_ratio = float(os.environ.get("ROTEL_BENCH_CERT_RATIO", "1.5"))
-    samples = []
-    for i in range(max(1, best_of)):
+    run_job(spark, pipeline_config(table, f"{out_dir}/warmup"))
+    routed = f"{out_dir}/routed"
+    counts: dict[str, int] = {}
+
+    def sample() -> float:
         t0 = time.time()
-        counts = run_once(f"{out_dir}/routed")
-        samples.append(time.time() - t0)
-    # self-certify (same rule as the query suite): two best samples
-    # within the certification ratio (default 1.5 — the r4 2.0 bound
-    # let a 1.9× swing through), else keep sampling up to the cap
-    while (
-        len(samples) >= 2
-        and sorted(samples)[1] / max(min(samples), 1e-9) > cert_ratio
-        and len(samples) < max_attempts
-    ):
-        t0 = time.time()
-        counts = run_once(f"{out_dir}/routed")
-        samples.append(time.time() - t0)
+        counts.update(run_job(spark, pipeline_config(table, routed)))
+        return time.time() - t0
+
+    samples = certified_samples(sample)
     elapsed = min(samples)
-    pipeline_variance = (
-        round(sorted(samples)[1] / max(elapsed, 1e-9), 2)
-        if len(samples) >= 2
-        else 1.0
-    )
     n_routed = sum(counts.values())
-    if sink == "noop":
-        total_bytes = 0
-    else:
-        total_bytes = (
-            spark.read.parquet(
-                *(s["path"] for s in route_sinks(f"{out_dir}/routed"))
-            )
-            .agg(F.sum("html_bytes"))
-            .collect()[0][0]
-            or 0
-        )
+    total_bytes = (
+        spark.read.parquet(*(s["path"] for s in route_sinks(routed)))
+        .agg(F.sum("html_bytes"))
+        .collect()[0][0]
+        or 0
+    )
     return {
         "sec": elapsed,
         "records": n_routed,
@@ -180,15 +163,11 @@ def run_pipeline_bench(
         "mb": total_bytes / 1e6,
         "mb_per_sec": total_bytes / 1e6 / elapsed,
         "sink_counts": counts,
-        "variance": pipeline_variance,
+        "variance": round(best2_ratio(samples), 2),
     }
 
 
 def main() -> None:
-    # bench heap: large fixed young gen (see session._gc_options) —
-    # 32g/Xmn24g measured ~9% over 16g/Xmn12g at 32 cores on the
-    # string-churn parse (fewer young-GC pauses)
-    os.environ.setdefault("ROTEL_SPARK_DRIVER_MEM", "32g")
     spark = build_spark(
         app_name="rotel_spark_bench", master=f"local[{CPUS}]",
         shuffle_partitions=CPUS,
@@ -204,12 +183,6 @@ def main() -> None:
         # materialize the query-suite pages fixture ONCE (untimed
         # data-prep, like run_pipeline_bench's input table) so per-query
         # timings measure the operator, not the 20-way generation CTE
-        from rotel_spark.fixtures import (
-            DEFAULT_REPS,
-            materialize_pages,
-            pages_cache_path,
-        )
-
         cache_base = "/tmp/rotel_pages_cache"
         os.environ["ROTEL_PAGES_CACHE_DIR"] = cache_base
         materialize_pages(
@@ -237,22 +210,6 @@ def main() -> None:
         ]
         qs = entrymod.queries()
 
-        # Measurement integrity (VERDICT r2 #2, self-certifying per
-        # r3 #6): this host shows bursty hypervisor CPU steal that
-        # inflated BENCH_r02 per-query numbers 6-9× vs clean re-runs.
-        # Per query: sample until the TWO BEST samples agree within
-        # ROTEL_BENCH_CERT_RATIO (default 1.5; r4's 2.0 bound let a
-        # 1.9× swing through) — two independent observations of the
-        # same plan cost certify each other — capped at
-        # ROTEL_BENCH_MAX_ATTEMPTS with per-query attempt provenance
-        # in the output. The recorded number is the best (least-
-        # contaminated) sample; the recorded variance is best2/best1
-        # — ≤ the ratio means certified, above it lands the query in
-        # unstable_queries.
-        best_of = int(os.environ.get("ROTEL_BENCH_BEST_OF", "2"))
-        max_attempts = int(os.environ.get("ROTEL_BENCH_MAX_ATTEMPTS", "7"))
-        cert_ratio = float(os.environ.get("ROTEL_BENCH_CERT_RATIO", "1.5"))
-
         def sample_once(name: str) -> float:
             t0 = time.time()
             qs[name](spark, SF_DIR).write.format("noop").mode(
@@ -260,24 +217,15 @@ def main() -> None:
             ).save()
             return time.time() - t0
 
-        def best2_ratio(samples: list[float]) -> float:
-            b = sorted(samples)[:2]
-            return b[-1] / max(b[0], 1e-9)
-
         attempts: dict[str, int] = {}
         for name in headline:
-            samples = [sample_once(name) for _ in range(max(2, best_of))]
-            while (
-                best2_ratio(samples) > cert_ratio
-                and len(samples) < max_attempts
-            ):
-                samples.append(sample_once(name))
+            samples = certified_samples(lambda: sample_once(name))
             timings[name] = round(min(samples), 3)
             variance[name] = round(best2_ratio(samples), 2)
             attempts[name] = len(samples)
 
         total = round(sum(timings.values()), 3)
-        unstable = sorted(k for k, v in variance.items() if v > cert_ratio)
+        unstable = sorted(k for k, v in variance.items() if v > CERT_RATIO)
         print(
             json.dumps(
                 {

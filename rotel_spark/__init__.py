@@ -12,8 +12,9 @@ Design (see SURVEY.md):
     declared order (reference src/topology/processors.rs:561-573)
   * parsing is JVM-side regexp expressions on the hot path, with a
     vectorized pandas-UDF grok engine for arbitrary user patterns
-  * fan-out = persist once, write per sink (reference
-    src/topology/fanout.rs:144-153 clones all-but-last)
+  * fan-out = one partitioned write job for every sink, each row
+    tagged with the sinks whose predicate it matches (reference
+    src/topology/fanout.rs:144-153 sends each batch to every exporter)
   * lineage/checkpoint table replaces per-row acks (reference
     src/receivers/file/offset_tracker.rs:50-63 min-pending-offset)
 """

@@ -29,10 +29,6 @@ def quantize_int8(vec: Column, scale: Column) -> Column:
     )
 
 
-def dequantize(q: Column, scale: Column) -> Column:
-    return F.transform(q, lambda x: x.cast("double") * scale)
-
-
 def with_quantized(
     df: DataFrame, vec_col: str = "embedding", prefix: str = "q"
 ) -> DataFrame:

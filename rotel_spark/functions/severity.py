@@ -60,20 +60,6 @@ def status_severity_text_sql(col: str) -> str:
     )
 
 
-def level_severity_number_sql(col: str) -> str:
-    whens = " ".join(
-        f"WHEN '{k}' THEN {num}" for k, (num, _) in LEVEL_MAP.items()
-    )
-    return f"CASE {col} {whens} ELSE 0 END"
-
-
-def level_severity_text_sql(col: str) -> str:
-    whens = " ".join(
-        f"WHEN '{k}' THEN '{txt}'" for k, (_, txt) in LEVEL_MAP.items()
-    )
-    return f"CASE {col} {whens} ELSE '' END"
-
-
 def kmsg_severity_number_sql(col: str) -> str:
     """Portable CASE: kmsg priority → severity_number (facility = prio>>3
     handled by the caller; here col is already priority & 7)."""

@@ -141,11 +141,6 @@ def lang_id_case_sql(scores: dict[str, str]) -> str:
     return "CASE " + " ".join(whens) + " ELSE 'und' END"
 
 
-def fingerprint64(text: Column) -> Column:
-    """64-bit document fingerprint (xxhash64 of NFC-normalized text)."""
-    return F.xxhash64(text)
-
-
 def shingles(text: Column, k: int = 3) -> Column:
     """Word k-shingles as an array<string> (for MinHash/Jaccard)."""
     words = F.split(F.lower(F.trim(text)), r"\s+")

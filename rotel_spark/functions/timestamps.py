@@ -49,8 +49,3 @@ def to_unix_nanos(ts: Column) -> Column:
     """timestamp → epoch nanoseconds (LONG). Second precision inputs
     only (log formats carry no sub-second), so no precision loss."""
     return (F.unix_timestamp(ts) * F.lit(NANOS)).cast("long")
-
-
-def observed_or_parsed_nanos(parsed_ns: Column, observed_ns: Column) -> Column:
-    """Reference receiver.rs:842: parsed timestamp, else observed time."""
-    return F.coalesce(parsed_ns, observed_ns)

@@ -13,14 +13,6 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-# portable SQL snippets (same text runs in Spark SQL and DuckDB oracles)
-def host_sql(url_col: str) -> str:
-    return f"regexp_extract({url_col}, 'https?://([^/]+)', 1)"
-
-
-def tld_sql(url_col: str) -> str:
-    return f"regexp_extract({url_col}, 'https?://[^/]*[.]([a-z0-9-]+)(/|$)', 1)"
-
 
 def host_of(url: Column) -> Column:
     return F.regexp_extract(url, r"https?://([^/]+)", 1)
@@ -28,17 +20,6 @@ def host_of(url: Column) -> Column:
 
 def tld_of(url: Column) -> Column:
     return F.regexp_extract(url, r"https?://[^/]*[.]([a-z0-9-]+)(/|$)", 1)
-
-
-def path_of(url: Column) -> Column:
-    return F.regexp_extract(url, r"https?://[^/]+(/[^?#]*)", 1)
-
-
-def registered_domain_of(url: Column) -> Column:
-    """host minus subdomains is out of scope without a PSL; here domain
-    = full host (single-label hosts in fixtures). Kept as a function so
-    a public-suffix broadcast join can slot in."""
-    return host_of(url)
 
 
 # ---------------------------------------------------------------------------
@@ -51,8 +32,8 @@ def registered_domain_of(url: Column) -> Column:
 # exact-dedup counts meaningful at 10^12 docs. Pure JVM expressions
 # (regexp / split / filter / array_sort / array_join) — no Python,
 # stays inside whole-stage codegen; the downstream dedup is a
-# groupBy(canonical_url) hash shuffle (salt hot hosts via
-# plans/routing.py:60 if skewed).
+# groupBy(canonical_url) hash shuffle with map-side partial
+# aggregation.
 
 _TRACKING_PREFIXES = ("utm_", "fbclid", "gclid")
 

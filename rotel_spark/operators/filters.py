@@ -9,7 +9,7 @@ rerunning a failed task must pick the same rows (exactly-once parity).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -42,10 +42,6 @@ def hash_sample(df: DataFrame, key: str, fraction: float) -> DataFrame:
     return df.filter(
         F.pmod(F.xxhash64(F.col(key)), F.lit(10000)) < threshold
     )
-
-
-def severity_floor(df: DataFrame, min_severity: int) -> Column:
-    return df.filter(F.col("severity_number") >= min_severity)
 
 
 def stratified_sample(

@@ -207,47 +207,6 @@ def extract_features(df: DataFrame) -> DataFrame:
     return df.mapInPandas(_extract, FEATURE_SCHEMA)
 
 
-def resize_image(df: DataFrame, out_w: int, out_h: int) -> DataFrame:
-    """Real nearest-neighbor resize over decoded BMPs, re-encoded as
-    BMP — an honest decode→transform→encode media stage."""
-    import pandas as pd
-
-    out_schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-        ]
-    )
-
-    def _resize(batches):
-        for pdf in batches:
-            out = []
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                img = decode_image(p)
-                ys = (np.arange(out_h) * img.shape[0] // out_h).clip(
-                    0, img.shape[0] - 1
-                )
-                xs = (np.arange(out_w) * img.shape[1] // out_w).clip(
-                    0, img.shape[1] - 1
-                )
-                small = img[ys][:, xs]
-                out.append((mid, make_bmp(out_w, out_h, small)))
-            yield pd.DataFrame(
-                {
-                    "media_id": [o[0] for o in out],
-                    "payload": [o[1] for o in out],
-                    "width": out_w,
-                    "height": out_h,
-                }
-            )
-
-    return df.filter(F.col("kind") == "image").mapInPandas(
-        _resize, out_schema
-    )
-
-
 def frame_sample_plan(df: DataFrame, every_ms: int = 1000) -> DataFrame:
     """Video frame-sampling plumbing: one output row per planned frame
     timestamp (decode stubbed). Demonstrates explode-based fan-out

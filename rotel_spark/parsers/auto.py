@@ -44,21 +44,6 @@ from ..functions.timestamps import (
 from . import json_log, kmsg, nginx
 
 
-def detect_format(line) -> "F.Column":  # type: ignore[name-defined]
-    """'json' | 'kmsg' | 'nginx_error' | 'nginx' | 'unknown'.
-
-    Probe order: cheap structural prefixes first; the expensive full
-    combined-pattern rlike only runs for lines no cheaper probe claimed.
-    """
-    return (
-        F.when(line.startswith("{"), F.lit("json"))
-        .when(line.rlike(r"^\d+,\d+,\d+(,[^;]*)?;"), F.lit("kmsg"))
-        .when(line.rlike(r"^\d{4}/\d{2}/\d{2} "), F.lit("nginx_error"))
-        .when(line.rlike(nginx.COMBINED_PATTERN), F.lit("nginx"))
-        .otherwise(F.lit("unknown"))
-    )
-
-
 # Per-process cache of the stage Column expressions, keyed by the line
 # column name. A Column is an immutable UNRESOLVED expression tree —
 # reusing one across DataFrames/plans is exactly as safe as reusing the

@@ -52,13 +52,3 @@ def parse_access_json(df: DataFrame, line_col: str = "raw_line") -> DataFrame:
         .withColumn("log_source", F.lit("json"))
         .drop("_j")
     )
-
-
-def parse_open_attrs(df: DataFrame, line_col: str = "raw_line") -> DataFrame:
-    """Schema-less variant: JSON object → MAP<STRING,STRING> attrs
-    (json.rs type map: scalars stringified per cvattr.rs:30-42 rules)."""
-    line = F.col(line_col)
-    return df.withColumn(
-        "log_attributes",
-        F.from_json(line, T.MapType(T.StringType(), T.StringType())),
-    )

@@ -59,12 +59,6 @@ COMBINED_FIELDS = [
 ]
 
 
-def combined_matches(line: Column) -> Column:
-    """Cheap prefilter — run BEFORE any UDF parse (SURVEY.md §4:
-    'Filter Before You Parse'; UDFs are optimization barriers)."""
-    return line.rlike(COMBINED_PATTERN)
-
-
 from .capture import MARK as _MARK  # noqa: E402
 from .capture import capture_all  # noqa: E402
 from .capture import group as _group  # noqa: E402

@@ -7,6 +7,30 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _mem_total_kb() -> int | None:
+    """MemTotal from /proc/meminfo, or None where it cannot be read."""
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    return int(line.split()[1])
+    except (OSError, ValueError, IndexError):
+        pass
+    return None
+
+
+def _default_driver_mem(mem_total_kb: int | None) -> str:
+    """Heap when ROTEL_SPARK_DRIVER_MEM is unset: half of physical
+    memory in whole GiB (at least 1g), capped at 16g. The heap and its
+    pretouched ¾ young gen then stay within half of memory, leaving the
+    rest to Python workers, the page cache and off-heap buffers; a
+    fixed size overshoots small hosts, where the JVM fails to map its
+    pretouched heap at startup. 16g where MemTotal is unknown."""
+    if mem_total_kb is None:
+        return "16g"
+    return f"{max(1, min(16, mem_total_kb // (2 * 1024 * 1024)))}g"
+
+
 def _gc_options(driver_mem: str) -> str:
     """ParallelGC with a fixed young gen at ¾ of the heap + pretouch
     (see build_spark comment). Falls back to plain ParallelGC when the
@@ -37,7 +61,9 @@ def build_spark(
         # coalesces from a high initial number instead)
         n = master.split("[")[-1].rstrip("]")
         shuffle_partitions = cpus if n in ("*", "") else int(n)
-    driver_mem = os.environ.get("ROTEL_SPARK_DRIVER_MEM", "16g")
+    driver_mem = os.environ.get("ROTEL_SPARK_DRIVER_MEM")
+    if driver_mem is None:
+        driver_mem = _default_driver_mem(_mem_total_kb())
     b = (
         SparkSession.builder.master(master)
         .appName(app_name)

@@ -1,8 +1,8 @@
 """Kafka source/sink builders — the kafka receiver/exporter analog.
 
-No broker exists in this sandbox, so these build the (read|write)
-stream specs and key expressions without starting them; the semantics
-they encode are tested where testable (key hashing, topic naming).
+These build the reader/writer option maps and the key and partition
+expressions without a broker; the semantics they encode are tested
+where testable (key hashing, topic naming).
 
 Reference semantics mirrored:
   * per-telemetry-type topics otlp_{logs,metrics,traces}
@@ -18,7 +18,7 @@ Reference semantics mirrored:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.hashing import sorted_map_repr
@@ -46,22 +46,6 @@ def read_stream_options(
     if max_offsets_per_trigger:
         opts["maxOffsetsPerTrigger"] = str(max_offsets_per_trigger)
     return opts
-
-
-def read_stream_spec(
-    spark: SparkSession,
-    brokers: str,
-    telemetry_type: str = "logs",
-    starting_offsets: str = "earliest",
-    max_offsets_per_trigger: int | None = None,
-):
-    """Unstarted readStream for the per-type topic."""
-    r = spark.readStream.format("kafka")
-    for k, v in read_stream_options(
-        brokers, telemetry_type, starting_offsets, max_offsets_per_trigger
-    ).items():
-        r = r.option(k, v)
-    return r
 
 
 def kafka_key(resource_attrs) -> "F.Column":  # type: ignore[name-defined]
@@ -118,11 +102,3 @@ def write_stream_options(
         "kafka.bootstrap.servers": brokers,
         "topic": TOPICS[telemetry_type],
     }
-
-
-def write_stream_spec(df: DataFrame, brokers: str, telemetry_type: str = "logs"):
-    """Unstarted writeStream to the per-type topic."""
-    w = df.writeStream.format("kafka")
-    for k, v in write_stream_options(brokers, telemetry_type).items():
-        w = w.option(k, v)
-    return w

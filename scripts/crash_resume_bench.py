@@ -74,7 +74,6 @@ def _cfg(tmp: pathlib.Path, source_path: str, poison: bool) -> dict:
 
 
 def main() -> None:
-    os.environ.setdefault("ROTEL_SPARK_DRIVER_MEM", "32g")
     spark = build_spark(
         app_name="rotel_crash_resume_bench",
         master=f"local[{CPUS}]",

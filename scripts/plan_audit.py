@@ -5,7 +5,9 @@ output for the headline operators plus commentary checks:
   * the hot path stays inside WholeStageCodegen (no row-at-a-time
     Python between scan and write)
   * joins that must broadcast do broadcast
-  * the routed write plan contains no shuffle (scan-aligned write)
+
+The pipeline's own plan shape (broadcast tld join, no shuffle before
+the routed write) is asserted in tests/test_pipeline.py.
 
 Usage: python scripts/plan_audit.py [SF_DIR]
 """
@@ -13,7 +15,10 @@ Usage: python scripts/plan_audit.py [SF_DIR]
 from __future__ import annotations
 
 import io
+import pathlib
 import sys
+
+ROOT = pathlib.Path(__file__).resolve().parent.parent
 
 
 def explain_str(df) -> str:
@@ -29,50 +34,13 @@ def explain_str(df) -> str:
 
 def main() -> int:
     sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    sys.path.insert(0, "/root/repo")
-    from pyspark.sql import functions as F
-
+    sys.path.insert(0, str(ROOT))
     import __spark_entry__ as entry
-    from rotel_spark.fixtures import (
-        extract_log_line,
-        materialize_pages,
-        tld_registry_sql,
-    )
-    from rotel_spark.operators.filters import drop_unparsed
-    from rotel_spark.parsers.auto import parse_auto
-    from rotel_spark.plans.routing import with_route
     from rotel_spark.session import build_spark
 
     spark = build_spark(app_name="plan_audit")
     qs = entry.queries()
     sections: list[tuple[str, str, str]] = []
-
-    # E2E pipeline write plan (scan → parse → enrich → route → select)
-    tag = sf.rstrip("/").rsplit("/", 1)[-1]
-    pages = materialize_pages(
-        spark, sf, 20, f"/tmp/rotel_plan_pages_{tag}", partitions=8
-    )
-    lookup = F.broadcast(
-        spark.sql(tld_registry_sql()).withColumnRenamed("tld", "reg_tld")
-    )
-    from rotel_spark.functions.urls import tld_of
-
-    pipe = (
-        with_route(drop_unparsed(parse_auto(extract_log_line(pages))))
-        .withColumn("xtld", tld_of(F.col("url")))
-        .join(lookup, F.col("xtld") == F.col("reg_tld"), "left")
-        .select("page_id", "route", "severity_number", "body", "tld_type")
-    )
-    sections.append(
-        (
-            "pipeline (scan → extract → parse_auto → route → broadcast enrich)",
-            explain_str(pipe),
-            "expect: ONE FileScan over the pages table with ReadSchema "
-            "pruned to used columns; BroadcastHashJoin for the tld "
-            "lookup; every operator inside WholeStageCodegen; NO "
-            "Exchange (the routed write is scan-aligned).",
-        )
-    )
 
     for name, note in [
         (
@@ -168,8 +136,7 @@ def main() -> int:
     out = ["# PLANS — physical-plan audit (generated by scripts/plan_audit.py)\n"]
     for name, plan, note in sections:
         out.append(f"\n## {name}\n\n_{note}_\n\n```\n{plan}\n```\n")
-    with open("/root/repo/PLANS.md", "w") as f:
-        f.write("".join(out))
+    (ROOT / "PLANS.md").write_text("".join(out))
     print("wrote PLANS.md")
     spark.stop()
     return 0

@@ -1,6 +1,6 @@
-"""bench.py-faithful per-query timer: DataFrame CONSTRUCTION inside the
-timed region (bench_extra's cmd_queries builds the DF outside, which
-under-times queries with eager localCheckpoints). min of N samples.
+"""Per-query timer, timed as bench.py times its headline queries:
+DataFrame CONSTRUCTION is inside the timed region (queries with eager
+localCheckpoints do work while they are built). min of N samples.
 
 Usage: python scripts/qtime.py <n_samples> <query> [query ...]
 Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS
@@ -21,7 +21,6 @@ CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 def main() -> None:
     n = int(sys.argv[1])
     names = sys.argv[2:]
-    os.environ.setdefault("ROTEL_SPARK_DRIVER_MEM", "32g")
     spark = build_spark(
         app_name="qtime", master=f"local[{CPUS}]", shuffle_partitions=CPUS
     )

@@ -301,3 +301,47 @@ def test_fanout_write_groups(spark, tmp_path):
     assert sorted(part.columns) == ["id", "p"]
     assert part.filter("p = 2").count() == 33
     assert not list(tmp_path.glob("_staging_*"))
+
+
+def _bench_config(spark, sf_unit, tmp_path) -> tuple[str, dict]:
+    import bench
+    from rotel_spark.fixtures import materialize_pages
+
+    pages = str(tmp_path / "pages")
+    materialize_pages(spark, sf_unit, 4, pages, partitions=4)
+    return pages, bench.pipeline_config(pages, str(tmp_path / "routed"))
+
+
+def test_bench_pipeline_plan_shape(spark, sf_unit, tmp_path):
+    """The benchmarked pipeline enriches through a broadcast join and
+    shuffles nothing before the routed write."""
+    import re
+
+    pages, cfg = _bench_config(spark, sf_unit, tmp_path)
+    df = build_pipeline(cfg).run(spark.read.parquet(pages))
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" in plan, plan
+    assert not re.search(r"(?<!Broadcast)Exchange", plan), plan
+
+
+def test_bench_pipeline_sinks(spark, sf_unit, tmp_path):
+    """run_job on the benchmarked config writes every parsed row to the
+    sink of its route, enriched and projected."""
+    from rotel_spark.parsers.auto import parse_auto
+    from rotel_spark.plans.routing import with_route
+
+    pages, cfg = _bench_config(spark, sf_unit, tmp_path)
+    counts = run_job(spark, cfg)
+    parsed = parse_auto(extract_log_line(spark.read.parquet(pages)))
+    exp = {
+        r["route"]: r["count"]
+        for r in with_route(parsed.filter("parse_ok"))
+        .groupBy("route")
+        .count()
+        .collect()
+    }
+    assert counts == exp
+    for s in cfg["sinks"]:
+        got = spark.read.parquet(s["path"])
+        assert {"html_bytes", "tld_type"} <= set(got.columns), s["name"]
+        assert got.count() == counts[s["name"]], s["name"]
