@@ -250,9 +250,19 @@ _PAGES_DF_CACHE: dict = {}
 
 
 def pages_cache_path(base: str, sf_dir: str, reps: int) -> str:
-    """Canonical path of a materialized pages table under `base`."""
+    """Canonical path of a materialized pages table under `base`.
+
+    The name carries a digest of the generator (both WITH-clause
+    variants and the html template), so a table written by an older
+    generator is never read as the current one."""
+    import hashlib
+    import inspect
+
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    return f"{base}/pages_{tag}_x{reps}"
+    text = (pages_with_clause(reps) + spark_fast_with_clause(reps)
+            + inspect.getsource(build_html))
+    digest = hashlib.sha256(text.encode()).hexdigest()[:12]
+    return f"{base}/pages_{tag}_x{reps}_{digest}"
 
 
 def load_pages(

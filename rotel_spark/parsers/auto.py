@@ -24,6 +24,7 @@ Output: the unified flat log-record shape (FIXTURES.md §3):
 
 from __future__ import annotations
 
+from pyspark import SparkContext
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -44,24 +45,27 @@ from ..functions.timestamps import (
 from . import json_log, kmsg, nginx
 
 
-# Per-process cache of the stage Column expressions, keyed by the line
+# Per-gateway cache of the stage Column expressions, keyed by the line
 # column name. A Column is an immutable UNRESOLVED expression tree —
 # reusing one across DataFrames/plans is exactly as safe as reusing the
 # pattern string it was built from (no data, schema or session state is
-# captured; the JVM gateway is per-process). Why: building these trees
+# captured). Why: building these trees
 # costs ~2,800 py4j ROUND TRIPS per call (every F.when/F.col/.alias is
 # a socket round trip — profiled 0.5-0.6 s per query construction,
 # >half the wall time of the small parse queries at sf0.1), paid again
-# for every query the driver/bench constructs. Build once per process,
-# reuse forever — the regex-compile idiom at the expression layer
-# (guide §7.3: planning/driver-side overhead is real job time).
-_STAGE_EXPRS: dict[str, dict] = {}
+# for every query a caller constructs. Build once per gateway,
+# reuse while it lives — the regex-compile idiom at the expression layer
+# (guide §7.3: planning/driver-side overhead is real job time). A Column
+# is a handle into its gateway's JVM, so an entry built through a
+# gateway that has since shut down is rebuilt for the live one.
+_STAGE_EXPRS: dict[str, tuple] = {}
 
 
 def _stage_exprs(line_col: str) -> dict:
-    cached = _STAGE_EXPRS.get(line_col)
-    if cached is not None:
-        return cached
+    gateway = SparkContext._gateway
+    hit = _STAGE_EXPRS.get(line_col)
+    if hit is not None and hit[0] is gateway:
+        return hit[1]
     from .capture import capture_all, capture_ok
 
     line = F.col(line_col)
@@ -212,7 +216,7 @@ def _stage_exprs(line_col: str) -> dict:
         "final_cols": [sev_num, sev_txt, ts_ns, parse_ok,
                        line.alias("body")],
     }
-    _STAGE_EXPRS[line_col] = cached
+    _STAGE_EXPRS[line_col] = (gateway, cached)
     return cached
 
 

@@ -19,6 +19,7 @@ only mis-split itself (counted-dropped), never fail the job.
 
 from __future__ import annotations
 
+from pyspark import SparkContext
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -64,18 +65,19 @@ from .capture import capture_all  # noqa: E402
 from .capture import group as _group  # noqa: E402
 
 
-# Per-process cache of the projection expressions, keyed by line
-# column — same rationale as parsers.auto._stage_exprs: Columns are
-# immutable UNRESOLVED trees, and rebuilding them costs hundreds of
-# py4j round trips per query construction (driver-side wall time,
-# guide §7.3).
-_CC_EXPRS: dict[str, dict] = {}
+# Per-gateway cache of the projection expressions, keyed by line
+# column — same rationale and same gateway check as
+# parsers.auto._stage_exprs: Columns are immutable UNRESOLVED trees,
+# and rebuilding them costs hundreds of py4j round trips per query
+# construction (driver-side wall time, guide §7.3).
+_CC_EXPRS: dict[str, tuple] = {}
 
 
 def _cc_exprs(line_col: str) -> dict:
-    cached = _CC_EXPRS.get(line_col)
-    if cached is not None:
-        return cached
+    gateway = SparkContext._gateway
+    hit = _CC_EXPRS.get(line_col)
+    if hit is not None and hit[0] is gateway:
+        return hit[1]
     line = F.col(line_col)
     n = len(COMBINED_FIELDS)
     ok = (F.size(F.col("_parts")) > n) & F.col("_parts").getItem(
@@ -101,7 +103,7 @@ def _cc_exprs(line_col: str) -> dict:
         "severity_number": status_to_severity_number(F.col("status")),
         "severity_text": status_to_severity_text(F.col("status")),
     }
-    _CC_EXPRS[line_col] = cached
+    _CC_EXPRS[line_col] = (gateway, cached)
     return cached
 
 

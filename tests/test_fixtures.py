@@ -104,3 +104,18 @@ def test_garbage_lines_dropped_not_fatal(spark, sf_unit):
     kept = drop_unparsed(parsed).count()
     garbage = pages.filter(F.col("fmt") == 9).count()
     assert total - kept == garbage
+
+
+def test_pages_cache_path_tracks_generator(monkeypatch):
+    """The materialized-pages path changes with the generator's SQL and
+    is stable otherwise, so a stale table is never served."""
+    import rotel_spark.fixtures as fx
+
+    path = fx.pages_cache_path("/cache", "/data/sf0.1/", 20)
+    assert path == fx.pages_cache_path("/cache", "/data/sf0.1", 20)
+    assert path.startswith("/cache/pages_sf0.1_x20_")
+    tail = fx.pages_tail_clause
+    monkeypatch.setattr(
+        fx, "pages_tail_clause", lambda: tail().replace("% 23", "% 29")
+    )
+    assert fx.pages_cache_path("/cache", "/data/sf0.1", 20) != path

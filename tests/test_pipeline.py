@@ -345,3 +345,65 @@ def test_bench_pipeline_sinks(spark, sf_unit, tmp_path):
         got = spark.read.parquet(s["path"])
         assert {"html_bytes", "tld_type"} <= set(got.columns), s["name"]
         assert got.count() == counts[s["name"]], s["name"]
+
+
+def test_parquet_sinks_carry_no_dictionary_pages(spark, sf_unit, tmp_path):
+    """Parquet sinks are written PLAIN: no column chunk of any sink file
+    (routed, overlapping or empty) has a dictionary page or encoding."""
+    import pyarrow.parquet as pq
+
+    cfg = _config(tmp_path, sf_unit)
+    cfg["sinks"].append({"name": "none", "predicate": "route = 'nowhere'",
+                         "path": str(tmp_path / "none")})
+    counts = run_job(spark, cfg, run_id="r1")
+    assert counts["none"] == 0 and counts["all"] > 0
+    chunks = 0
+    for s in cfg["sinks"]:
+        files = _part_files(pathlib.Path(s["path"]))
+        assert files, s["name"]
+        for f in files:
+            meta = pq.ParquetFile(f).metadata
+            for g in range(meta.num_row_groups):
+                for c in range(meta.num_columns):
+                    col = meta.row_group(g).column(c)
+                    chunks += 1
+                    assert not col.has_dictionary_page, (f, col.path_in_schema)
+                    assert not [e for e in col.encodings
+                                if e.endswith("_DICTIONARY")], (f, col)
+    assert chunks
+
+
+def test_fanout_tag_is_codegen(spark):
+    """The sink tag (routed, NULL-yielding and broadcast predicates)
+    is a Generate inside whole-stage codegen, not an interpreted one."""
+    import re
+
+    from rotel_spark.sinks.writer import SINK_COL, _tag
+
+    df = spark.range(100).withColumn("v", F.col("id") * 2)
+    tagged, _ = _tag(df, ["id < 50", "CASE WHEN id >= 90 THEN true END",
+                          None])
+    plan = tagged._jdf.queryExecution().executedPlan().toString()
+    gens = [ln for ln in plan.splitlines() if "Generate " in ln]
+    assert gens, plan
+    assert all(re.search(r"\*\(\d+\) Generate ", ln) for ln in gens), plan
+    got = {r[SINK_COL]: r["count"]
+           for r in tagged.groupBy(SINK_COL).count().collect()}
+    assert got == {0: 50, 1: 10, 2: 100}
+
+
+def test_parse_auto_filter_keeps_one_combined_capture(spark, sf_unit):
+    """parse_auto's rand(0) barrier keeps a downstream parse_ok filter
+    from copying the parse into the Filter: the COMBINED capture is
+    evaluated once."""
+    from rotel_spark.parsers.nginx import COMBINED_PATTERN
+
+    cfg = {"processors": [
+        {"kind": "python", "fn": extract_log_line},
+        {"kind": "parse_auto"},
+        {"kind": "filter", "expr": "parse_ok"},
+        {"kind": "route"},
+    ]}
+    df = build_pipeline(cfg).run(load_pages_full(spark, sf_unit, reps=4))
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count(COMBINED_PATTERN) == 1, plan

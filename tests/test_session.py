@@ -28,3 +28,40 @@ def test_default_heap_bounds():
     assert _default_driver_mem(1 * GIB_KB) == "1g"
     assert _default_driver_mem(256 * GIB_KB) == "16g"
     assert _default_driver_mem(None) == "16g"
+
+
+_NEW_GATEWAY = r"""
+from pyspark import SparkContext
+
+from rotel_spark.parsers.auto import parse_auto
+from rotel_spark.parsers.nginx import parse_combined
+from rotel_spark.session import build_spark
+
+LINE = '10.0.0.1 - - [01/Dec/2025:10:00:00 +0000] "GET / HTTP/1.1" 503 7 "-" "-"'
+for _ in range(2):
+    spark = build_spark(master="local[1]", shuffle_partitions=1)
+    df = spark.createDataFrame([(LINE,)], ["raw_line"])
+    assert parse_auto(df).select("status").first()[0] == 503
+    assert parse_combined(df).select("status").first()[0] == 503
+    spark.stop()
+    SparkContext._gateway.shutdown()
+    SparkContext._gateway.proc.kill()
+    SparkContext._gateway.proc.wait()
+    SparkContext._gateway = SparkContext._jvm = None
+"""
+
+
+def test_parser_caches_follow_a_new_gateway():
+    """A session started in the same process after the first one's
+    gateway shut down can still parse: the cached parser Columns are
+    rebuilt for the new gateway."""
+    import os
+    import pathlib
+    import subprocess
+    import sys
+
+    root = pathlib.Path(__file__).resolve().parent.parent
+    env = {**os.environ, "ROTEL_SPARK_DRIVER_MEM": "1g"}
+    r = subprocess.run([sys.executable, "-c", _NEW_GATEWAY], cwd=root,
+                       env=env, capture_output=True, text=True, timeout=600)
+    assert r.returncode == 0, r.stderr[-4000:]
