@@ -16,7 +16,9 @@ from the same tasks that wrote the rows: no persist, no second pass.
 One range per run is sound because it is committed only after ALL
 sinks for the run committed — the same "ack fires when the last ref
 resolves" rule as payload.rs:426-439 — and the run processed every
-source row in it that an earlier commit had not already covered.
+source row in it that an earlier commit had not already covered. A
+batch (a transactional run or a micro-batch) commits one row of its
+own, stage ``export:<batch>``.
 
 Delivery semantics: sink rows are exactly-once (every committed row is
 inside a committed range by construction); DROPPED rows falling outside
@@ -39,17 +41,19 @@ def observe_lineage(
     df: DataFrame, key: str = "page_id", parsed_col: str | None = "parse_ok"
 ) -> tuple[DataFrame, Observation]:
     """Attach the run's range and counters to df; they are read from
-    the returned Observation once an action over df has run."""
+    the returned Observation once an action over df has run. Without a
+    key column the range is NULL."""
     obs = Observation()
     parsed = (
         F.sum(F.col(parsed_col).cast("long"))
         if parsed_col and parsed_col in df.columns
         else F.count(F.lit(1))
     )
+    k = F.col(key) if key in df.columns else F.lit(None).cast("long")
     return df.observe(
         obs,
-        F.min(key).alias("src_min"),
-        F.max(key).alias("src_max"),
+        F.min(k).alias("src_min"),
+        F.max(k).alias("src_max"),
         F.count(F.lit(1)).alias("rows_in"),
         F.coalesce(parsed, F.lit(0)).alias("rows_parsed"),
     ), obs

@@ -11,10 +11,15 @@ is no per-stage materialization: the fan-out to every sink is one
 partitioned write over that plan (sinks/writer.py), and the lineage
 counters ride the same job through ``observe()``.
 
+``execute`` is the one execution path: stages, quarantine wiring,
+fan-out and the lineage commit over a source frame. ``run_job`` reads
+the config's source and calls it once; ``streaming.stream.run_stream``
+calls it once per micro-batch, as batch ``<stream>-<batch_id>``.
+
 Example config::
 
     {
-      "source": {"kind": "pages_parquet", "path": ..., "reps": 20},
+      "source": {"kind": "parquet", "path": ...},
       "processors": [
         {"kind": "parse_auto"},
         {"kind": "filter", "expr": "parse_ok"},
@@ -150,39 +155,15 @@ def run_job(
     run_id: str = "run0",
     transactional_batch: str | None = None,
 ) -> dict[str, int]:
-    """Full job: source → stages → fan-out sinks → lineage. Returns
+    """Full job: read the config's source, then ``execute`` it. Returns
     per-sink row counts.
 
-    transactional_batch: enables crash-safe batch commit for file
-    sinks (requires lineage_path). Each invocation's single write lands
-    in an invisible staging dir (``_staging_<batch>-*`` — the leading
-    underscore hides it from Spark readers), from which each sink's
-    rows are renamed to `<sink>/batch=<batch>` (visible; partition-
-    discovery compatible), then the lineage range is committed. Crash
-    windows:
-      * during the write — only the invisible staging dir exists; the
-        next attempt of the batch overwrites it and removes it;
-      * after the renames, before lineage commit — the next attempt
-        detects visible batch dirs with no matching lineage stage and
-        rolls them back before re-processing.
-    Either way a re-driven batch produces exactly-once sink rows.
-    This is the local-fs/HDFS model of an Iceberg snapshot commit —
-    on an object store the rename step is replaced by a table-format
-    commit, same two-phase structure (north rule: resumable
-    mid-pipeline after executor loss)."""
-    import json
-
+    transactional_batch: runs the source as that batch (see
+    ``execute``): crash-safe two-phase sink commits, which need
+    lineage_path."""
     from ..fixtures import extract_log_line, load_pages_full
-    from ..lineage import (
-        committed_ranges,
-        observe_lineage,
-        resume_filter,
-        write_lineage,
-    )
-    from ..sinks.writer import fan_out, hadoop_path
 
-    lineage_path = config.get("lineage_path")
-    if transactional_batch is not None and not lineage_path:
+    if transactional_batch is not None and not config.get("lineage_path"):
         raise ValueError("transactional_batch requires lineage_path")
 
     src = config["source"]
@@ -193,31 +174,63 @@ def run_job(
         df = spark.read.parquet(src["path"])
     else:
         raise ValueError(f"unknown source kind: {src['kind']}")
+    return execute(spark, df, config, run_id, transactional_batch)
 
+
+def execute(
+    spark: SparkSession,
+    df: DataFrame,
+    config: dict,
+    run_id: str,
+    batch: str | None,
+) -> dict[str, int]:
+    """Stages → fan-out sinks → lineage over df, the source of one run
+    (``run_job``) or one micro-batch (``run_stream``). Returns per-sink
+    row counts.
+
+    Under a batch, each sink's layout follows its mode: an
+    ``overwrite`` sink's rows go to ``<path>/batch=<batch>`` (visible;
+    partition-discovery compatible), an ``append`` sink's to files
+    named ``<batch>-part-*`` in ``<path>``. Either way an attempt of
+    the batch replaces what an earlier attempt left, so a re-driven
+    batch writes each row once.
+
+    With lineage_path the run commits one lineage row after every sink
+    is in place (stage ``export``, or ``export:<batch>``), and skips
+    source ranges this run_id already committed. A batch whose stage is
+    committed is a no-op that returns its recorded counts. This is the
+    two-phase commit of a transactional batch: fan_out stages the write
+    in an invisible ``_staging_*`` dir (the leading underscore hides it
+    from Spark readers) and moves each sink's rows into place; the
+    lineage row is phase 2. A crash during the write leaves only the
+    staging dir, a crash after the moves leaves batch output with no
+    lineage row; the next attempt replaces both. This is the
+    local-fs/HDFS model of an Iceberg snapshot commit (north rule:
+    resumable mid-pipeline after executor loss).
+
+    A frame without the lineage_key column (a text-line stream)
+    commits a NULL range and is never resume-filtered; the stream's
+    checkpoint is its resume."""
+    import json
+
+    from .. import lineage
+    from ..sinks import writer
+
+    lineage_path = config.get("lineage_path")
     key = config.get("lineage_key", "page_id")
-    batch_stage = None
+    stage = "export" if batch is None else f"export:{batch}"
     if lineage_path:
         # resume: skip ranges already committed for this run_id
         # (min-pending-offset semantics, offset_tracker.rs:50-63); the
         # checkpoint is read once, and not at all when none exists
-        cp = committed_ranges(spark, lineage_path, run_id)
+        cp = lineage.committed_ranges(spark, lineage_path, run_id)
         committed = cp.collect() if cp is not None else []
-        if transactional_batch is not None:
-            batch_stage = f"export:{transactional_batch}"
-            done = [r for r in committed if r["stage"] == batch_stage]
+        if batch is not None:
+            done = [r for r in committed if r["stage"] == stage]
             if done:
-                # fully committed batch — idempotent re-drive is a
-                # no-op; return the recorded counts
                 return json.loads(done[0]["sink_counts"])
-            # roll back orphans from a crashed prior attempt
-            for s in config["sinks"]:
-                if s.get("path"):
-                    fs, p = hadoop_path(
-                        spark, f"{s['path']}/batch={transactional_batch}"
-                    )
-                    fs.delete(p, True)
-        if committed:
-            df = resume_filter(df, cp, key=key)
+        if committed and key in df.columns:
+            df = lineage.resume_filter(df, cp, key=key)
 
     out = build_pipeline(config).run(df)
 
@@ -250,14 +263,11 @@ def run_job(
             }
         )
 
-    if batch_stage is not None:
-        # two-phase commit: fan_out stages its write in a hidden
-        # _staging_<batch>-* dir and renames each sink's rows into the
-        # visible batch dir; the lineage commit below is phase 2
+    if batch is not None:
         sinks = [
-            {**s, "path": f"{s['path']}/batch={transactional_batch}",
-             "mode": "overwrite"}
-            if s.get("path") and s.get("format", "parquet") != "noop"
+            {**s, "path": f"{s['path']}/batch={batch}"}
+            if s.get("mode", "overwrite") == "overwrite"
+            and s.get("format", "parquet") != "noop"
             else s
             for s in sinks
         ]
@@ -265,23 +275,23 @@ def run_job(
     # the lineage range and counters ride the sink write itself: no
     # persist, and they come from the very tasks that wrote the rows
     if lineage_path:
-        out, observed = observe_lineage(out, key)
-    counts = fan_out(
+        out, observed = lineage.observe_lineage(out, key)
+    counts = writer.fan_out(
         out,
         sinks,
         max_records_per_file=config.get("batch", {}).get(
             "max_records_per_file", 8192
         ),
-        batch=transactional_batch,
+        batch=batch,
     )
     if lineage_path:
         # commit marks the run processed; a crash before here is healed
-        # by the next attempt's orphan rollback
-        write_lineage(
+        # by the next attempt, which replaces the batch's output
+        lineage.write_lineage(
             observed.get,
             lineage_path,
             run_id=run_id,
-            stage=batch_stage or "export",
+            stage=stage,
             sink_counts=counts,
         )
     return counts

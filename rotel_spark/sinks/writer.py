@@ -140,9 +140,14 @@ def _write_group(df, targets, fmt, partition_by, max_records_per_file,
         mode = spec.get("mode", "overwrite")
         if not counts[spec["name"]]:
             # a partitioned write makes no directory for an empty sink:
-            # write its schema-only output as a write of its own would,
-            # but leave an existing append sink as it is
-            if mode == "overwrite" or not fs.exists(dst):
+            # drop an earlier attempt's files, then write schema-only
+            # output as a write of its own would, unless an append sink
+            # holds other output
+            levels = "*/" * len(partition_by)
+            if mode == "append" and batch is not None:
+                _delete(fs, Path(dst, f"{levels}{batch}-part-*"))
+            if mode == "overwrite" or not fs.globStatus(
+                    Path(dst, f"{levels}*part-*")):
                 _save(df.limit(0), fmt, partition_by, mode, spec["path"],
                       max_records_per_file)
             continue
@@ -187,8 +192,7 @@ def _move_files(Path, fs, src, dst, depth: int, batch: str | None) -> None:
     prefix = f"{batch}-" if batch is not None else ""
     levels = "*/" * depth
     if batch is not None:
-        for old in fs.globStatus(Path(dst, f"{levels}{prefix}*")) or []:
-            fs.delete(old.getPath(), False)
+        _delete(fs, Path(dst, f"{levels}{prefix}part-*"))
     fs.mkdirs(dst)
     for f in fs.globStatus(Path(src, f"{levels}part-*")):
         p = f.getPath()
@@ -200,6 +204,11 @@ def _move_files(Path, fs, src, dst, depth: int, batch: str | None) -> None:
         if depth:
             fs.mkdirs(target.getParent())
         _rename(fs, p, target)
+
+
+def _delete(fs, pattern) -> None:
+    for old in fs.globStatus(pattern) or []:
+        fs.delete(old.getPath(), False)
 
 
 def _rename(fs, src, dst) -> None:

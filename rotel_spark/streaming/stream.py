@@ -1,4 +1,4 @@
-"""Micro-batch streaming mode — the same stages, driven by a stream.
+"""Micro-batch streaming mode — the same path, driven by a stream.
 
 The reference is a continuous pipeline with 200 ms batch-timeout
 flushes (/root/reference/src/topology/batch.rs:15-23) and bounded
@@ -7,11 +7,15 @@ channels for backpressure. Structured Streaming mapping (SURVEY.md
 
   * trigger(processingTime=...) subsumes the batch timeout
   * maxFilesPerTrigger bounds admission (backpressure analog)
-  * foreachBatch reuses the *identical* batch stage functions — one
-    code path for batch and streaming (the whole point of the design)
+  * foreachBatch hands each micro-batch to ``plans.pipeline.execute``,
+    the function ``run_job`` runs: one code path for batch and
+    streaming (the whole point of the design), quarantine sink and
+    lineage included
   * checkpointLocation records which micro-batches committed; a batch
-    re-delivered after a crash replaces its own files in every sink, so
-    each line lands once
+    re-delivered after a crash replaces its own output in every sink
+    (sinks default to ``append``: batch-named files in the sink's
+    path), so each line lands once, and with lineage_path it commits
+    its lineage row once
 
 No event-time windowing: the reference has none (SURVEY.md §2.8 —
 parsed-or-observed timestamp is the only late-data policy), so no
@@ -26,7 +30,7 @@ import zlib
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.pipeline import build_pipeline
+from ..plans.pipeline import execute
 
 
 def stream_lines(
@@ -50,20 +54,19 @@ def run_stream(
     trigger_ms: int = 200,
     available_now: bool = False,
 ):
-    """Drive the config-declared pipeline per micro-batch via
-    foreachBatch; returns the StreamingQuery."""
-    pipe = build_pipeline(config)
-    sinks = [{"mode": "append", **s} for s in config["sinks"]]
-    # batch ids name the files each micro-batch moves into its sinks, so
-    # one re-delivered after a crash replaces what its first attempt
-    # wrote; the checkpoint digest keeps another stream's batches with
-    # the same ids in a shared sink dir apart
+    """Run ``execute`` on each micro-batch via foreachBatch; returns the
+    StreamingQuery."""
+    cfg = {**config,
+           "sinks": [{"mode": "append", **s} for s in config["sinks"]]}
+    # batch ids name each micro-batch's files and lineage stage, so one
+    # re-delivered after a crash replaces what its first attempt wrote;
+    # the checkpoint digest keeps another stream's batches with the same
+    # ids in a shared sink dir (and lineage table) apart
     stream_tag = f"{zlib.crc32(checkpoint_dir.encode()):08x}"
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        from ..sinks.writer import fan_out
-
-        fan_out(pipe.run(batch_df), sinks, batch=f"{stream_tag}-{batch_id}")
+        execute(spark, batch_df, cfg, run_id=stream_tag,
+                batch=f"{stream_tag}-{batch_id}")
 
     writer = source.writeStream.foreachBatch(_process).option(
         "checkpointLocation", checkpoint_dir

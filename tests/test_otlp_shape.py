@@ -1,10 +1,9 @@
-"""rows ↔ ResourceLogs tree round-trip + python processor + kafka key."""
+"""rows ↔ ResourceLogs tree round-trip + kafka key."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from rotel_spark.operators.python_processor import chain, pandas_processor
 from rotel_spark.sinks.otlp_shape import (
     from_resource_logs_tree,
     to_resource_logs_tree,
@@ -79,48 +78,6 @@ def test_export_request_proto_json(spark):
 
     per_resource = to_export_request_json(tree, one_request=False)
     assert per_resource.count() == 4
-
-
-def test_pandas_processor_mutate_and_delete(spark):
-    df = spark.range(50).selectExpr("id", "id * 2 as v")
-
-    def proc(pdf):
-        pdf = pdf[pdf.id % 5 != 0].copy()  # delete records
-        pdf["v"] = pdf["v"] + 1  # mutate
-        return pdf
-
-    out = pandas_processor(df, proc)
-    rows = {r.id: r.v for r in out.collect()}
-    assert len(rows) == 40
-    assert rows[1] == 3
-
-
-def test_pandas_processor_error_policy(spark):
-    df = spark.range(10).selectExpr("id", "id as v")
-
-    def boom(pdf):
-        raise RuntimeError("panic")
-
-    assert pandas_processor(df, boom, on_error="drop").count() == 0
-    assert pandas_processor(df, boom, on_error="preserve").count() == 10
-    import pytest
-    from py4j.protocol import Py4JJavaError  # noqa: F401
-
-    with pytest.raises(Exception):
-        pandas_processor(df, boom, on_error="fail").count()
-
-
-def test_processor_chain_order(spark):
-    df = spark.range(5).selectExpr("id", "cast(0 as long) as v")
-
-    def p1(d):
-        return pandas_processor(d, lambda p: p.assign(v=p.v + 1))
-
-    def p2(d):
-        return pandas_processor(d, lambda p: p.assign(v=p.v * 10))
-
-    out = chain(df, [p1, p2])
-    assert all(r.v == 10 for r in out.collect())
 
 
 def test_kafka_key_order_insensitive(spark):

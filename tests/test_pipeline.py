@@ -303,6 +303,22 @@ def test_fanout_write_groups(spark, tmp_path):
     assert not list(tmp_path.glob("_staging_*"))
 
 
+def test_fanout_retried_batch_empties_append_sink(spark, tmp_path):
+    """A retried batch replaces its earlier attempt's files in every
+    append sink, also in one it no longer writes a row to."""
+    sinks = [
+        {"name": n, "predicate": p, "path": str(tmp_path / n),
+         "mode": "append"}
+        for n, p in (("a", "id % 2 = 0"), ("b", "id % 2 = 1"))
+    ]
+    assert fan_out(spark.range(10), sinks, batch="x-1") == {"a": 5, "b": 5}
+    assert fan_out(spark.range(0, 10, 2), sinks, batch="x-1") == {
+        "a": 5, "b": 0
+    }
+    assert spark.read.parquet(str(tmp_path / "a")).count() == 5
+    assert spark.read.parquet(str(tmp_path / "b")).count() == 0
+
+
 def _bench_config(spark, sf_unit, tmp_path) -> tuple[str, dict]:
     import bench
     from rotel_spark.fixtures import materialize_pages

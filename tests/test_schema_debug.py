@@ -1,11 +1,10 @@
-"""LogRecordRow normalization, debug inspector, quarantine stage."""
+"""LogRecordRow normalization, quarantine stage."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from rotel_spark.fixtures import extract_log_line, load_pages_full
-from rotel_spark.operators.debug import inspect
 from rotel_spark.parsers.auto import parse_auto
 from rotel_spark.schema import (
     LOG_RECORD_COLUMNS,
@@ -59,16 +58,6 @@ def test_log_record_row_defaults(spark):
     assert row.ServiceName == ""
     assert row.ScopeAttributes == {}
     assert row.SeverityNumber == 9
-
-
-def test_debug_inspector_counters(spark, sf_unit):
-    df = _parsed(spark, sf_unit)
-    out, obs = inspect(df, "t")
-    total = out.count()
-    got = obs.get
-    assert got["rows"] == total
-    assert got["parsed"] + got["errors"] == total
-    assert got["errors"] == df.filter("NOT parse_ok").count()
 
 
 def test_quarantine_stage(spark, sf_unit, tmp_path):
