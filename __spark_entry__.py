@@ -21,6 +21,7 @@ from rotel_spark.fixtures import (
     lang_locale_sql,
     load_pages,
     pages_with_clause,
+    scan_parquet,
     tld_registry_sql,
 )
 from rotel_spark.functions import text as textfn
@@ -73,34 +74,13 @@ def _parsed(spark: SparkSession, sf_dir: str) -> DataFrame:
 # queries
 # ---------------------------------------------------------------------------
 
-# Per-process reuse of the base-table scan PLANS, keyed by (session,
-# path) — the driver's parquet inputs are immutable for the life of a
-# run, and re-creating the scan costs footer/schema re-inference plus
-# py4j round trips on every query construction (same rationale as
-# rotel_spark.fixtures load_pages / parsers.auto expression caches; no
-# data or results are cached, only the unresolved plan object). The
-# value holds a strong session ref so an id() can't be reused by a
-# successor session while the entry exists.
-_SCAN_CACHE: dict = {}
-
-
-def _scan(spark: SparkSession, path: str) -> DataFrame:
-    key = (id(spark), path)
-    hit = _SCAN_CACHE.get(key)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
-    df = spark.read.parquet(path)
-    _SCAN_CACHE[key] = (spark, df)
-    return df
-
-
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents table spread across cores: the driver ships ONE
     parquet file per sf, which caps any scan at 1-2 tasks regardless
     of parallelism (maxPartitionBytes); a tiny repartition unlocks the
     pandas-UDF / shingle stages. At 100 TB the table has natural
     file-level parallelism and this is a no-op choice."""
-    return _scan(spark, f"{sf_dir}/documents.parquet").repartition(
+    return scan_parquet(spark, f"{sf_dir}/documents.parquet").repartition(
         spark.sparkContext.defaultParallelism
     )
 
@@ -112,7 +92,7 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     xray_segment 4.4 s single-task → 1.3 s spread). Queries whose
     first shuffle comes later (aggregate-first shapes) read the raw
     scan instead and skip the repartition."""
-    return _scan(spark, f"{sf_dir}/events.parquet").repartition(
+    return scan_parquet(spark, f"{sf_dir}/events.parquet").repartition(
         spark.sparkContext.defaultParallelism
     )
 
@@ -398,7 +378,7 @@ def q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-3 neighbors for the first 5 vectors."""
     from rotel_spark.operators.similarity import brute_force_topk
 
-    emb = _scan(spark, f"{sf_dir}/embeddings.parquet").withColumn(
+    emb = scan_parquet(spark, f"{sf_dir}/embeddings.parquet").withColumn(
         "embedding", F.col("embedding").cast("array<double>")
     )
     queries = emb.filter(F.col("vec_id") < 5)
@@ -422,7 +402,7 @@ def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     pruning, not a scan."""
     from rotel_spark.operators.similarity import fixed_centroids, ivf_topk
 
-    emb = _scan(spark, f"{sf_dir}/embeddings.parquet").withColumn(
+    emb = scan_parquet(spark, f"{sf_dir}/embeddings.parquet").withColumn(
         "embedding", F.col("embedding").cast("array<double>")
     )
     queries = emb.filter(F.col("vec_id") < 5)
@@ -573,7 +553,7 @@ def q_emf_dimension_grouping(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's one true hash aggregation (awsemf
     transformer.rs:46-75): group datapoints by (namespace,
     dimension-set, timestamp-bucket) and emit one record per group."""
-    ev = _scan(spark, f"{sf_dir}/events.parquet")
+    ev = scan_parquet(spark, f"{sf_dir}/events.parquet")
     return (
         ev.groupBy(
             F.col("event_type").alias("namespace"),
@@ -590,7 +570,7 @@ def q_emf_dimension_grouping(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_offset_min_tracking(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Min-pending-offset commit rule (offset_tracker.rs:49-63): per
     source partition, the committable offset is min(pending)."""
-    ev = _scan(spark, f"{sf_dir}/events.parquet")
+    ev = scan_parquet(spark, f"{sf_dir}/events.parquet")
     # model: user_id = source partition, event_id = offset, 'error'
     # rows = still-pending acks
     pending = ev.filter(F.col("event_type") == "error")
@@ -701,7 +681,7 @@ def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     constants (similarity.near_dup_oracle_sql) → hash-exact."""
     from rotel_spark.operators.similarity import embedding_near_dup
 
-    emb = _scan(spark, f"{sf_dir}/embeddings.parquet").withColumn(
+    emb = scan_parquet(spark, f"{sf_dir}/embeddings.parquet").withColumn(
         "embedding", F.col("embedding").cast("array<double>")
     )
     pairs = embedding_near_dup(emb, threshold=0.4, bands=8, band_bits=4)
@@ -762,7 +742,7 @@ def q_span_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-trace rollup. Oracle derives ids/durations by arithmetic."""
     from rotel_spark.telemetry import events_to_spans
 
-    events = _scan(spark, f"{sf_dir}/events.parquet")
+    events = scan_parquet(spark, f"{sf_dir}/events.parquet")
     spans = events_to_spans(events)
     return spans.groupBy("trace_id").agg(
         F.count(F.lit(1)).alias("n_spans"),
@@ -784,7 +764,7 @@ def q_span_tree_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     trip; n_batches follows the ceil rule."""
     from rotel_spark.telemetry import events_to_spans, spans_to_resource_tree
 
-    events = _scan(spark, f"{sf_dir}/events.parquet")
+    events = scan_parquet(spark, f"{sf_dir}/events.parquet")
     spans = events_to_spans(events)
     tree = spans_to_resource_tree(spans, max_spans_per_resource=512)
     flat = tree.select(
@@ -811,7 +791,7 @@ def q_emf_metrics_grouping(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys (guide §2.3)."""
     from rotel_spark.telemetry import emf_group_events
 
-    events = _scan(spark, f"{sf_dir}/events.parquet")
+    events = scan_parquet(spark, f"{sf_dir}/events.parquet")
     return emf_group_events(events)
 
 
@@ -828,7 +808,7 @@ def q_otlp_trace_proto_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from rotel_spark.telemetry import events_to_spans, spans_to_resource_tree
 
-    events = _scan(spark, f"{sf_dir}/events.parquet")
+    events = scan_parquet(spark, f"{sf_dir}/events.parquet")
     tree = spans_to_resource_tree(
         events_to_spans(events), max_spans_per_resource=512
     )
@@ -885,7 +865,7 @@ def q_otlp_metrics_proto_roundtrip(spark: SparkSession, sf_dir: str) -> DataFram
     )
     from rotel_spark.telemetry import events_to_datapoints
 
-    events = _scan(spark, f"{sf_dir}/events.parquet")
+    events = scan_parquet(spark, f"{sf_dir}/events.parquet")
     reqs = to_export_metrics_request_proto(events_to_datapoints(events))
 
     def _decode(batches):
@@ -957,7 +937,7 @@ def q_metric_type_batch_sizing(spark: SparkSession, sf_dir: str) -> DataFrame:
         metrics_batch_sizing,
     )
 
-    events = _scan(spark, f"{sf_dir}/events.parquet")
+    events = scan_parquet(spark, f"{sf_dir}/events.parquet")
     return metrics_batch_sizing(
         events_to_typed_datapoints(events), max_size=2048
     )
@@ -973,7 +953,7 @@ def q_emf_document(spark: SparkSession, sf_dir: str) -> DataFrame:
     proving each document shape decodes."""
     from rotel_spark.telemetry import emf_documents
 
-    events = _scan(spark, f"{sf_dir}/events.parquet")
+    events = scan_parquet(spark, f"{sf_dir}/events.parquet")
     docs = emf_documents(events)
     num = r'([-0-9.eE]+)[,}]'
     is_hist = F.col("metric_type").isin(
@@ -1060,7 +1040,7 @@ def q_emf_dim_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     `rlike` + array filter — no Python in the hot path."""
     from rotel_spark.telemetry import filter_dimensions
 
-    events = _scan(spark, f"{sf_dir}/events.parquet")
+    events = scan_parquet(spark, f"{sf_dir}/events.parquet")
     cand = F.array(
         F.lit("service"),
         F.lit("event_type"),
@@ -1222,7 +1202,7 @@ def q_embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
         with_quantized,
     )
 
-    emb = _scan(spark, f"{sf_dir}/embeddings.parquet").withColumn(
+    emb = scan_parquet(spark, f"{sf_dir}/embeddings.parquet").withColumn(
         "embedding", F.col("embedding").cast("array<double>")
     )
     q = with_quantized(emb)
@@ -1264,7 +1244,7 @@ def q_fluent_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
         parse_fluent_frames,
     )
 
-    events = _scan(spark, f"{sf_dir}/events.parquet")
+    events = scan_parquet(spark, f"{sf_dir}/events.parquet")
     us_col = F.unix_micros(F.col("ts").cast("timestamp"))
     src = events.select(
         "event_id", "user_id", "event_type", "props",
@@ -1435,7 +1415,7 @@ def q_clickhouse_trace_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     from rotel_spark.schema import to_span_row
     from rotel_spark.telemetry import events_to_spans
 
-    events = _scan(spark, f"{sf_dir}/events.parquet")
+    events = scan_parquet(spark, f"{sf_dir}/events.parquet")
     spans = events_to_spans(events)
     is_err = F.col("name") == "error"
     is_root = F.col("parent_span_id") == ""
@@ -1513,7 +1493,7 @@ def q_clickhouse_metric_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     from rotel_spark.schema import to_metric_rows
     from rotel_spark.telemetry import events_to_typed_datapoints
 
-    events = _scan(spark, f"{sf_dir}/events.parquet")
+    events = scan_parquet(spark, f"{sf_dir}/events.parquet")
     rows = to_metric_rows(events_to_typed_datapoints(events))
 
     def facts(t: str, frame: DataFrame) -> DataFrame:
@@ -1802,7 +1782,7 @@ def q_emf_document_detailed(spark: SparkSession, sf_dir: str) -> DataFrame:
     generator's deterministic quantile_values)."""
     from rotel_spark.telemetry import emf_documents
 
-    events = _scan(spark, f"{sf_dir}/events.parquet")
+    events = scan_parquet(spark, f"{sf_dir}/events.parquet")
     docs = emf_documents(events, detailed_metrics=True).filter(
         F.col("metric_type") == "summary"
     )
@@ -1846,7 +1826,7 @@ def q_emf_delta_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     WRAP = 1_000_000_000  # micro-units
     EXPIRY = 21_600 * 10**9  # 6h in ns
-    events = _scan(spark, f"{sf_dir}/events.parquet")
+    events = scan_parquet(spark, f"{sf_dir}/events.parquet")
     dps = events_to_typed_datapoints(events)
     keys = ["namespace", "metric_name", "service", "event_type"]
     w = Window.partitionBy(*keys).orderBy("ts_minute_nano")

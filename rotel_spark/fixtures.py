@@ -246,7 +246,26 @@ def register_documents(
     df.createOrReplaceTempView("documents")
 
 
-_PAGES_DF_CACHE: dict = {}
+# (session, {path: DataFrame}): scan plans of the current session only
+_SCANS: tuple = (None, {})
+
+
+def scan_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, reused per (session, path).
+
+    Only for immutable inputs: re-creating a scan pays footer/schema
+    re-inference plus py4j round trips on every query construction. No
+    data is cached, only the unresolved plan object, like the
+    expression caches in parsers.auto/nginx. The cache holds the scans
+    of one session: the first lookup from another session drops them,
+    so a stopped session is not kept alive by its plans."""
+    global _SCANS
+    if _SCANS[0] is not spark:
+        _SCANS = (spark, {})
+    scans = _SCANS[1]
+    if path not in scans:
+        scans[path] = spark.read.parquet(path)
+    return scans[path]
 
 
 def pages_cache_path(base: str, sf_dir: str, reps: int) -> str:
@@ -284,22 +303,9 @@ def load_pages(
     if cache_base:
         p = pages_cache_path(cache_base, sf_dir, reps)
         if os.path.exists(os.path.join(p, "_SUCCESS")):
-            # Reuse the scan DataFrame per (session, path): it is an
-            # immutable unresolved plan over a _SUCCESS-finalized dir
-            # (materialize_pages never rewrites one), and re-creating
-            # it pays footer/schema re-inference plus py4j round trips
-            # on EVERY query construction. No data is cached — only
-            # the plan object, exactly like the expression caches in
-            # parsers.auto/nginx. The value keeps a strong ref to its
-            # session so an id() can never be reused by a successor
-            # session while the entry exists.
-            key = (id(spark), p)
-            hit = _PAGES_DF_CACHE.get(key)
-            if hit is not None and hit[0] is spark:
-                return hit[1]
-            df = spark.read.parquet(p)
-            _PAGES_DF_CACHE[key] = (spark, df)
-            return df
+            # a _SUCCESS-finalized dir is immutable (materialize_pages
+            # never rewrites one)
+            return scan_parquet(spark, p)
     fast = reps > 64
     register_documents(
         spark,

@@ -68,9 +68,10 @@ def write_lineage(
 ) -> None:
     """Append the committed range + counters observed for this run: one
     row (run_id, stage, src_min, src_max, rows_in, rows_parsed,
-    rows_dropped, sink_counts, committed_at)."""
+    rows_dropped, sink_counts, committed_at). The row is built on one
+    partition, so a commit is one task writing one file."""
     n_in, n_parsed = observed["rows_in"], observed["rows_parsed"]
-    SparkSession.active().range(1).select(
+    SparkSession.active().range(0, 1, numPartitions=1).select(
         F.lit(run_id).alias("run_id"),
         F.lit(stage).alias("stage"),
         *[

@@ -192,44 +192,10 @@ def minhash_dedup(
 SIMHASH_BITS = 60
 
 
-def simhash_votes_sql(col: str) -> str:
-    """Spark-SQL expression: per-bit majority-vote counters (array of
-    60 longs) for a SimHash over whitespace tokens.
-
-    Token hash = first 15 hex chars of md5 (60 bits — fits BIGINT in
-    both engines); votes via higher-order array functions. Pure JVM
-    expressions — codegen'd, no Python — and every primitive (md5,
-    substring, conv/hex-cast, shift, &) has an exact DuckDB twin
-    (simhash_oracle_sql), so the signature is oracle-checkable
-    bit-for-bit.
-    """
-    toks = f"filter(split(lower(coalesce({col}, '')), '\\\\s+'), t -> t != '')"
-    hs = (
-        f"transform({toks},"
-        " t -> cast(conv(substring(md5(t), 1, 15), 16, 10) as bigint))"
-    )
-    return (
-        f"aggregate({hs}, array_repeat(0L, {SIMHASH_BITS}),"
-        f" (acc, h) -> transform(sequence(0, {SIMHASH_BITS - 1}),"
-        " b -> acc[b] + if(((shiftright(h, b)) & 1L) = 1L, 1L, -1L)))"
-    )
-
-
-def simhash_from_votes_sql(votes_col: str) -> str:
-    """Fold the vote array into the 60-bit signature. Kept separate
-    from simhash_votes_sql so the (expensive) vote aggregate is a
-    named column evaluated once, not inlined 60×."""
-    return (
-        f"aggregate(transform(sequence(0, {SIMHASH_BITS - 1}),"
-        f" b -> if(element_at({votes_col}, b + 1) > 0,"
-        " shiftleft(1L, b), 0L)), 0L, (a, x) -> a | x)"
-    )
-
-
 def simhash_oracle_ctes(table: str, id_col: str, text_col: str) -> str:
-    """DuckDB twin of simhash_votes_sql/simhash_from_votes_sql as CTEs
-    (identical semantics, staged so md5 runs once per token):
-    produces a relation `sims(id, simhash)`."""
+    """DuckDB twin of simhash64 as CTEs (identical semantics, staged
+    so md5 runs once per token): produces a relation
+    `sims(id, simhash)`."""
     toks = (
         f"list_filter(regexp_split_to_array(lower(coalesce({text_col},"
         " '')), '\\s+'), t -> t != '')"
@@ -270,12 +236,10 @@ def simhash64(df: DataFrame, text_col: str = "text") -> DataFrame:
     (tokens × 60) bit matrix was the kernel's hot spot — unbuffered
     scatter adds plus a ~GB-scale intermediate; measured at 50k docs /
     2.7M tokens: 12.7 s → 0.56 s for the numpy section, bit-identical
-    output. Semantics are bit-identical to the expression form
-    (simhash_votes_sql) and to the DuckDB oracle (simhash_oracle_ctes):
-    same md5-60bit token hash, same ASCII \\s+ split, same majority
-    rule. The pure-expression variant exists (simhash_votes_sql) but a
-    fresh 60-long array per token defeats codegen (measured 102 s / 5k
-    docs vs ~2 s for this kernel).
+    output. Semantics are bit-identical to the DuckDB oracle
+    (simhash_oracle_ctes): same md5-60bit token hash, same ASCII \\s+
+    split, same majority rule. It is not a higher-order array
+    expression because a fresh 60-long array per token defeats codegen (measured 102 s / 5k docs vs ~2 s for this kernel).
     """
     import hashlib
     import re

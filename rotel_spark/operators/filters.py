@@ -35,15 +35,6 @@ def mod_sample(
     return df.filter((F.col(key) % denominator) < numerator)
 
 
-def hash_sample(df: DataFrame, key: str, fraction: float) -> DataFrame:
-    """Deterministic hash-based sample for non-numeric keys: keep if
-    pmod(xxhash64(key), 10000) < fraction*10000."""
-    threshold = int(fraction * 10000)
-    return df.filter(
-        F.pmod(F.xxhash64(F.col(key)), F.lit(10000)) < threshold
-    )
-
-
 def stratified_sample(
     df: DataFrame,
     id_col: str,

@@ -4,35 +4,17 @@ Baseline: brute-force cosine top-k — the (small, bounded) query set is
 shipped to every task as a closure constant and each Arrow batch is
 scored with one numpy matmul; only the per-batch top-k survivors are
 shuffled, so shuffle volume is k rows per query per batch regardless
-of corpus size. Scale paths: random-hyperplane LSH bucketing (each
-probe scans 1/2^planes of the corpus) and an IVF-style coarse
-quantizer (search n_probe nearest cells; at 100 TB the cell id is a
-partition key → partition pruning).
+of corpus size. Scale path: an IVF-style coarse quantizer (search
+n_probe nearest cells; at 100 TB the cell id is a partition key →
+partition pruning). Near-duplicate pairs come from banded
+random-hyperplane LSH (hyperplane_bands) plus an exact verify.
 """
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-
-def _dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def _norm(a: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v)
-    )
-
-
-def cosine(a: Column, b: Column) -> Column:
-    return _dot(a, b) / (_norm(a) * _norm(b))
 
 
 def _collect_queries(
@@ -140,32 +122,6 @@ def lsh_planes(dim: int, planes: int, seed: int = 42) -> np.ndarray:
     return w
 
 
-def hyperplane_signature(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    planes: int = 16,
-    seed: int = 42,
-    out_col: str = "lsh_bucket",
-) -> DataFrame:
-    """Random-hyperplane LSH bucket id (deterministic planes).
-
-    Plane weights rebuilt identically inside every task (lsh_planes) —
-    no state shipped. Arrow-batched: one matmul per batch.
-    """
-
-    @F.pandas_udf(T.IntegerType())
-    def _bucket(vecs: pd.Series) -> pd.Series:
-        out = np.zeros(len(vecs), dtype=np.int32)
-        arr = np.array([np.asarray(v, dtype=np.float64) for v in vecs])
-        if len(arr):
-            mat = lsh_planes(arr.shape[1], planes, seed)
-            signs = (arr @ mat) > 0
-            out = signs.dot(1 << np.arange(planes)).astype(np.int32)
-        return pd.Series(out)
-
-    return df.withColumn(out_col, _bucket(F.col(vec_col)))
-
-
 def hyperplane_bands(
     df: DataFrame,
     vec_col: str = "embedding",
@@ -245,43 +201,6 @@ JOIN e ea ON ea.id = c.id_a
 JOIN e eb ON eb.id = c.id_b
 WHERE list_cosine_similarity(ea.v, eb.v) >= {threshold}
 """
-
-
-def lsh_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    planes: int = 8,
-    seed: int = 42,
-) -> DataFrame:
-    """Approximate top-k: only score within the query's LSH bucket.
-
-    At 100 TB the bucket column is a partition key — each query touches
-    1/2^planes of the corpus. Recall is tunable via planes/multi-probe.
-    """
-    c = hyperplane_signature(corpus, vec_col, planes, seed).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cvec"),
-        "lsh_bucket",
-    )
-    q = hyperplane_signature(queries, vec_col, planes, seed).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qvec"),
-        "lsh_bucket",
-    )
-    scored = c.join(F.broadcast(q), "lsh_bucket").withColumn(
-        "score", cosine(F.col("qvec"), F.col("cvec"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "score")
-    )
 
 
 def ivf_build_centroids(

@@ -155,32 +155,6 @@ def to_log_record_row(
 # Trace spans — SpanRow mirror
 # ---------------------------------------------------------------------------
 
-SPAN_ROW_COLUMNS = [
-    # get_span_row_col_keys (schema.rs:56-83) — exact order
-    "Timestamp",
-    "TraceId",
-    "SpanId",
-    "ParentSpanId",
-    "TraceState",
-    "SpanName",
-    "SpanKind",
-    "ServiceName",
-    "ResourceAttributes",
-    "ScopeName",
-    "ScopeVersion",
-    "SpanAttributes",
-    "Duration",
-    "StatusCode",
-    "StatusMessage",
-    "Events.Timestamp",
-    "Events.Name",
-    "Events.Attributes",
-    "Links.TraceId",
-    "Links.SpanId",
-    "Links.TraceState",
-    "Links.Attributes",
-]
-
 # public OTLP trace.proto SpanKind enum → ClickHouse strings
 # (transform_traces.rs:148-162)
 _SPAN_KINDS = [

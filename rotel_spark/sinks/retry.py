@@ -1,64 +1,26 @@
-"""Retry classification + backoff — exporter failure semantics.
+"""Retry classification — exporter failure semantics.
 
-Mirrors /root/reference/src/exporters/http/retry.rs:
-  * status classes (:127-153): HTTP 200-202 success; 408, 429,
-    500-504 retryable; anything else permanent. gRPC: Ok success;
-    Unavailable/Internal/DeadlineExceeded/ResourceExhausted retryable.
-  * backoff (:20-33, :206-240): exponential from 5 s, capped at 30 s
-    per interval, retries stop when the next sleep would pass the
-    300 s max elapsed deadline (indefinite_retry overrides).
+Mirrors the status classes of the reference's
+src/exporters/http/retry.rs (:127-153): HTTP 200-202 success; 408,
+429, 500-504 retryable; a transport error (no status) retryable;
+anything else permanent.
 
-Batch mapping: a Spark job has no in-flight request to sleep on —
-retry becomes DATA. Failed sink batches carry a status; classify_expr
-splits them into success / retryable / permanent, retryable rows land
-in a retry table stamped with attempt count + next_attempt_at from the
-deterministic backoff schedule (jitter is omitted: batch re-drives are
-scheduled, and determinism keeps the retry table replayable), and
-permanent failures dead-letter. The reference's jittered sleep is a
-live-connection concern with no batch analog.
+Batch mapping: a Spark job has no in-flight request to sleep on, so
+retry becomes data. A column of sink statuses is classified into
+success / retryable / permanent by classify_http_expr (a JVM CASE),
+and classify_http_sql is the same CASE for the DuckDB oracle. The
+reference's jittered backoff sleep is a live-connection concern with
+no batch analog.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-GRPC_RETRYABLE = {4, 8, 13, 14}  # DeadlineExceeded, ResourceExhausted,
-#                                  Internal, Unavailable (retry.rs:144-151)
-
-
-@dataclass(frozen=True)
-class RetryConfig:
-    """Defaults per retry.rs:44-51 / README.md:1075-1086."""
-
-    initial_backoff: float = 5.0
-    max_backoff: float = 30.0
-    max_elapsed: float = 300.0
-    indefinite: bool = False
-
-
-def classify_http(status: int | None) -> str:
-    if status is None:
-        return "retryable"  # transport error: connect/timeout (:74-97)
-    if 200 <= status <= 202:
-        return "success"
-    if status in (408, 429) or 500 <= status <= 504:
-        return "retryable"
-    return "permanent"
-
-
-def classify_grpc(code: int | None) -> str:
-    if code is None:
-        return "retryable"
-    if code == 0:
-        return "success"
-    return "retryable" if code in GRPC_RETRYABLE else "permanent"
 
 
 def classify_http_expr(status: Column) -> Column:
-    """Column twin of classify_http (JVM CASE, oracle-portable)."""
+    """Class of an HTTP status column (JVM CASE, oracle-portable)."""
     return (
         F.when(status.isNull(), F.lit("retryable"))
         .when((status >= 200) & (status <= 202), F.lit("success"))
@@ -78,93 +40,3 @@ def classify_http_sql(col: str) -> str:
         f"WHEN {col} IN (408, 429) OR ({col} >= 500 AND {col} <= 504) "
         "THEN 'retryable' ELSE 'permanent' END"
     )
-
-
-def backoff_schedule(cfg: RetryConfig = RetryConfig()) -> list[float]:
-    """Deterministic retry sleep schedule: doubling from
-    initial_backoff, per-interval cap max_backoff, truncated when the
-    cumulative sleep would exceed max_elapsed (retry.rs:226-239)."""
-    out: list[float] = []
-    backoff = cfg.initial_backoff
-    elapsed = 0.0
-    while True:
-        sleep = min(backoff, cfg.max_backoff)
-        if not cfg.indefinite and elapsed + sleep > cfg.max_elapsed:
-            return out
-        out.append(sleep)
-        elapsed += sleep
-        backoff = min(backoff * 2, cfg.max_backoff)
-        if cfg.indefinite and len(out) >= 64:
-            return out  # bounded preview for indefinite mode
-
-
-def next_attempt_delay(
-    attempt: int, cfg: RetryConfig = RetryConfig()
-) -> float | None:
-    """Sleep before retry number `attempt` (1-based); None = give up."""
-    sched = backoff_schedule(cfg)
-    if attempt <= 0:
-        return None
-    if attempt <= len(sched):
-        return sched[attempt - 1]
-    return min(
-        cfg.initial_backoff * (2 ** (attempt - 1)), cfg.max_backoff
-    ) if cfg.indefinite else None
-
-
-def split_by_retry(
-    df: DataFrame,
-    status_col: str = "sink_status",
-    cfg: RetryConfig = RetryConfig(),
-) -> dict[str, DataFrame]:
-    """Split a sink-result DataFrame by failure class. Retryable rows
-    get attempt bookkeeping columns for the retry table.
-
-    Retry is NOT indefinite (retry.rs:226-239): once a row's attempt
-    count exceeds the backoff schedule (i.e. max_elapsed would be
-    passed), it is routed to 'permanent' — a batch re-drive loop built
-    on this dead-letters exhausted batches instead of spinning. With
-    cfg.indefinite the schedule never exhausts (retries forever)."""
-    prior_attempt = (
-        F.coalesce(F.col("attempt"), F.lit(0))
-        if "attempt" in df.columns
-        else F.lit(0)
-    )
-    classed = df.withColumn(
-        "_retry_class", classify_http_expr(F.col(status_col))
-    ).withColumn(
-        "attempt",
-        # the increment records a CONSUMED (failed) attempt — success
-        # rows keep their prior count so downstream bookkeeping that
-        # unions the branches doesn't overstate attempts by one
-        F.when(
-            F.col("_retry_class") == "success", prior_attempt
-        ).otherwise(prior_attempt + 1),
-    )
-    max_attempts = len(backoff_schedule(cfg))
-    exhausted = (
-        F.lit(False)
-        if cfg.indefinite
-        else F.col("attempt") > F.lit(max_attempts)
-    )
-    retry = (
-        classed.filter((F.col("_retry_class") == "retryable") & ~exhausted)
-        .withColumn(
-            "next_attempt_delay_s",
-            F.least(
-                F.lit(cfg.initial_backoff)
-                * F.pow(F.lit(2.0), F.col("attempt") - 1),
-                F.lit(cfg.max_backoff),
-            ),
-        )
-    )
-    return {
-        "success": classed.filter(F.col("_retry_class") == "success").drop(
-            "_retry_class"
-        ),
-        "retryable": retry.drop("_retry_class"),
-        "permanent": classed.filter(
-            (F.col("_retry_class") == "permanent")
-            | ((F.col("_retry_class") == "retryable") & exhausted)
-        ).drop("_retry_class"),
-    }

@@ -23,8 +23,8 @@ sinks/otlp_proto.py:
     dictionary exists server-side only).
 
 Per-row column order comes from the schema lists in
-rotel_spark/schema.py (LOG_RECORD_COLUMNS / SPAN_ROW_COLUMNS /
-METRIC_ROW_COLUMNS ← get_*_col_keys in the reference's schema.rs).
+rotel_spark/schema.py (LOG_RECORD_COLUMNS / METRIC_ROW_COLUMNS ←
+get_*_col_keys in the reference's schema.rs).
 
 Spark-side, encoding runs over Arrow batches in mapInPandas at the
 exporter boundary — one payload per batch, per-split, no shuffle, no
@@ -618,53 +618,3 @@ def rows_to_rowbinary(
 
     return df.mapInPandas(_encode, "payload binary, n_rows long")
 
-
-# --- INSERT statement assembly (request_mapper.rs) -------------------------
-
-# RequestType → (table suffix, column-key list) — request_mapper.rs:
-# 45-98 wires each type to its table name and get_*_col_keys() string
-_REQUEST_TABLES: dict[str, str] = {
-    "traces": "traces",
-    "logs": "logs",
-    "metrics_sum": "metrics_sum",
-    "metrics_gauge": "metrics_gauge",
-    "metrics_histogram": "metrics_histogram",
-    "metrics_exponential_histogram": "metrics_exponential_histogram",
-    "metrics_summary": "metrics_summary",
-}
-
-
-def insert_sql(
-    request_type: str,
-    table_prefix: str = "otel",
-    with_event_name: bool = False,
-) -> str:
-    """The INSERT statement the exporter sends ahead of each RowBinary
-    payload (request_mapper.rs:127-133: `INSERT INTO {prefix}_{table}
-    ({cols}) FORMAT RowBinary`). Column lists come from the schema
-    module's get_*_col_keys mirrors — including the reference's
-    summary-key typo, which names the real DB column."""
-    from rotel_spark.schema import (
-        METRIC_ROW_COLUMNS,
-        SPAN_ROW_COLUMNS,
-        log_record_columns,
-    )
-
-    if request_type == "traces":
-        cols = SPAN_ROW_COLUMNS
-    elif request_type == "logs":
-        cols = log_record_columns(with_event_name)
-    elif request_type.startswith("metrics_"):
-        key = request_type[len("metrics_"):]
-        key = {
-            "sum": "sum",
-            "gauge": "gauge",
-            "histogram": "histogram",
-            "exponential_histogram": "exponential_histogram",
-            "summary": "summary",
-        }[key]
-        cols = METRIC_ROW_COLUMNS[key]
-    else:
-        raise ValueError(f"unknown request type: {request_type}")
-    table = f"{table_prefix}_{_REQUEST_TABLES[request_type]}"
-    return f"INSERT INTO {table} ({','.join(cols)}) FORMAT RowBinary"

@@ -19,8 +19,7 @@ channels for backpressure. Structured Streaming mapping (SURVEY.md
 
 No event-time windowing: the reference has none (SURVEY.md §2.8 —
 parsed-or-observed timestamp is the only late-data policy), so no
-watermarks are required for parity. `windowed_severity_counts` is
-provided anyway as the idiomatic extension for users who want it.
+watermarks are required for parity.
 """
 
 from __future__ import annotations
@@ -28,7 +27,6 @@ from __future__ import annotations
 import zlib
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..plans.pipeline import execute
 
@@ -77,16 +75,3 @@ def run_stream(
         writer = writer.trigger(processingTime=f"{trigger_ms} milliseconds")
     return writer.start()
 
-
-def windowed_severity_counts(
-    parsed: DataFrame, window: str = "1 minute", watermark: str = "5 minutes"
-) -> DataFrame:
-    """Optional event-time rollup with late-data handling (extension,
-    not reference parity — documented absent there, SURVEY.md §2.8)."""
-    ts = F.timestamp_seconds(F.col("time_unix_nano") / 1_000_000_000)
-    return (
-        parsed.withColumn("event_ts", ts)
-        .withWatermark("event_ts", watermark)
-        .groupBy(F.window("event_ts", window), F.col("severity_text"))
-        .count()
-    )

@@ -1,7 +1,9 @@
 """The kept entry points still import: every name that bench.py,
-job.py, scripts/*.py and perfbench/*.py import from rotel_spark, bench
-or __spark_entry__ exists. Checked statically (the files are parsed,
-not run), so deleting a name a script still uses fails here."""
+job.py, __spark_entry__.py, scripts/**/*.py and perfbench/*.py import
+from rotel_spark, bench or __spark_entry__ exists, and every
+rotel_spark module is reached from them. Checked statically (the files
+are parsed, not run), so deleting a name a query or script still uses,
+or keeping a module no entry point reaches, fails here."""
 
 from __future__ import annotations
 
@@ -14,8 +16,8 @@ import pytest
 
 ROOT = pathlib.Path(__file__).resolve().parent.parent
 ENTRY_POINTS = sorted(
-    [ROOT / "bench.py", ROOT / "job.py"]
-    + list((ROOT / "scripts").glob("*.py"))
+    [ROOT / "bench.py", ROOT / "job.py", ROOT / "__spark_entry__.py"]
+    + list((ROOT / "scripts").rglob("*.py"))
     + list((ROOT / "perfbench").glob("*.py"))
 )
 CHECKED = ("rotel_spark", "bench", "__spark_entry__")
@@ -25,13 +27,26 @@ def _checked(module: str) -> bool:
     return module.split(".")[0] in CHECKED
 
 
+def _package(path: pathlib.Path) -> list[str]:
+    """The dotted package a file's relative imports resolve against."""
+    parts = list(path.relative_to(ROOT).with_suffix("").parts)
+    return parts if parts[-1] == "__init__" else parts[:-1]
+
+
 def _imports(path: pathlib.Path) -> list[tuple[str, str | None]]:
-    """(module, name) for every checked import; name None for `import m`."""
+    """(module, name) for every checked import, function-local ones
+    included; name None for `import m`. A relative import is resolved
+    to its absolute module."""
     out: list[tuple[str, str | None]] = []
     for node in ast.walk(ast.parse(path.read_text())):
-        if isinstance(node, ast.ImportFrom) and node.level == 0:
-            if node.module and _checked(node.module):
-                out += [(node.module, a.name) for a in node.names]
+        if isinstance(node, ast.ImportFrom):
+            module = node.module
+            if node.level:
+                pkg = _package(path)
+                base = pkg[: len(pkg) - node.level + 1]
+                module = ".".join(base + ([module] if module else []))
+            if module and _checked(module):
+                out += [(module, a.name) for a in node.names]
         elif isinstance(node, ast.Import):
             out += [(a.name, None) for a in node.names if _checked(a.name)]
     return out
@@ -55,3 +70,34 @@ def test_imports_resolve(path):
         if not (is_pkg and importlib.util.find_spec(f"{module}.{name}")):
             missing.append(f"from {module} import {name}")
     assert not missing, missing
+
+
+def _module_file(module: str) -> pathlib.Path | None:
+    path = ROOT.joinpath(*module.split("."))
+    for f in (path.with_suffix(".py"), path / "__init__.py"):
+        if f.is_file():
+            return f
+    return None
+
+
+def test_every_module_reached():
+    """Every rotel_spark module is imported, directly or through other
+    rotel_spark modules, from an entry point; a module only tests
+    import is on no product path."""
+    reached: set[pathlib.Path] = set()
+    todo = list(ENTRY_POINTS)
+    while todo:
+        for module, name in _imports(todo.pop()):
+            parts = module.split(".")
+            # importing a.b.c runs a/__init__ and a/b/__init__ too;
+            # `from pkg import name` may name a submodule
+            candidates = [".".join(parts[:i]) for i in range(1, len(parts) + 1)]
+            if name is not None:
+                candidates.append(f"{module}.{name}")
+            for f in filter(None, map(_module_file, candidates)):
+                if f not in reached:
+                    reached.add(f)
+                    todo.append(f)
+    modules = set((ROOT / "rotel_spark").rglob("*.py"))
+    unreached = sorted(str(f.relative_to(ROOT)) for f in modules - reached)
+    assert not unreached, "unreached: " + ", ".join(unreached)

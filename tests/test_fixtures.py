@@ -119,3 +119,20 @@ def test_pages_cache_path_tracks_generator(monkeypatch):
         fx, "pages_tail_clause", lambda: tail().replace("% 23", "% 29")
     )
     assert fx.pages_cache_path("/cache", "/data/sf0.1", 20) != path
+
+
+def test_scan_cache_holds_one_session(spark, tmp_path):
+    """The scan cache reuses a plan within a session and keeps no entry
+    of a session once another one looks up a scan."""
+    import rotel_spark.fixtures as fx
+
+    path = str(tmp_path / "t")
+    spark.range(3).write.parquet(path)
+    first = fx.scan_parquet(spark, path)
+    assert fx.scan_parquet(spark, path) is first
+    other = spark.newSession()
+    second = fx.scan_parquet(other, path)
+    assert second is not first and second.sparkSession is other
+    session, scans = fx._SCANS
+    assert session is other
+    assert [df.sparkSession for df in scans.values()] == [other]

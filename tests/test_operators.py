@@ -13,10 +13,10 @@ from rotel_spark.operators.dedup import (
     ngram_jaccard_pairs,
     simhash64,
 )
-from rotel_spark.operators.filters import hash_sample, mod_sample
+from rotel_spark.operators.filters import mod_sample
 from rotel_spark.operators.redaction import redact
 from rotel_spark.operators.resource import upsert_resource_attributes
-from rotel_spark.operators.similarity import brute_force_topk, lsh_topk
+from rotel_spark.operators.similarity import brute_force_topk
 
 
 def _attr_df(spark, attrs: dict[str, str]):
@@ -211,10 +211,6 @@ def test_mod_and_hash_sample_deterministic(spark):
     df = spark.range(1000)
     n1 = mod_sample(df, "id", 1, 10).count()
     assert n1 == 100
-    h1 = hash_sample(df, "id", 0.25).count()
-    h2 = hash_sample(df, "id", 0.25).count()
-    assert h1 == h2
-    assert 150 < h1 < 350  # ~250 expected
 
 
 def test_exact_dedup(spark):
@@ -286,21 +282,6 @@ def test_brute_force_topk_exact(spark):
     assert best == {0: 10, 1: 11}
 
 
-def test_lsh_topk_contains_true_neighbor(spark):
-    import numpy as np
-
-    rng = np.random.RandomState(7)
-    vecs = rng.standard_normal((60, 16)).astype(float)
-    # make vec 50 nearly identical to vec 0
-    vecs[50] = vecs[0] + 0.01
-    rows = [(i, [float(x) for x in vecs[i]]) for i in range(60)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    q = df.filter(F.col("vec_id") == 0)
-    c = df.filter(F.col("vec_id") > 0)
-    out = lsh_topk(c, q, k=3, planes=4).collect()
-    assert any(r.neighbor_id == 50 for r in out)
-
-
 def test_multimodal_feature_plumbing(spark):
     from rotel_spark.operators.multimodal import (
         extract_features,
@@ -344,24 +325,6 @@ def test_redaction_rerun_over_redacted_data_not_fatal(spark):
     a = attrs_of(out)
     assert a["ip"] == "[REDACTED]"
     assert a["redaction.log.masked_keys.count"] == "1"  # replaced, not dup
-
-
-def test_datadog_container_tags_alias_collision_not_fatal(spark):
-    """ADVICE r2: resource carrying BOTH an otel-mapped key and a
-    datadog.container.tag.* alias of the same tag must not throw;
-    otel-mapped wins."""
-    from rotel_spark.sinks.datadog import container_tags
-
-    df = _attr_df(spark, {
-        "container.id": "abc",
-        "datadog.container.tag.container_id": "zzz",
-        "datadog.container.tag.custom": "keep",
-    }).withColumnRenamed("log_attributes", "resource_attributes")
-    out = df.select(
-        container_tags(F.col("resource_attributes")).alias("tags")
-    ).collect()[0].tags
-    assert out["container_id"] == "abc"  # otel mapping wins
-    assert out["custom"] == "keep"
 
 
 def test_connected_components_min_label(spark):

@@ -137,6 +137,18 @@ def test_lineage_written_and_resume_skips_committed(spark, sf_unit, tmp_path):
     assert resume_filter(pages, cp2).count() == 0
 
 
+def test_lineage_commit_writes_one_file(spark, tmp_path):
+    """Each commit appends exactly one data file holding its one row;
+    no empty files pile up in the lineage table."""
+    lineage = tmp_path / "_lineage"
+    observed = {"src_min": 0, "src_max": 9, "rows_in": 10, "rows_parsed": 9}
+    for i in range(3):
+        write_lineage(observed, str(lineage), run_id=f"r{i}")
+    files = _part_files(lineage)
+    assert len(files) == 3
+    assert [spark.read.parquet(str(f)).count() for f in files] == [1, 1, 1]
+
+
 def test_run_job_resume_processes_nothing_twice(spark, sf_unit, tmp_path):
     """Idempotent resume (offset_tracker.rs:50-63): re-running the same
     run_id after a full commit processes zero rows and sinks keep their

@@ -1,6 +1,6 @@
 """Property-based tests (hypothesis) for the pure-python kernels:
-protobuf wire round-trip, AnyValue flatten, retry backoff, BMP/WAV
-codecs. No SparkSession needed."""
+protobuf wire round-trip, AnyValue flatten, BMP/WAV codecs. No
+SparkSession needed."""
 
 from __future__ import annotations
 
@@ -24,7 +24,6 @@ from rotel_spark.sinks.otlp_proto import (
     encode_log_record,
     encode_resource_logs,
 )
-from rotel_spark.sinks.retry import RetryConfig, backoff_schedule
 
 text = st.text(max_size=40)
 attr_maps = st.dictionaries(
@@ -118,26 +117,6 @@ def test_coerce_scalar_rules(v):
         assert c[0] == "double" and float(c[1]) == v
     else:
         assert c == ("string", v)
-
-
-@settings(max_examples=50, deadline=None)
-@given(
-    initial=st.floats(min_value=0.1, max_value=60),
-    cap=st.floats(min_value=0.1, max_value=120),
-    elapsed=st.floats(min_value=1, max_value=1000),
-)
-def test_backoff_schedule_invariants(initial, cap, elapsed):
-    cfg = RetryConfig(
-        initial_backoff=initial,
-        max_backoff=max(initial, cap),
-        max_elapsed=elapsed,
-    )
-    sched = backoff_schedule(cfg)
-    assert sum(sched) <= elapsed + 1e-9
-    assert all(s <= cfg.max_backoff + 1e-9 for s in sched)
-    # non-decreasing until the cap
-    for a, b in zip(sched, sched[1:]):
-        assert b >= a - 1e-9
 
 
 @settings(max_examples=50, deadline=None)

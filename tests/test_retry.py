@@ -1,85 +1,23 @@
-"""Retry classification + backoff schedule (retry.rs parity)."""
+"""Retry classification (retry.rs parity)."""
 
 from __future__ import annotations
 
-from rotel_spark.sinks.retry import (
-    RetryConfig,
-    backoff_schedule,
-    classify_grpc,
-    classify_http,
-    next_attempt_delay,
-    split_by_retry,
-)
+from pyspark.sql import functions as F
+
+from rotel_spark.sinks.retry import classify_http_expr
 
 
-def test_http_status_classes():
+def test_http_status_classes(spark):
     """retry.rs:127-143 status table."""
-    for s in (200, 201, 202):
-        assert classify_http(s) == "success"
-    for s in (408, 429, 500, 501, 502, 503, 504):
-        assert classify_http(s) == "retryable"
-    for s in (203, 301, 400, 401, 403, 404, 409, 505):
-        assert classify_http(s) == "permanent"
-    assert classify_http(None) == "retryable"  # transport/timeout
-
-
-def test_grpc_status_classes():
-    """retry.rs:144-151: Unavailable/Internal/DeadlineExceeded/
-    ResourceExhausted retry; Ok success."""
-    assert classify_grpc(0) == "success"
-    for c in (4, 8, 13, 14):
-        assert classify_grpc(c) == "retryable"
-    for c in (3, 5, 7, 16):
-        assert classify_grpc(c) == "permanent"
-
-
-def test_backoff_schedule_caps():
-    """5s → 30s cap, stops before 300s elapsed (retry.rs:20-33)."""
-    sched = backoff_schedule(RetryConfig())
-    assert sched[0] == 5.0
-    assert sched[1] == 10.0 and sched[2] == 20.0
-    assert max(sched) == 30.0
-    assert sum(sched) <= 300.0
-    assert sum(sched) + 30.0 > 300.0  # truncated exactly at the deadline
-    assert next_attempt_delay(1) == 5.0
-    assert next_attempt_delay(len(sched) + 1) is None  # gave up
-    assert next_attempt_delay(99, RetryConfig(indefinite=True)) == 30.0
-
-
-def test_split_by_retry_df(spark):
-    df = spark.createDataFrame(
-        [(1, 200), (2, 503), (3, 404), (4, 429), (5, None)],
-        "id int, sink_status int",
-    )
-    parts = split_by_retry(df)
-    assert {r.id for r in parts["success"].collect()} == {1}
-    retry = {r.id: r for r in parts["retryable"].collect()}
-    assert set(retry) == {2, 4, 5}
-    assert all(r.attempt == 1 for r in retry.values())
-    assert all(r.next_attempt_delay_s == 5.0 for r in retry.values())
-    assert {r.id for r in parts["permanent"].collect()} == {3}
-    # ADVICE r3: success rows keep their prior attempt count — the
-    # increment records a consumed (failed) attempt only
-    assert parts["success"].collect()[0].attempt == 0
-
-
-def test_split_by_retry_exhaustion_dead_letters(spark):
-    """ADVICE r2: rows whose attempt count exceeds the backoff
-    schedule (max_elapsed deadline) must dead-letter, not retry
-    forever."""
-    from rotel_spark.sinks.retry import RetryConfig, backoff_schedule
-
-    cfg = RetryConfig()
-    max_attempts = len(backoff_schedule(cfg))  # 11 with defaults
-    df = spark.createDataFrame(
-        [(1, 503, max_attempts - 1), (2, 503, max_attempts)],
-        "id int, sink_status int, attempt int",
-    )
-    parts = split_by_retry(df, cfg=cfg)
-    assert {r.id for r in parts["retryable"].collect()} == {1}
-    assert {r.id for r in parts["permanent"].collect()} == {2}
-    # indefinite mode never exhausts
-    parts_inf = split_by_retry(
-        df, cfg=RetryConfig(indefinite=True)
-    )
-    assert {r.id for r in parts_inf["retryable"].collect()} == {1, 2}
+    want = {s: "success" for s in (200, 201, 202)}
+    want |= {s: "retryable" for s in (408, 429, 500, 501, 502, 503, 504)}
+    want |= {s: "permanent" for s in (203, 301, 400, 401, 403, 404, 409, 505)}
+    want[None] = "retryable"  # transport/timeout
+    df = spark.createDataFrame([(s,) for s in want], "status int")
+    got = {
+        r.status: r.cls
+        for r in df.select(
+            "status", classify_http_expr(F.col("status")).alias("cls")
+        ).collect()
+    }
+    assert got == want

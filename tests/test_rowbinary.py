@@ -171,51 +171,6 @@ class TestRows:
         assert raw == b"\x01\x00\x01x" + b"\x02\x01\x00"
 
 
-class TestInsertSql:
-    def test_logs_insert(self):
-        from rotel_spark.sinks.rowbinary import insert_sql
-
-        q = insert_sql("logs")
-        assert q.startswith("INSERT INTO otel_logs (Timestamp,TraceId,")
-        assert q.endswith("LogAttributes) FORMAT RowBinary")
-        assert "EventName" not in q
-        assert "EventName" in insert_sql("logs", with_event_name=True)
-
-    def test_traces_insert_full_column_list(self):
-        from rotel_spark.sinks.rowbinary import insert_sql
-
-        # get_span_row_col_keys verbatim (schema.rs:56-83)
-        q = insert_sql("traces", table_prefix="my")
-        cols = q.split("(", 1)[1].rsplit(")", 1)[0]
-        assert cols == (
-            "Timestamp,TraceId,SpanId,ParentSpanId,TraceState,SpanName,"
-            "SpanKind,ServiceName,ResourceAttributes,ScopeName,"
-            "ScopeVersion,SpanAttributes,Duration,StatusCode,"
-            "StatusMessage,Events.Timestamp,Events.Name,"
-            "Events.Attributes,Links.TraceId,Links.SpanId,"
-            "Links.TraceState,Links.Attributes"
-        )
-        assert q.startswith("INSERT INTO my_traces (")
-
-    def test_summary_insert_reproduces_upstream_typo(self):
-        from rotel_spark.sinks.rowbinary import insert_sql
-
-        # schema.rs:396 spells the column "ValueAtQauntiles.Value" in
-        # the INSERT key list — that typo names the real DB column
-        q = insert_sql("metrics_summary")
-        assert "ValueAtQuantiles.Quantile,ValueAtQauntiles.Value" in q
-        assert q.startswith("INSERT INTO otel_metrics_summary (")
-
-    def test_all_metric_types(self):
-        from rotel_spark.sinks.rowbinary import insert_sql
-
-        for t in ("metrics_sum", "metrics_gauge", "metrics_histogram",
-                  "metrics_exponential_histogram"):
-            q = insert_sql(t)
-            assert q.startswith(f"INSERT INTO otel_{t} (")
-            assert q.endswith("Exemplars.TraceId) FORMAT RowBinary")
-
-
 class TestJsonColumn:
     """ClickHouse JSON type wire vectors (rowbinary/json.rs:223-280)."""
 
