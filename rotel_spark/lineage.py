@@ -10,9 +10,10 @@ max of the range key plus counters — to a checkpoint table; resume
 anti-joins the source against committed ranges so only unprocessed
 ranges re-run.
 
-Range key: page_id (monotone row id). The range and counters are
-``observe()``d on the frame handed to the sink writer, so they come
-from the same tasks that wrote the rows: no persist, no second pass.
+Range key: RANGE_KEY, page_id (monotone row id). The range and
+counters are ``observe()``d on the frame handed to the sink writer, so
+they come from the same tasks that wrote the rows: no persist, no
+second pass.
 One range per run is sound because it is committed only after ALL
 sinks for the run committed — the same "ack fires when the last ref
 resolves" rule as payload.rs:426-439 — and the run processed every
@@ -36,20 +37,23 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.observation import Observation
 
+RANGE_KEY = "page_id"
+PARSED_COL = "parse_ok"
 
-def observe_lineage(
-    df: DataFrame, key: str = "page_id", parsed_col: str | None = "parse_ok"
-) -> tuple[DataFrame, Observation]:
+
+def observe_lineage(df: DataFrame) -> tuple[DataFrame, Observation]:
     """Attach the run's range and counters to df; they are read from
     the returned Observation once an action over df has run. Without a
-    key column the range is NULL."""
+    RANGE_KEY column the range is NULL; without PARSED_COL every row
+    counts as parsed."""
     obs = Observation()
     parsed = (
-        F.sum(F.col(parsed_col).cast("long"))
-        if parsed_col and parsed_col in df.columns
+        F.sum(F.col(PARSED_COL).cast("long"))
+        if PARSED_COL in df.columns
         else F.count(F.lit(1))
     )
-    k = F.col(key) if key in df.columns else F.lit(None).cast("long")
+    k = (F.col(RANGE_KEY) if RANGE_KEY in df.columns
+         else F.lit(None).cast("long"))
     return df.observe(
         obs,
         F.min(k).alias("src_min"),
@@ -102,12 +106,8 @@ def committed_ranges(
     return spark.read.parquet(path).filter(F.col("run_id") == run_id)
 
 
-def resume_filter(
-    source: DataFrame,
-    checkpoint: DataFrame,
-    key: str = "page_id",
-) -> DataFrame:
-    """Drop rows whose key falls inside any committed range.
+def resume_filter(source: DataFrame, checkpoint: DataFrame) -> DataFrame:
+    """Drop rows whose RANGE_KEY falls inside any committed range.
 
     Range anti-join via broadcast (checkpoint is tiny: one row per
     run) — at 100 TB the source never shuffles for this.
@@ -115,9 +115,10 @@ def resume_filter(
     ranges = F.broadcast(
         checkpoint.select("src_min", "src_max").distinct()
     )
+    key = source[RANGE_KEY]
     joined = source.join(
         ranges,
-        (source[key] >= ranges["src_min"]) & (source[key] <= ranges["src_max"]),
+        (key >= ranges["src_min"]) & (key <= ranges["src_max"]),
         "left",
     )
     return joined.filter(F.col("src_min").isNull()).drop("src_min", "src_max")

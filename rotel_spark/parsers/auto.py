@@ -196,8 +196,9 @@ def _stage_exprs(line_col: str) -> dict:
     # projections, substituting the ENTIRE detect+capture derivation
     # (html decode + log extract ~10×, combined regex 2×) into a
     # Filter evaluated per input row (measured on the 1M-row bench
-    # pipeline: parse stage 2.2 s pushed vs 0.9 s blocked; plan diff
-    # in plans/r06/pipeline_e2e_*). One non-deterministic field makes
+    # pipeline: parse stage 2.2 s pushed vs 0.9 s blocked; guarded by
+    # test_parse_auto_filter_keeps_one_combined_capture in
+    # tests/test_pipeline.py). One non-deterministic field makes
     # Catalyst keep filters above this projection, so parse columns
     # are computed once. `rand(0) != -1` is vacuously true
     # (rand ∈ [0,1)) and — unlike `>= -1` — survives Spark 4's rand

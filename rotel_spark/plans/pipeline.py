@@ -208,16 +208,15 @@ def execute(
     local-fs/HDFS model of an Iceberg snapshot commit (north rule:
     resumable mid-pipeline after executor loss).
 
-    A frame without the lineage_key column (a text-line stream)
-    commits a NULL range and is never resume-filtered; the stream's
-    checkpoint is its resume."""
+    A frame without the range key column (``lineage.RANGE_KEY``, absent
+    from a text-line stream) commits a NULL range and is never
+    resume-filtered; the stream's checkpoint is its resume."""
     import json
 
     from .. import lineage
     from ..sinks import writer
 
     lineage_path = config.get("lineage_path")
-    key = config.get("lineage_key", "page_id")
     stage = "export" if batch is None else f"export:{batch}"
     if lineage_path:
         # resume: skip ranges already committed for this run_id
@@ -229,8 +228,8 @@ def execute(
             done = [r for r in committed if r["stage"] == stage]
             if done:
                 return json.loads(done[0]["sink_counts"])
-        if committed and key in df.columns:
-            df = lineage.resume_filter(df, cp, key=key)
+        if committed and lineage.RANGE_KEY in df.columns:
+            df = lineage.resume_filter(df, cp)
 
     out = build_pipeline(config).run(df)
 
@@ -275,7 +274,7 @@ def execute(
     # the lineage range and counters ride the sink write itself: no
     # persist, and they come from the very tasks that wrote the rows
     if lineage_path:
-        out, observed = lineage.observe_lineage(out, key)
+        out, observed = lineage.observe_lineage(out)
     counts = writer.fan_out(
         out,
         sinks,

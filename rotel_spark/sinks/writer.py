@@ -37,7 +37,7 @@ The write does only work that ends up in the files:
 
 from __future__ import annotations
 
-import uuid
+import zlib
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -88,7 +88,8 @@ def fan_out(
 
     batch: names the staging directory, and the files moved into
     ``append`` sinks, after it; a retried batch first removes the files
-    an earlier attempt of it left. Without it every call is new.
+    an earlier attempt of it left. Without it the staging directory is
+    named after the sinks' paths, so a re-run clears a crashed run's.
     """
     spark = df.sparkSession
     groups: dict[tuple, list] = {}
@@ -102,13 +103,16 @@ def fan_out(
         key = (fmt, tuple(spec.get("partition_by") or ()),
                fs and fs.getUri().toString())
         groups.setdefault(key, []).append((spec, fs, dst))
-    tag = batch if batch is not None else uuid.uuid4().hex
     multi = len(groups) > 1
     if multi:
         df = df.persist(StorageLevel.MEMORY_AND_DISK)
     counts: dict[str, int] = {}
     try:
         for g, ((fmt, partition_by, _), targets) in enumerate(groups.items()):
+            tag = batch
+            if tag is None:
+                paths = " ".join(str(dst) for _, _, dst in targets)
+                tag = f"{zlib.crc32(paths.encode()):08x}"
             counts.update(_write_group(
                 df, targets, fmt, list(partition_by), max_records_per_file,
                 f"_staging_{tag}-{g}", batch,

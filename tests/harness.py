@@ -55,6 +55,12 @@ def value_hash(cols: list[str], rows: list[tuple]) -> str:
     return h.hexdigest()
 
 
+def plan_of(df) -> str:
+    """df's executed physical plan as text. Under AQE this is the
+    initial plan: building it runs no Spark job."""
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
 def compare(spark, sf_dir: str, qfn, sql: str) -> dict:
     sdf = qfn(spark, sf_dir)
     scols = sdf.columns

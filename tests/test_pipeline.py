@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import pathlib
 
+import pytest
 from pyspark.sql import functions as F
 
 from rotel_spark.fixtures import extract_log_line, load_pages_full
@@ -17,6 +18,7 @@ from rotel_spark.lineage import (
 )
 from rotel_spark.plans.pipeline import build_pipeline, run_job
 from rotel_spark.sinks.writer import fan_out
+from tests.harness import plan_of
 
 
 def _config(tmp: pathlib.Path, sf_dir: str) -> dict:
@@ -315,6 +317,29 @@ def test_fanout_write_groups(spark, tmp_path):
     assert not list(tmp_path.glob("_staging_*"))
 
 
+def test_fanout_rerun_clears_crashed_unbatched_staging(spark, tmp_path):
+    """A run without a batch that dies mid-write leaves its staging dir
+    where the next run of the same sinks clears it; that run's sinks
+    equal a clean run's."""
+    def sinks(base):
+        return [{"name": n, "predicate": p, "path": str(base / n)}
+                for n, p in (("even", "id % 2 = 0"), ("odd", "id % 2 = 1"))]
+
+    df = spark.range(1000)
+    crash = df.withColumn("_c", F.when(
+        F.col("id") == 999, F.raise_error(F.lit("injected crash"))))
+    run = tmp_path / "run"
+    for _ in range(2):
+        with pytest.raises(Exception, match="injected crash"):
+            fan_out(crash, sinks(run))
+    assert list(run.glob("_staging_*"))
+    counts = fan_out(df, sinks(run))
+    assert not list(run.glob("_staging_*"))
+    assert counts == fan_out(df, sinks(tmp_path / "clean"))
+    for s in sinks(run):
+        assert spark.read.parquet(s["path"]).count() == counts[s["name"]]
+
+
 def test_fanout_retried_batch_empties_append_sink(spark, tmp_path):
     """A retried batch replaces its earlier attempt's files in every
     append sink, also in one it no longer writes a row to."""
@@ -347,7 +372,7 @@ def test_bench_pipeline_plan_shape(spark, sf_unit, tmp_path):
 
     pages, cfg = _bench_config(spark, sf_unit, tmp_path)
     df = build_pipeline(cfg).run(spark.read.parquet(pages))
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = plan_of(df)
     assert "BroadcastHashJoin" in plan, plan
     assert not re.search(r"(?<!Broadcast)Exchange", plan), plan
 
@@ -411,7 +436,7 @@ def test_fanout_tag_is_codegen(spark):
     df = spark.range(100).withColumn("v", F.col("id") * 2)
     tagged, _ = _tag(df, ["id < 50", "CASE WHEN id >= 90 THEN true END",
                           None])
-    plan = tagged._jdf.queryExecution().executedPlan().toString()
+    plan = plan_of(tagged)
     gens = [ln for ln in plan.splitlines() if "Generate " in ln]
     assert gens, plan
     assert all(re.search(r"\*\(\d+\) Generate ", ln) for ln in gens), plan
@@ -433,5 +458,5 @@ def test_parse_auto_filter_keeps_one_combined_capture(spark, sf_unit):
         {"kind": "route"},
     ]}
     df = build_pipeline(cfg).run(load_pages_full(spark, sf_unit, reps=4))
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = plan_of(df)
     assert plan.count(COMBINED_PATTERN) == 1, plan
