@@ -15,7 +15,8 @@ reference's `rotel start` + CLI-config planner
 
 Resume: when `lineage_path` is set and rows for run_id already exist,
 committed page_id ranges are anti-joined away before processing
-(min-pending-offset semantics, offset_tracker.rs:50-63).
+(min-pending-offset semantics, offset_tracker.rs:50-63), and the
+remaining rows are appended to the sinks.
 """
 
 from __future__ import annotations
@@ -36,7 +37,8 @@ def main(argv: list[str] | None = None) -> int:
         help="transactional batch id: crash-safe two-phase sink commit"
         " (staging dir → atomic rename → lineage); re-driving a"
         " committed batch is an idempotent no-op, re-driving a crashed"
-        " one rolls back its orphans first (requires lineage_path)",
+        " one replaces the crashed attempt's output (requires"
+        " lineage_path)",
     )
     args = ap.parse_args(argv)
 

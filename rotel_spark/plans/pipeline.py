@@ -188,12 +188,10 @@ def execute(
     (``run_job``) or one micro-batch (``run_stream``). Returns per-sink
     row counts.
 
-    Under a batch, each sink's layout follows its mode: an
-    ``overwrite`` sink's rows go to ``<path>/batch=<batch>`` (visible;
-    partition-discovery compatible), an ``append`` sink's to files
-    named ``<batch>-part-*`` in ``<path>``. Either way an attempt of
-    the batch replaces what an earlier attempt left, so a re-driven
-    batch writes each row once.
+    Under a batch, ``fan_out`` lays out each sink by its mode
+    (``<path>/batch=<batch>`` or ``<batch>-part-*`` files) and an
+    attempt of the batch replaces what an earlier attempt left, so a
+    re-driven batch writes each row once.
 
     With lineage_path the run commits one lineage row after every sink
     is in place (stage ``export``, or ``export:<batch>``), and skips
@@ -208,6 +206,10 @@ def execute(
     local-fs/HDFS model of an Iceberg snapshot commit (north rule:
     resumable mid-pipeline after executor loss).
 
+    A resumed run without a batch (this run_id has committed rows)
+    writes every sink in ``append`` mode: the sinks keep the committed
+    rows and gain only the ones not yet committed.
+
     A frame without the range key column (``lineage.RANGE_KEY``, absent
     from a text-line stream) commits a NULL range and is never
     resume-filtered; the stream's checkpoint is its resume."""
@@ -218,6 +220,7 @@ def execute(
 
     lineage_path = config.get("lineage_path")
     stage = "export" if batch is None else f"export:{batch}"
+    resumed = False
     if lineage_path:
         # resume: skip ranges already committed for this run_id
         # (min-pending-offset semantics, offset_tracker.rs:50-63); the
@@ -230,6 +233,9 @@ def execute(
                 return json.loads(done[0]["sink_counts"])
         if committed and lineage.RANGE_KEY in df.columns:
             df = lineage.resume_filter(df, cp)
+            # an overwrite would drop the committed rows from the sinks;
+            # a batch writes only its own dir or files
+            resumed = batch is None
 
     out = build_pipeline(config).run(df)
 
@@ -262,14 +268,8 @@ def execute(
             }
         )
 
-    if batch is not None:
-        sinks = [
-            {**s, "path": f"{s['path']}/batch={batch}"}
-            if s.get("mode", "overwrite") == "overwrite"
-            and s.get("format", "parquet") != "noop"
-            else s
-            for s in sinks
-        ]
+    if resumed:
+        sinks = [{**s, "mode": "append"} for s in sinks]
 
     # the lineage range and counters ride the sink write itself: no
     # persist, and they come from the very tasks that wrote the rows

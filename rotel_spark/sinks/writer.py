@@ -22,7 +22,7 @@ itself instead of a second pass over the data.
 
 The write does only work that ends up in the files:
 
-* Parquet sinks are written without dictionary encoding. Log-record
+* Every sink is parquet, written without dictionary encoding. Log-record
   rows are dominated by ~unique payload columns (html, url, log_line,
   body): parquet-mr builds a dictionary for each of them in every file,
   outgrows the page limit and falls back to PLAIN, so the hashing was
@@ -42,9 +42,9 @@ import zlib
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.observation import Observation
-from pyspark.storagelevel import StorageLevel
 
 SINK_COL = "_sink"
+SPEC_KEYS = frozenset({"name", "path", "predicate", "mode"})
 
 
 def hadoop_path(spark: SparkSession, path: str):
@@ -54,16 +54,9 @@ def hadoop_path(spark: SparkSession, path: str):
     return fs, fs.makeQualified(p)
 
 
-def _save(df, fmt, partition_by, mode, path, max_records_per_file) -> None:
-    w = df.write.mode(mode).option("maxRecordsPerFile", max_records_per_file)
-    if fmt == "parquet":
-        w = w.option("parquet.enable.dictionary", "false")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    if fmt == "noop":
-        w.format("noop").save()
-    else:
-        w.format(fmt).save(path)
+def _save(w, path, max_records_per_file) -> None:
+    (w.option("maxRecordsPerFile", max_records_per_file)
+     .option("parquet.enable.dictionary", "false").parquet(path))
 
 
 def fan_out(
@@ -75,84 +68,57 @@ def fan_out(
     """Write df to every sink; returns {sink_name: rows_written}.
 
     sink spec: {"name": str, "path": str, "predicate": str | None,
-                "format": "parquet" | "json" | "noop",
-                "partition_by": [col, ...] | None,
                 "mode": "overwrite" | "append"}
     predicate=None → broadcast-to-all (rotel fanout); a predicate makes
     it a routed sink (north rule). A row whose predicate is NULL is not
-    written, as with ``filter``.
+    written, as with ``filter``. A spec with another key or mode, or a
+    sink on another filesystem than the first sink's, is rejected with
+    ValueError before anything is written.
 
-    Sinks that differ in format or partition_by, or live on another
-    filesystem, cannot share a write: each such group gets its own, and
-    df is persisted only when there is more than one group.
-
-    batch: names the staging directory, and the files moved into
-    ``append`` sinks, after it; a retried batch first removes the files
-    an earlier attempt of it left. Without it the staging directory is
+    batch: with one, an ``overwrite`` sink's rows go to
+    ``<path>/batch=<batch>`` (visible; partition-discovery compatible)
+    and an ``append`` sink's to files named ``<batch>-part-*`` in
+    ``<path>``; either way a retried batch replaces what an earlier
+    attempt of it left. The staging directory, ``_staging_<batch>``,
+    sits beside the first sink's destination. Without a batch it is
     named after the sinks' paths, so a re-run clears a crashed run's.
     """
-    spark = df.sparkSession
-    groups: dict[tuple, list] = {}
-    for spec in sinks:
-        if spec.get("mode", "overwrite") not in ("overwrite", "append"):
-            raise ValueError(f"sink {spec['name']}: unsupported mode")
-        fmt = spec.get("format", "parquet")
-        fs = dst = None
-        if fmt != "noop":
-            fs, dst = hadoop_path(spark, spec["path"])
-        key = (fmt, tuple(spec.get("partition_by") or ()),
-               fs and fs.getUri().toString())
-        groups.setdefault(key, []).append((spec, fs, dst))
-    multi = len(groups) > 1
-    if multi:
-        df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    counts: dict[str, int] = {}
-    try:
-        for g, ((fmt, partition_by, _), targets) in enumerate(groups.items()):
-            tag = batch
-            if tag is None:
-                paths = " ".join(str(dst) for _, _, dst in targets)
-                tag = f"{zlib.crc32(paths.encode()):08x}"
-            counts.update(_write_group(
-                df, targets, fmt, list(partition_by), max_records_per_file,
-                f"_staging_{tag}-{g}", batch,
-            ))
-    finally:
-        if multi:
-            df.unpersist()
-    return {s["name"]: counts[s["name"]] for s in sinks}
-
-
-def _write_group(df, targets, fmt, partition_by, max_records_per_file,
-                 staging_name, batch) -> dict[str, int]:
-    """One partitioned write of the rows of every (spec, fs, path) in
-    targets, then the moves into the sinks' paths."""
-    tagged, obs = _tag(df, [s.get("predicate") for s, _, _ in targets])
     Path = df.sparkSession._jvm.org.apache.hadoop.fs.Path
-    fs = targets[0][1]
-    if fmt == "noop":
-        _save(tagged, fmt, None, "overwrite", None, max_records_per_file)
-    else:
-        staging = Path(targets[0][2].getParent(), staging_name)
-        _save(tagged, fmt, [SINK_COL, *partition_by], "overwrite",
-              staging.toString(), max_records_per_file)
-    got = obs.get
-    counts = {s["name"]: got[str(i)] for i, (s, _, _) in enumerate(targets)}
-    if fmt == "noop":
-        return counts
-    for i, (spec, _, dst) in enumerate(targets):
+    uri, targets = None, []
+    for spec in sinks:
+        if not {"name", "path"} <= spec.keys() <= SPEC_KEYS:
+            raise ValueError(f"sink spec {spec}: keys are {sorted(SPEC_KEYS)}")
         mode = spec.get("mode", "overwrite")
-        if not counts[spec["name"]]:
+        if mode not in ("overwrite", "append"):
+            raise ValueError(f"sink {spec['name']}: unsupported mode")
+        fs, dst = hadoop_path(df.sparkSession, spec["path"])
+        uri = uri or fs.getUri().toString()
+        if fs.getUri().toString() != uri:
+            raise ValueError(f"sink {spec['name']}: not on {uri}")
+        if batch is not None and mode == "overwrite":
+            dst = Path(dst, f"batch={batch}")
+        targets.append((spec["name"], mode, dst))
+    tag = batch
+    if tag is None:
+        paths = " ".join(str(dst) for _, _, dst in targets)
+        tag = f"{zlib.crc32(paths.encode()):08x}"
+    staging = Path(targets[0][2].getParent(), f"_staging_{tag}")
+
+    tagged, obs = _tag(df, [s.get("predicate") for s in sinks])
+    _save(tagged.write.mode("overwrite").partitionBy(SINK_COL),
+          staging.toString(), max_records_per_file)
+    got = obs.get
+    counts = {s["name"]: got[str(i)] for i, s in enumerate(sinks)}
+    for i, (name, mode, dst) in enumerate(targets):
+        if not counts[name]:
             # a partitioned write makes no directory for an empty sink:
             # drop an earlier attempt's files, then write schema-only
             # output as a write of its own would, unless an append sink
             # holds other output
-            levels = "*/" * len(partition_by)
             if mode == "append" and batch is not None:
-                _delete(fs, Path(dst, f"{levels}{batch}-part-*"))
-            if mode == "overwrite" or not fs.globStatus(
-                    Path(dst, f"{levels}*part-*")):
-                _save(df.limit(0), fmt, partition_by, mode, spec["path"],
+                _delete(fs, Path(dst, f"{batch}-part-*"))
+            if mode == "overwrite" or not fs.globStatus(Path(dst, "*part-*")):
+                _save(df.limit(0).write.mode(mode), dst.toString(),
                       max_records_per_file)
             continue
         src = Path(staging, f"{SINK_COL}={i}")
@@ -161,7 +127,7 @@ def _write_group(df, targets, fmt, partition_by, max_records_per_file,
             fs.mkdirs(dst.getParent())
             _rename(fs, src, dst)
         else:
-            _move_files(Path, fs, src, dst, len(partition_by), batch)
+            _move_files(Path, fs, src, dst, batch)
         fs.create(Path(dst, "_SUCCESS"), True).close()
     fs.delete(staging, True)
     return counts
@@ -190,24 +156,15 @@ def _tag(df, predicates) -> tuple[DataFrame, Observation]:
     return tagged, obs
 
 
-def _move_files(Path, fs, src, dst, depth: int, batch: str | None) -> None:
-    """Move the data files under src into dst, keeping their partition
-    subdirectories; with a batch, first delete that batch's files."""
+def _move_files(Path, fs, src, dst, batch: str | None) -> None:
+    """Move the data files in src into dst; with a batch, first delete
+    that batch's files and prefix the moved ones with it."""
     prefix = f"{batch}-" if batch is not None else ""
-    levels = "*/" * depth
     if batch is not None:
-        _delete(fs, Path(dst, f"{levels}{prefix}part-*"))
+        _delete(fs, Path(dst, f"{prefix}part-*"))
     fs.mkdirs(dst)
-    for f in fs.globStatus(Path(src, f"{levels}part-*")):
-        p = f.getPath()
-        sub, parent = [prefix + p.getName()], p.getParent()
-        for _ in range(depth):
-            sub.insert(0, parent.getName())
-            parent = parent.getParent()
-        target = Path(dst, "/".join(sub))
-        if depth:
-            fs.mkdirs(target.getParent())
-        _rename(fs, p, target)
+    for f in fs.globStatus(Path(src, "part-*")):
+        _rename(fs, f.getPath(), Path(dst, prefix + f.getPath().getName()))
 
 
 def _delete(fs, pattern) -> None:

@@ -167,6 +167,31 @@ def test_run_job_resume_processes_nothing_twice(spark, sf_unit, tmp_path):
     assert n == first["all"]
 
 
+def test_run_job_rerun_keeps_overwrite_sinks(spark, sf_unit, tmp_path):
+    """Re-running a committed run_id without a batch leaves every
+    default (overwrite) sink holding the first run's rows: the resumed
+    run appends the rows not yet committed, here none."""
+    import shutil
+
+    from pyspark.sql.types import MapType
+
+    cfg = _config(tmp_path, sf_unit)
+    counts = run_job(spark, cfg, run_id="r1")
+    for name in counts:
+        shutil.copytree(tmp_path / name, tmp_path / "first" / name)
+    run_job(spark, cfg, run_id="r1")
+    for name, n in counts.items():
+        exp = spark.read.parquet(str(tmp_path / "first" / name))
+        got = spark.read.parquet(str(tmp_path / name))
+        # set operations take no map columns
+        cols = [f.name for f in exp.schema
+                if not isinstance(f.dataType, MapType)]
+        exp, got = exp.select(cols), got.select(cols)
+        assert got.count() == n > 0, name
+        assert got.exceptAll(exp).count() == 0, name
+        assert exp.exceptAll(got).count() == 0, name
+
+
 def test_pipeline_stage_order_preserved(spark):
     """processors.rs:561-573: stages chain in declared order."""
     import pyspark.sql.functions as F
@@ -293,28 +318,23 @@ def test_resume_check_without_checkpoint_runs_no_job(
     assert sorted(seen["ranges"]) == sorted(seen["plan"])
 
 
-def test_fanout_write_groups(spark, tmp_path):
-    """Sinks that cannot share a write (another format, another
-    partitioning, noop) each get their own; counts and outputs are as
-    for one write per sink."""
+@pytest.mark.parametrize("extra", [
+    {"format": "json"},
+    {"partition_by": ["p"]},
+    {"predicte": "id < 50"},
+    {"mode": "upsert"},
+], ids=["format", "partition_by", "misspelled_predicate", "mode"])
+def test_fanout_rejects_spec_before_writing(spark, tmp_path, extra):
+    """A sink spec is {name, path, predicate, mode}: another key or mode
+    is rejected before anything is written (a misspelled predicate would
+    otherwise send that sink every row)."""
     df = spark.range(100).withColumn("p", F.col("id") % 3)
-    counts = fan_out(
-        df,
-        [
+    with pytest.raises(ValueError):
+        fan_out(df, [
             {"name": "a", "predicate": "id < 50", "path": str(tmp_path / "a")},
-            {"name": "j", "predicate": "id >= 40", "format": "json",
-             "path": str(tmp_path / "j")},
-            {"name": "p", "partition_by": ["p"], "path": str(tmp_path / "p")},
-            {"name": "n", "predicate": "p = 0", "format": "noop"},
-        ],
-    )
-    assert counts == {"a": 50, "j": 60, "p": 100, "n": 34}
-    assert spark.read.parquet(str(tmp_path / "a")).count() == 50
-    assert spark.read.json(str(tmp_path / "j")).count() == 60
-    part = spark.read.parquet(str(tmp_path / "p"))
-    assert sorted(part.columns) == ["id", "p"]
-    assert part.filter("p = 2").count() == 33
-    assert not list(tmp_path.glob("_staging_*"))
+            {"name": "b", "path": str(tmp_path / "b"), **extra},
+        ])
+    assert not list(tmp_path.iterdir())
 
 
 def test_fanout_rerun_clears_crashed_unbatched_staging(spark, tmp_path):
@@ -340,20 +360,29 @@ def test_fanout_rerun_clears_crashed_unbatched_staging(spark, tmp_path):
         assert spark.read.parquet(s["path"]).count() == counts[s["name"]]
 
 
-def test_fanout_retried_batch_empties_append_sink(spark, tmp_path):
-    """A retried batch replaces its earlier attempt's files in every
-    append sink, also in one it no longer writes a row to."""
+@pytest.mark.parametrize("mode", ["append", "overwrite"])
+def test_fanout_retried_batch_empties_append_sink(spark, tmp_path, mode):
+    """A retried batch replaces its earlier attempt's output in every
+    sink, also in one it no longer writes a row to. An append sink holds
+    the batch as files in its path, an overwrite sink in
+    <path>/batch=<batch>."""
     sinks = [
-        {"name": n, "predicate": p, "path": str(tmp_path / n),
-         "mode": "append"}
+        {"name": n, "predicate": p, "path": str(tmp_path / n), "mode": mode}
         for n, p in (("a", "id % 2 = 0"), ("b", "id % 2 = 1"))
     ]
     assert fan_out(spark.range(10), sinks, batch="x-1") == {"a": 5, "b": 5}
     assert fan_out(spark.range(0, 10, 2), sinks, batch="x-1") == {
         "a": 5, "b": 0
     }
-    assert spark.read.parquet(str(tmp_path / "a")).count() == 5
-    assert spark.read.parquet(str(tmp_path / "b")).count() == 0
+    sub = "batch=x-1" if mode == "overwrite" else ""
+    if sub:
+        for n in ("a", "b"):
+            assert [p.name for p in (tmp_path / n).iterdir()
+                    if p.name[0] not in "._"] == [sub], n
+    a = spark.read.parquet(str(tmp_path / "a" / sub))
+    assert sorted(r.id for r in a.collect()) == [0, 2, 4, 6, 8]
+    assert spark.read.parquet(str(tmp_path / "b" / sub)).count() == 0
+    assert not list(tmp_path.rglob("_staging_*"))
 
 
 def _bench_config(spark, sf_unit, tmp_path) -> tuple[str, dict]:
