@@ -21,12 +21,13 @@ Scale design (100 TB): both are explode → hash-partitioned groupBy
 chains of pure JVM expressions (split / slice / transform / explode /
 collect_list) — no Python in the path, map-side partial aggregation
 throughout.  ``block_dedup`` shuffles (block, doc_id) metadata rows
-once, the tiny per-block argmin once, and (doc_id) once; blocks are
-short fixed-size strings so the shuffle rows are narrow, and hot
-identical blocks (boilerplate headers) hit a single reducer only via
-the map-side-combined argmin and the AQE-split join-back (see the
-block_dedup docstring).  ``doc_chunks`` is embarrassingly parallel
-(no shuffle at all — chunk rows stay in their input partition).
+once, the per-(block, doc) aggregate once by block for the argmin
+window, and (doc_id) once; blocks are short fixed-size strings so the
+shuffle rows are narrow, and a hot identical block (boilerplate
+header) sends one row per document holding it to one window
+partition (see the block_dedup docstring).  ``doc_chunks`` is
+embarrassingly parallel (no shuffle at all — chunk rows stay in their
+input partition).
 
 The n-gram / sequence trap (memory note): ``sequence(0, n-1)`` emits a
 DESCENDING range when n = 0, so empty docs are guarded with
@@ -37,6 +38,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 BLOCK = 16          # tokens per dedup block
 CHUNK = 32          # tokens per training window
@@ -73,16 +75,17 @@ def block_dedup(docs: DataFrame, text_col: str = "text") -> DataFrame:
     row back on block text, so a hot boilerplate block concentrated
     all its instance rows on one join reducer.  Instances are now
     pre-aggregated per (block, doc_id) — count + min ord — before the
-    join: in-doc repeats collapse map-side, the join-back carries one
-    narrow metadata row per (block, doc) (guide §2.3 'shuffle keys
-    and metadata instead of payloads'), and the (block, doc_id) agg
-    key itself has no single-key hotspot.  A block appearing in very
-    many DOCS still shares one join key — that residual partition
-    skew is within AQE skew-join's split mechanism (enabled in
-    session.py).  Equivalence: at most one instance per block
-    survives globally (its ord equals the global min), so per
-    (block, doc) it suffices to know the instance count and the min
-    ord — kept/dup counts and the surviving (bidx, block) pairs are
+    per-block argmin: in-doc repeats collapse map-side, and the argmin
+    window sees one narrow metadata row per (block, doc) (guide §2.3
+    'shuffle keys and metadata instead of payloads').  A block
+    appearing in very many DOCS still fills one window partition,
+    which AQE cannot split as it splits a skewed join; the window
+    replaced a per-block groupBy joined back onto the aggregate, which
+    built the aggregate twice (two scans, two posexplodes) and was
+    slower at sf0.1.  Equivalence: at most one instance per block
+    survives globally (its ord equals the global min), so per (block,
+    doc) it suffices to know the instance count and the min ord —
+    kept/dup counts and the surviving (bidx, block) pairs are
     reconstructed exactly.
     """
     inst = _blocks(docs, text_col).withColumn(
@@ -92,11 +95,9 @@ def block_dedup(docs: DataFrame, text_col: str = "text") -> DataFrame:
         F.count(F.lit(1)).alias("cnt"),
         F.min("ord").alias("min_ord"),
     )
-    first = per.groupBy("block").agg(
-        F.min("min_ord").alias("first_ord")
-    )
-    flagged = per.join(first, "block").withColumn(
-        "keep", F.col("min_ord") == F.col("first_ord")
+    flagged = per.withColumn(
+        "keep",
+        F.col("min_ord") == F.min("min_ord").over(Window.partitionBy("block")),
     )
     kept_struct = F.when(
         F.col("keep"),
@@ -152,7 +153,8 @@ def doc_chunks(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
 def block_dedup_oracle_sql(table: str = "documents") -> str:
     """DuckDB twin of block_dedup — independent derivation (window
-    min over a composite key instead of the groupBy-join)."""
+    min over every instance instead of over the per-(block, doc)
+    aggregate)."""
     return f"""
 WITH inst AS (
   SELECT doc_id, i - 1 AS bidx,

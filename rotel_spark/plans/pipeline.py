@@ -208,7 +208,8 @@ def execute(
 
     A resumed run without a batch (this run_id has committed rows)
     writes every sink in ``append`` mode: the sinks keep the committed
-    rows and gain only the ones not yet committed.
+    rows and gain only the ones not yet committed. A run without a
+    batch that has no rows left commits no lineage row.
 
     A frame without the range key column (``lineage.RANGE_KEY``, absent
     from a text-line stream) commits a NULL range and is never
@@ -283,9 +284,11 @@ def execute(
         ),
         batch=batch,
     )
-    if lineage_path:
-        # commit marks the run processed; a crash before here is healed
-        # by the next attempt, which replaces the batch's output
+    # commit marks the run processed; a crash before here is healed by
+    # the next attempt, which replaces the batch's output. A batch always
+    # commits (its stage makes a re-delivery a no-op); a run without one
+    # that processed no rows has nothing to mark
+    if lineage_path and (batch is not None or observed.get["rows_in"] > 0):
         lineage.write_lineage(
             observed.get,
             lineage_path,

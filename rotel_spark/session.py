@@ -6,6 +6,19 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Hadoop's local filesystem sets the mode of every file and directory
+# it creates; without the native Hadoop library (pyspark ships none)
+# it forks a `chmod` for each: every part file and its .crc, every
+# committer dir, _SUCCESS and streaming checkpoint log entry. Measured
+# on 4 cores: about 2 ms per fork from an idle driver JVM, 83 forks per
+# `routed_job` pass and 392 per 5-micro-batch `stream_microbatch`
+# drain. jvm/ForklessLocalFileSystem.java sets the same mode bits with
+# java.nio and keeps the checksummed layout: a 3,000-line micro-batch
+# went from 0.36-0.39 s to 0.29-0.30 s.
+_FORKLESS_FS = "rotel_spark.jvm.ForklessLocalFileSystem"
+_FORKLESS_SRC = os.path.join(os.path.dirname(__file__), "jvm",
+                             "ForklessLocalFileSystem.java")
+
 
 def _mem_total_kb() -> int | None:
     """MemTotal from /proc/meminfo, or None where it cannot be read."""
@@ -40,6 +53,80 @@ def _gc_options(driver_mem: str) -> str:
         young = max(1, int(int(driver_mem[:-1]) * 3 / 4))
         return f"{base} -Xmn{young}g -XX:+AlwaysPreTouch"
     return base
+
+
+def _forkless_classes() -> str | None:
+    """Dir of the compiled ForklessLocalFileSystem, compiled once per
+    temp dir with the JDK's javac against Spark's Hadoop API jar; None
+    where that cannot be done (no javac, no jar, a failed compile).
+
+    The dir name carries a digest of the source and the jar name, so a
+    changed source or Hadoop is compiled anew. A compile goes to its own
+    temp dir that is renamed into place, so concurrent starts are safe."""
+    import glob
+    import hashlib
+    import shutil
+    import subprocess
+    import tempfile
+
+    from pyspark.find_spark_home import _find_spark_home
+
+    java_home = os.environ.get("JAVA_HOME")
+    javac = (os.path.join(java_home, "bin", "javac") if java_home
+             else shutil.which("javac"))
+    jars = glob.glob(os.path.join(_find_spark_home(), "jars",
+                                  "hadoop-client-api-*.jar"))
+    if not javac or not os.path.exists(javac) or not jars:
+        return None
+    with open(_FORKLESS_SRC, "rb") as f:
+        src = f.read()
+    digest = hashlib.sha256(
+        src + os.path.basename(jars[0]).encode()
+    ).hexdigest()[:12]
+    out = os.path.join(tempfile.gettempdir(), f"rotel_spark_fs_{digest}")
+    if os.path.isdir(out):
+        return out
+    tmp = tempfile.mkdtemp(prefix=f"rotel_spark_fs_{digest}.")
+    try:
+        # --release 17: loadable by any JVM Spark 4 runs on
+        r = subprocess.run(
+            [javac, "--release", "17", "-nowarn", "-cp", jars[0],
+             "-d", tmp, _FORKLESS_SRC],
+            capture_output=True, timeout=300,
+        )
+        if r.returncode == 0:
+            os.rename(tmp, out)
+    except (OSError, subprocess.SubprocessError):
+        pass  # a rename that lost a race finds out in place
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+    return out if os.path.isdir(out) else None
+
+
+def _forkless_fs_conf(master: str) -> dict[str, str]:
+    """Confs that install ForklessLocalFileSystem for file: paths, both
+    as FileSystem and as FileContext (Structured Streaming's checkpoint
+    logs). Empty, keeping Hadoop's stock filesystem, unless this call
+    starts the JVM and the master is local, whose driver JVM runs every
+    task. A JVM already running (started by spark-submit or an earlier
+    session) lacks the class on its classpath, and so do a cluster's
+    executors."""
+    from pyspark import SparkContext
+
+    if SparkContext._gateway is not None or os.environ.get(
+        "PYSPARK_GATEWAY_PORT"
+    ):
+        return {}
+    if master != "local" and not master.startswith("local["):
+        return {}
+    classes = _forkless_classes()
+    if classes is None:
+        return {}
+    return {
+        "spark.driver.extraClassPath": classes,
+        "spark.hadoop.fs.file.impl": _FORKLESS_FS,
+        "spark.hadoop.fs.AbstractFileSystem.file.impl": f"{_FORKLESS_FS}$Fs",
+    }
 
 
 def build_spark(
@@ -113,7 +200,7 @@ def build_spark(
         # store bytes at rest
         .config("spark.sql.parquet.compression.codec", "zstd")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**_forkless_fs_conf(master), **(extra_conf or {})}.items():
         b = b.config(k, v)
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

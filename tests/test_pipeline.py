@@ -192,6 +192,21 @@ def test_run_job_rerun_keeps_overwrite_sinks(spark, sf_unit, tmp_path):
         assert exp.exceptAll(got).count() == 0, name
 
 
+def test_noop_rerun_commits_no_lineage_row(spark, sf_unit, tmp_path):
+    """A re-run without a batch whose resume filter left no rows commits
+    nothing: three runs of one run_id leave the first run's one lineage
+    row, and every sink its row count."""
+    cfg = _config(tmp_path, sf_unit)
+    counts = run_job(spark, cfg, run_id="r1")
+    for _ in range(2):
+        run_job(spark, cfg, run_id="r1")
+    rows = spark.read.parquet(cfg["lineage_path"]).collect()
+    assert len(rows) == 1
+    assert rows[0].rows_in == counts["all"] > 0
+    for name, n in counts.items():
+        assert spark.read.parquet(str(tmp_path / name)).count() == n, name
+
+
 def test_pipeline_stage_order_preserved(spark):
     """processors.rs:561-573: stages chain in declared order."""
     import pyspark.sql.functions as F

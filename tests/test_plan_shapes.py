@@ -55,8 +55,12 @@ SHAPES = {
     "rowbinary_roundtrip": lambda p: _names(p).count("MapInPandas") == 2,
     # the benchmark shingle set is broadcast to the document side
     "decontaminate": lambda p: "BroadcastHashJoin" in _names(p),
+    # no Python stage; one documents scan and one posexplode: the
+    # per-(block, doc) aggregate is built once
     "block_dedup": lambda p: not [
-        n for n in _names(p) if re.search(r"Python|Pandas|InArrow", n)],
+        n for n in _names(p) if re.search(r"Python|Pandas|InArrow", n)]
+        and _names(p).count("FileScan") == 1
+        and _names(p).count("Generate") == 1,
     # windows stay in their partition: the only Exchange is _docs'
     # round-robin spread of the one-file scan
     "doc_chunks": lambda p: [s[1] for s in _shuffles(p)]

@@ -51,17 +51,140 @@ for _ in range(2):
 """
 
 
-def test_parser_caches_follow_a_new_gateway():
-    """A session started in the same process after the first one's
-    gateway shut down can still parse: the cached parser Columns are
-    rebuilt for the new gateway."""
+def _run(script: str, *args: str, env: dict | None = None) -> None:
+    """Run script in a fresh Python process from the repo root."""
     import os
     import pathlib
     import subprocess
     import sys
 
     root = pathlib.Path(__file__).resolve().parent.parent
-    env = {**os.environ, "ROTEL_SPARK_DRIVER_MEM": "1g"}
-    r = subprocess.run([sys.executable, "-c", _NEW_GATEWAY], cwd=root,
+    env = {**os.environ, "ROTEL_SPARK_DRIVER_MEM": "1g", **(env or {})}
+    r = subprocess.run([sys.executable, "-c", script, *args], cwd=root,
                        env=env, capture_output=True, text=True, timeout=600)
     assert r.returncode == 0, r.stderr[-4000:]
+
+
+def test_parser_caches_follow_a_new_gateway():
+    """A session started in the same process after the first one's
+    gateway shut down can still parse: the cached parser Columns are
+    rebuilt for the new gateway."""
+    _run(_NEW_GATEWAY)
+
+
+_NO_FORK = r"""
+import os
+import stat
+import sys
+
+from rotel_spark import lineage
+from rotel_spark.session import build_spark
+from rotel_spark.sinks.writer import fan_out
+from rotel_spark.streaming.stream import run_stream, stream_lines
+
+out, log = sys.argv[1], os.environ["FORK_LOG"]
+spark = build_spark(master="local[2]", shuffle_partitions=2)
+jvm, conf = spark._jvm, spark._jsc.hadoopConfiguration()
+hfs = jvm.org.apache.hadoop.fs
+fs = hfs.FileSystem.get(jvm.java.net.URI("file:///"), conf)
+fc = hfs.FileContext.getLocalFSFileContext(conf)
+assert fs.getClass().getName() == "rotel_spark.jvm.ForklessLocalFileSystem"
+assert (fc.getDefaultFileSystem().getClass().getName()
+        == "rotel_spark.jvm.ForklessLocalFileSystem$Fs")
+with open(os.path.join(out, "in.txt"), "w") as f:
+    f.write("a\nb\n")
+open(log, "w").close()
+
+df, obs = lineage.observe_lineage(spark.range(100))
+assert fan_out(df, [
+    {"name": "even", "path": f"{out}/even", "predicate": "id % 2 = 0"},
+    {"name": "all", "path": f"{out}/all"},
+]) == {"even": 50, "all": 100}
+lineage.write_lineage(obs.get, f"{out}/_lineage", run_id="r")
+q = run_stream(spark, stream_lines(spark, f"{out}/*.txt"),
+               {"sinks": [{"name": "lines", "path": f"{out}/lines"}]},
+               f"{out}/ckpt", available_now=True)
+q.awaitTermination(120)
+assert spark.read.parquet(f"{out}/lines").count() == 2
+forks = open(log).read()
+assert not forks, forks
+
+# the modes chmod set: 0644 files (.crc too), 0755 dirs
+for sink in ("even", "all", "_lineage", "lines", "ckpt"):
+    for d, dirs, files in os.walk(f"{out}/{sink}"):
+        assert stat.S_IMODE(os.stat(d).st_mode) == 0o755, d
+        for n in files:
+            p = os.path.join(d, n)
+            assert stat.S_IMODE(os.stat(p).st_mode) == 0o644, p
+
+# exact modes, the sticky bit through the forking fallback
+os.mkdir(f"{out}/sticky")
+open(f"{out}/plain", "w").close()
+FsPermission = jvm.org.apache.hadoop.fs.permission.FsPermission
+for name, mode in (("plain", "640"), ("sticky", "1777")):
+    fs.setPermission(hfs.Path(f"file://{out}/{name}"), FsPermission(mode))
+    assert oct(stat.S_IMODE(os.stat(f"{out}/{name}").st_mode)) == f"0o{mode}"
+forks = open(log).read().splitlines()
+assert forks == [f"chmod 1777 {os.path.realpath(out)}/sticky"], forks
+"""
+
+
+def test_no_process_per_file(tmp_path):
+    """Sinks, lineage and a stream checkpoint create their files without
+    forking chmod, ls or stat (Hadoop's local filesystem without the
+    native library forks chmod per created file), with the mode bits
+    chmod set; a sticky-bit mode still goes through chmod."""
+    import os
+    import shutil
+
+    bin_dir = tmp_path / "bin"
+    bin_dir.mkdir()
+    for cmd in ("chmod", "ls", "stat"):
+        wrapper = bin_dir / cmd
+        wrapper.write_text(f'#!/bin/sh\necho "{cmd} $*" >> "$FORK_LOG"\n'
+                           f'exec {shutil.which(cmd)} "$@"\n')
+        wrapper.chmod(0o755)
+    out = tmp_path / "out"
+    out.mkdir()
+    _run(_NO_FORK, str(out), env={
+        "PATH": f"{bin_dir}{os.pathsep}{os.environ['PATH']}",
+        "FORK_LOG": str(tmp_path / "forks.log"),
+    })
+
+
+_LIVE_JVM = r"""
+import sys
+
+from pyspark.sql import SparkSession
+
+from rotel_spark.session import _forkless_fs_conf, build_spark
+
+# a JVM started without the filesystem class on its classpath
+SparkSession.builder.master("local[1]").getOrCreate().stop()
+assert _forkless_fs_conf("local[1]") == {}
+spark = build_spark(master="local[1]", shuffle_partitions=1)
+conf = spark._jsc.hadoopConfiguration()
+assert conf.get("fs.file.impl") is None
+assert conf.get("fs.AbstractFileSystem.file.impl") == (
+    "org.apache.hadoop.fs.local.LocalFs")
+spark.range(10).write.parquet(sys.argv[1])
+assert spark.read.parquet(sys.argv[1]).count() == 10
+"""
+
+
+def test_live_jvm_keeps_stock_filesystem(tmp_path):
+    """A session built on a JVM that was already running sets no
+    filesystem override (that JVM lacks the class) and writes parquet."""
+    _run(_LIVE_JVM, str(tmp_path / "t"))
+
+
+def test_forkless_filesystem_only_where_it_loads(monkeypatch):
+    """A cluster master keeps the stock filesystem (its executors lack
+    the class), and so does a host without javac."""
+    from rotel_spark.session import _forkless_classes, _forkless_fs_conf
+
+    for master in ("spark://host:7077", "yarn", "local-cluster[2,1,1024]"):
+        assert _forkless_fs_conf(master) == {}
+    monkeypatch.delenv("JAVA_HOME", raising=False)
+    monkeypatch.setenv("PATH", "")
+    assert _forkless_classes() is None
