@@ -79,14 +79,11 @@ def block_dedup(docs: DataFrame, text_col: str = "text") -> DataFrame:
     window sees one narrow metadata row per (block, doc) (guide §2.3
     'shuffle keys and metadata instead of payloads').  A block
     appearing in very many DOCS still fills one window partition,
-    which AQE cannot split as it splits a skewed join; the window
-    replaced a per-block groupBy joined back onto the aggregate, which
-    built the aggregate twice (two scans, two posexplodes) and was
-    slower at sf0.1.  Equivalence: at most one instance per block
-    survives globally (its ord equals the global min), so per (block,
-    doc) it suffices to know the instance count and the min ord —
-    kept/dup counts and the surviving (bidx, block) pairs are
-    reconstructed exactly.
+    which AQE cannot split as it splits a skewed join.  Equivalence: at
+    most one instance per block survives globally (its ord equals the
+    global min), so per (block, doc) it suffices to know the instance
+    count and the min ord — kept/dup counts and the surviving (bidx,
+    block) pairs are reconstructed exactly.
     """
     inst = _blocks(docs, text_col).withColumn(
         "ord", F.col("doc_id") * _ORD + F.col("bidx")

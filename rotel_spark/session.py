@@ -3,6 +3,9 @@
 from __future__ import annotations
 
 import os
+import re
+import stat
+import tempfile
 
 from pyspark.sql import SparkSession
 
@@ -55,10 +58,41 @@ def _gc_options(driver_mem: str) -> str:
     return base
 
 
+def _forkless_cache() -> str | None:
+    """This user's dir for compiled classes under the temp dir, made
+    0700. None where that path is not a dir owned by this user that no
+    one else can write: classes another user put there would run in
+    the driver JVM."""
+    base = os.path.join(tempfile.gettempdir(),
+                        f"rotel_spark_fs-{os.getuid()}")
+    try:
+        os.mkdir(base, 0o700)
+    except FileExistsError:
+        pass
+    except OSError:
+        return None
+    st = os.lstat(base)
+    if (not stat.S_ISDIR(st.st_mode) or st.st_uid != os.getuid()
+            or st.st_mode & 0o022):
+        return None
+    return base
+
+
+def _forkless_compiled(classes: str) -> bool:
+    """Whether every class of the filesystem is in dir `classes`: a tmp
+    cleaner may have aged some out and left the dir."""
+    return all(
+        os.path.isfile(os.path.join(classes, "rotel_spark", "jvm",
+                                    f"ForklessLocalFileSystem{c}.class"))
+        for c in ("", "$Raw", "$Fs", "$RawFs")
+    )
+
+
 def _forkless_classes() -> str | None:
     """Dir of the compiled ForklessLocalFileSystem, compiled once per
     temp dir with the JDK's javac against Spark's Hadoop API jar; None
-    where that cannot be done (no javac, no jar, a failed compile).
+    where that cannot be done (no javac, no jar, a failed compile, a
+    cache dir others can write).
 
     The dir name carries a digest of the source and the jar name, so a
     changed source or Hadoop is compiled anew. A compile goes to its own
@@ -67,26 +101,27 @@ def _forkless_classes() -> str | None:
     import hashlib
     import shutil
     import subprocess
-    import tempfile
 
     from pyspark.find_spark_home import _find_spark_home
 
-    java_home = os.environ.get("JAVA_HOME")
-    javac = (os.path.join(java_home, "bin", "javac") if java_home
-             else shutil.which("javac"))
+    javac = os.path.join(os.environ.get("JAVA_HOME", ""), "bin", "javac")
+    if not os.path.isfile(javac):
+        javac = shutil.which("javac")
     jars = glob.glob(os.path.join(_find_spark_home(), "jars",
                                   "hadoop-client-api-*.jar"))
-    if not javac or not os.path.exists(javac) or not jars:
+    cache = _forkless_cache()
+    if not javac or not jars or cache is None:
         return None
     with open(_FORKLESS_SRC, "rb") as f:
         src = f.read()
     digest = hashlib.sha256(
         src + os.path.basename(jars[0]).encode()
     ).hexdigest()[:12]
-    out = os.path.join(tempfile.gettempdir(), f"rotel_spark_fs_{digest}")
-    if os.path.isdir(out):
+    out = os.path.join(cache, digest)
+    if _forkless_compiled(out):
         return out
-    tmp = tempfile.mkdtemp(prefix=f"rotel_spark_fs_{digest}.")
+    shutil.rmtree(out, ignore_errors=True)
+    tmp = tempfile.mkdtemp(prefix=f"{digest}.", dir=cache)
     try:
         # --release 17: loadable by any JVM Spark 4 runs on
         r = subprocess.run(
@@ -100,32 +135,63 @@ def _forkless_classes() -> str | None:
         pass  # a rename that lost a race finds out in place
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-    return out if os.path.isdir(out) else None
+    return out if _forkless_compiled(out) else None
 
 
-def _forkless_fs_conf(master: str) -> dict[str, str]:
+def _spark_defaults() -> dict[str, str]:
+    """The deployment's spark-defaults.conf, which spark-submit reads
+    under the confs a session passes."""
+    from pyspark.find_spark_home import _find_spark_home
+
+    conf_dir = os.environ.get("SPARK_CONF_DIR") or os.path.join(
+        _find_spark_home(), "conf")
+    try:
+        with open(os.path.join(conf_dir, "spark-defaults.conf")) as f:
+            lines = f.read().splitlines()
+    except OSError:
+        return {}
+    pairs = (re.split(r"\s*[=:\s]\s*", ln.strip(), maxsplit=1)
+             for ln in lines if ln.strip() and ln.strip()[0] not in "#!")
+    return {p[0]: p[1] if len(p) > 1 else "" for p in pairs}
+
+
+def _forkless_fs_conf(
+    master: str, conf: dict[str, str] | None = None
+) -> dict[str, str]:
     """Confs that install ForklessLocalFileSystem for file: paths, both
     as FileSystem and as FileContext (Structured Streaming's checkpoint
     logs). Empty, keeping Hadoop's stock filesystem, unless this call
     starts the JVM and the master is local, whose driver JVM runs every
     task. A JVM already running (started by spark-submit or an earlier
     session) lacks the class on its classpath, and so do a cluster's
-    executors."""
+    executors; PYSPARK_SUBMIT_ARGS can set a driver classpath that wins
+    over this one.
+
+    `conf` is the caller's own confs. Where it or spark-defaults.conf
+    names a filesystem for file:, that one stays; a driver classpath
+    they set is kept, with the classes dir appended."""
     from pyspark import SparkContext
 
     if SparkContext._gateway is not None or os.environ.get(
         "PYSPARK_GATEWAY_PORT"
-    ):
+    ) or os.environ.get("PYSPARK_SUBMIT_ARGS"):
         return {}
     if master != "local" and not master.startswith("local["):
+        return {}
+    conf = {**_spark_defaults(), **(conf or {})}
+    impl = ("spark.hadoop.fs.file.impl",
+            "spark.hadoop.fs.AbstractFileSystem.file.impl")
+    if any(k in conf for k in impl):
         return {}
     classes = _forkless_classes()
     if classes is None:
         return {}
+    cp = conf.get("spark.driver.extraClassPath")
     return {
-        "spark.driver.extraClassPath": classes,
-        "spark.hadoop.fs.file.impl": _FORKLESS_FS,
-        "spark.hadoop.fs.AbstractFileSystem.file.impl": f"{_FORKLESS_FS}$Fs",
+        "spark.driver.extraClassPath":
+            f"{cp}{os.pathsep}{classes}" if cp else classes,
+        impl[0]: _FORKLESS_FS,
+        impl[1]: f"{_FORKLESS_FS}$Fs",
     }
 
 
@@ -200,7 +266,9 @@ def build_spark(
         # store bytes at rest
         .config("spark.sql.parquet.compression.codec", "zstd")
     )
-    for k, v in {**_forkless_fs_conf(master), **(extra_conf or {})}.items():
+    extra_conf = extra_conf or {}
+    conf = {**extra_conf, **_forkless_fs_conf(master, extra_conf)}
+    for k, v in conf.items():
         b = b.config(k, v)
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -2,6 +2,11 @@
 
 from __future__ import annotations
 
+import stat
+import tempfile
+
+import pytest
+
 from rotel_spark.session import _default_driver_mem, _gc_options
 
 GIB_KB = 1024 * 1024
@@ -129,13 +134,38 @@ assert forks == [f"chmod 1777 {os.path.realpath(out)}/sticky"], forks
 """
 
 
-def test_no_process_per_file(tmp_path):
+@pytest.fixture
+def fresh_launch(monkeypatch, tmp_path):
+    """This process as if about to start its JVM, with its temp dir and
+    Spark conf dir under tmp_path."""
+    from pyspark import SparkContext
+
+    monkeypatch.setattr(SparkContext, "_gateway", None)
+    for var in ("PYSPARK_GATEWAY_PORT", "PYSPARK_SUBMIT_ARGS"):
+        monkeypatch.delenv(var, raising=False)
+    for d in ("tmp", "conf"):
+        (tmp_path / d).mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path / "tmp"))
+    monkeypatch.setenv("SPARK_CONF_DIR", str(tmp_path / "conf"))
+    return tmp_path
+
+
+def test_no_process_per_file(fresh_launch):
     """Sinks, lineage and a stream checkpoint create their files without
     forking chmod, ls or stat (Hadoop's local filesystem without the
     native library forks chmod per created file), with the mode bits
-    chmod set; a sticky-bit mode still goes through chmod."""
+    chmod set; a sticky-bit mode still goes through chmod. The session
+    compiles its classes anew where a tmp cleaner left their cache dir
+    empty."""
     import os
     import shutil
+
+    from rotel_spark.session import _forkless_classes
+
+    tmp_path = fresh_launch
+    classes = _forkless_classes()
+    shutil.rmtree(classes)
+    os.mkdir(classes)
 
     bin_dir = tmp_path / "bin"
     bin_dir.mkdir()
@@ -149,6 +179,7 @@ def test_no_process_per_file(tmp_path):
     _run(_NO_FORK, str(out), env={
         "PATH": f"{bin_dir}{os.pathsep}{os.environ['PATH']}",
         "FORK_LOG": str(tmp_path / "forks.log"),
+        "TMPDIR": tempfile.tempdir,
     })
 
 
@@ -178,13 +209,64 @@ def test_live_jvm_keeps_stock_filesystem(tmp_path):
     _run(_LIVE_JVM, str(tmp_path / "t"))
 
 
-def test_forkless_filesystem_only_where_it_loads(monkeypatch):
+def test_forkless_filesystem_only_where_it_loads(fresh_launch, monkeypatch):
     """A cluster master keeps the stock filesystem (its executors lack
-    the class), and so does a host without javac."""
+    the class), and so do spark-submit arguments from the environment
+    (they can set the driver classpath) and a host without javac."""
     from rotel_spark.session import _forkless_classes, _forkless_fs_conf
 
+    assert _forkless_fs_conf("local[1]")
     for master in ("spark://host:7077", "yarn", "local-cluster[2,1,1024]"):
         assert _forkless_fs_conf(master) == {}
+    monkeypatch.setenv("PYSPARK_SUBMIT_ARGS",
+                       "--driver-class-path /x.jar pyspark-shell")
+    assert _forkless_fs_conf("local[1]") == {}
     monkeypatch.delenv("JAVA_HOME", raising=False)
     monkeypatch.setenv("PATH", "")
     assert _forkless_classes() is None
+
+
+def test_forkless_cache_is_this_users_own(fresh_launch, monkeypatch):
+    """The classes are cached in a 0700 dir of this user's; one others
+    can write, or a symlink, is not trusted. A JAVA_HOME without javac
+    falls back to the javac on PATH."""
+    import os
+
+    from rotel_spark.session import _forkless_classes
+
+    monkeypatch.setenv("JAVA_HOME", str(fresh_launch))
+    classes = _forkless_classes()
+    assert classes is not None
+    cache = os.path.dirname(classes)
+    assert os.path.basename(cache) == f"rotel_spark_fs-{os.getuid()}"
+    assert stat.S_IMODE(os.stat(cache).st_mode) == 0o700
+    assert _forkless_classes() == classes
+    os.chmod(cache, 0o777)
+    assert _forkless_classes() is None
+    os.chmod(cache, 0o700)
+    os.rename(cache, f"{cache}.real")
+    os.symlink(f"{cache}.real", cache)
+    assert _forkless_classes() is None
+
+
+def test_forkless_filesystem_keeps_the_callers_confs(fresh_launch):
+    """A driver classpath from spark-defaults.conf or the caller keeps
+    its entries, the classes dir appended; a filesystem for file: named
+    there stays."""
+    import os
+
+    from rotel_spark.session import _forkless_classes, _forkless_fs_conf
+
+    classes = _forkless_classes()
+    cp = "spark.driver.extraClassPath"
+    defaults = fresh_launch / "conf" / "spark-defaults.conf"
+    defaults.write_text(f"# site\n{cp}  /site.jar\n")
+    assert _forkless_fs_conf("local[1]")[cp] == (
+        f"/site.jar{os.pathsep}{classes}")
+    assert _forkless_fs_conf("local[1]", {cp: "/mine.jar"})[cp] == (
+        f"/mine.jar{os.pathsep}{classes}")
+    for key in ("spark.hadoop.fs.file.impl",
+                "spark.hadoop.fs.AbstractFileSystem.file.impl"):
+        assert _forkless_fs_conf("local[1]", {key: "x"}) == {}
+        defaults.write_text(f"{key}=x\n")
+        assert _forkless_fs_conf("local[1]") == {}
