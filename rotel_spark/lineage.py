@@ -39,6 +39,14 @@ from pyspark.sql.observation import Observation
 
 RANGE_KEY = "page_id"
 PARSED_COL = "parse_ok"
+# the row write_lineage commits, read back with this schema rather than
+# an inferred one: a commit killed mid-write leaves only `_temporary`,
+# and a table with no data file has nothing to infer a schema from
+LINEAGE_SCHEMA = (
+    "run_id string, stage string, src_min long, src_max long,"
+    " rows_in long, rows_parsed long, rows_dropped long,"
+    " sink_counts string, committed_at timestamp"
+)
 
 
 def observe_lineage(df: DataFrame) -> tuple[DataFrame, Observation]:
@@ -103,7 +111,11 @@ def committed_ranges(
     fs, p = hadoop_path(spark, path)
     if not fs.exists(p):
         return None
-    return spark.read.parquet(path).filter(F.col("run_id") == run_id)
+    return (
+        spark.read.schema(LINEAGE_SCHEMA)
+        .parquet(path)
+        .filter(F.col("run_id") == run_id)
+    )
 
 
 def resume_filter(source: DataFrame, checkpoint: DataFrame) -> DataFrame:

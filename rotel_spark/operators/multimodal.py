@@ -1,7 +1,7 @@
 """Multimodal column plumbing — binary payloads with typed metadata.
 
 Image/audio/video are opaque BINARY columns plus a metadata struct;
-decode / feature-extract / resize / frame-sample run as Arrow-batched
+decode / feature-extract / resize run as Arrow-batched
 ``mapInPandas`` stages.
 
 Decoders: REAL for container formats that need no external codec —
@@ -24,7 +24,6 @@ from collections.abc import Iterator
 
 import numpy as np
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 MEDIA_SCHEMA = T.StructType(
@@ -205,29 +204,6 @@ def extract_features(df: DataFrame) -> DataFrame:
             )
 
     return df.mapInPandas(_extract, FEATURE_SCHEMA)
-
-
-def frame_sample_plan(df: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Video frame-sampling plumbing: one output row per planned frame
-    timestamp (decode stubbed). Demonstrates explode-based fan-out
-    sizing for media pipelines."""
-    n_frames = (F.coalesce(F.col("duration_ms"), F.lit(0)) / every_ms).cast(
-        "int"
-    )
-    return (
-        df.filter(F.col("kind") == "video")
-        .withColumn(
-            "frame_ts_ms",
-            F.explode(
-                F.sequence(
-                    F.lit(0),
-                    F.greatest(n_frames - 1, F.lit(0)) * every_ms,
-                    F.lit(every_ms),
-                )
-            ),
-        )
-        .select("media_id", "frame_ts_ms", "mime")
-    )
 
 
 # --- deterministic fixtures (closed-form → SQL-oracle reproducible) -------

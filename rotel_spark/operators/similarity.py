@@ -267,29 +267,6 @@ def fixed_centroids(n_cells: int, dim: int, seed: int = 42):
     return out
 
 
-def ivf_assign(
-    df: DataFrame,
-    centroids,
-    vec_col: str = "embedding",
-    out_col: str = "ivf_cell",
-) -> DataFrame:
-    """Assign each vector to its nearest centroid cell — Arrow-batched,
-    centroids broadcast as a closure constant (small). float64
-    arithmetic so an oracle recomputing the same distances agrees."""
-    cent = np.asarray(centroids, dtype=np.float64)
-
-    @F.pandas_udf(T.IntegerType())
-    def _assign(vecs: pd.Series) -> pd.Series:
-        if not len(vecs):
-            return pd.Series([], dtype="int32")
-        arr = np.array([np.asarray(v, dtype=np.float64) for v in vecs])
-        # ||x-c||^2 = ||x||^2 - 2x·c + ||c||^2 ; argmin over cells
-        d = -2 * (arr @ cent.T) + (cent**2).sum(axis=1)[None, :]
-        return pd.Series(d.argmin(axis=1).astype("int32"))
-
-    return df.withColumn(out_col, _assign(F.col(vec_col)))
-
-
 def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -346,10 +323,10 @@ def ivf_topk(
     # query at 20k vectors × 8 cells). Here scoring is a vectorized
     # per-dimension fold in the SAME left-to-right order as the JVM
     # aggregate (and the same float64 ops), so scores are
-    # bit-identical; cell assignment reuses ivf_assign's exact
-    # distance formula. At 100 TB the cell id remains a partition key:
-    # the per-batch mask is the in-memory analog of the partition
-    # pruning the docstring describes.
+    # bit-identical; a vector's cell is its nearest centroid. At
+    # 100 TB the cell id remains a partition key: the per-batch mask
+    # is the in-memory analog of the partition pruning the docstring
+    # describes.
     out_schema = T.StructType(
         [
             T.StructField("query_id", T.LongType()),
@@ -364,7 +341,8 @@ def ivf_topk(
                 continue
             c_ids = pdf["_nid"].to_numpy(dtype=np.int64)
             arr = np.array(list(pdf["_cv"]), dtype=np.float64)
-            # same formula as ivf_assign: ||x-c||² sans ||x||² term
+            # nearest centroid: ||x-c||² = ||x||² - 2x·c + ||c||²,
+            # argmin over cells, so the ||x||² term is dropped
             d = -2 * (arr @ cent.T) + (cent**2).sum(axis=1)[None, :]
             cells = d.argmin(axis=1)
             # corpus norms: sequential per-dimension fold (JVM order)

@@ -39,7 +39,6 @@ from ..functions.severity import (
 from ..functions.timestamps import (
     NANOS,
     NGINX_TIME_FMT,
-    parse_timestamp_chain,
     to_unix_nanos,
 )
 from . import json_log, kmsg, nginx

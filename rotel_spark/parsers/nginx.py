@@ -20,7 +20,7 @@ only mis-split itself (counted-dropped), never fail the job.
 from __future__ import annotations
 
 from pyspark import SparkContext
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.severity import (

@@ -96,16 +96,17 @@ def build_processor(spec: dict) -> Stage:
         # the same fan-out pass (run_job wires the sink). The
         # reference's options are panic or treat-as-ack
         # (file/config.rs:83-86) — a dead-letter table is the
-        # documented batch equivalent.
+        # documented batch equivalent. A row passes only where `expr`
+        # is true: NULL fails, so every row lands in exactly one of
+        # the regular sinks and the quarantine sink.
         def _quarantine(df: DataFrame) -> DataFrame:
             prev = (
                 F.col("_quarantine")
                 if "_quarantine" in df.columns
                 else F.lit(False)
             )
-            return df.withColumn(
-                "_quarantine", prev | ~F.expr(spec["expr"])
-            )
+            passed = F.coalesce(F.expr(spec["expr"]), F.lit(False))
+            return df.withColumn("_quarantine", prev | ~passed)
 
         return _quarantine
     if kind == "sample":

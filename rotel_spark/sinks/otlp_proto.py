@@ -1,29 +1,28 @@
-"""OTLP protobuf wire encoding — ExportLogsServiceRequest bytes.
+"""OTLP protobuf wire encoding — ExportTraceServiceRequest and
+ExportMetricsServiceRequest bytes.
 
-No protobuf library ships in this container, so this is a minimal
+The engine depends on no protobuf library, so this is a minimal
 hand-rolled proto3 encoder (varint + length-delimited primitives) for
-the logs subset, following the PUBLIC opentelemetry-proto schema
-(opentelemetry/proto/logs/v1/logs.proto and
-collector/logs/v1/logs_service.proto field numbers):
+the traces and metrics subsets, following the PUBLIC
+opentelemetry-proto schema (trace/v1/trace.proto,
+metrics/v1/metrics.proto and the collector service protos; the field
+numbers are listed beside each message builder below). Messages both
+share:
 
-  ExportLogsServiceRequest: resource_logs = 1
-  ResourceLogs:  resource = 1, scope_logs = 2, schema_url = 3
   Resource:      attributes = 1
-  ScopeLogs:     scope = 1, log_records = 2
   InstrumentationScope: name = 1
   KeyValue:      key = 1, value = 2
   AnyValue:      string_value = 1 (oneof member used here)
-  LogRecord:     time_unix_nano = 1 (fixed64), severity_number = 2,
-                 severity_text = 3, body = 5, attributes = 6,
-                 observed_time_unix_nano = 11 (fixed64),
-                 event_name = 12
+
+Logs export as OTLP proto-JSON instead
+(otlp_shape.to_export_request_json).
 
 This is the byte payload the reference's exporter puts on the wire
-(src/topology/payload.rs:680-686 builds the same request message).
+(src/topology/payload.rs:680-686 builds the same request messages).
 Encode runs at the exporter boundary over Arrow batches
 (mapInPandas) — the same place the reference spends encoder CPU
 (20 concurrent encoders, src/exporters/otlp/exporter.rs:62-63).
-A decoder for the same subset enables lossless round-trip tests.
+A decoder for the same subsets enables lossless round-trip tests.
 """
 
 from __future__ import annotations
@@ -96,45 +95,6 @@ def _any_string(s: str) -> bytes:
 
 def _key_value(k: str, v: str) -> bytes:
     return _str_field(1, k) + _len_field(2, _any_string(v))
-
-
-def encode_log_record(
-    time_unix_nano: int,
-    severity_number: int,
-    severity_text: str,
-    body: str,
-    attributes: dict[str, str] | None = None,
-    observed_time_unix_nano: int = 0,
-    event_name: str = "",
-) -> bytes:
-    out = _fixed64_field(1, time_unix_nano or 0)
-    out += _varint_field(2, severity_number or 0)
-    out += _str_field(3, severity_text or "")
-    out += _len_field(5, _any_string(body or ""))
-    for k, v in (attributes or {}).items():
-        out += _len_field(6, _key_value(k, v))
-    out += _fixed64_field(11, observed_time_unix_nano or 0)
-    out += _str_field(12, event_name or "")
-    return out
-
-
-def encode_resource_logs(
-    resource_attrs: dict[str, str],
-    records: list[bytes],
-    scope_name: str = "rotel_spark",
-) -> bytes:
-    resource = b"".join(
-        _len_field(1, _key_value(k, v))
-        for k, v in (resource_attrs or {}).items()
-    )
-    scope_logs = _len_field(1, _str_field(1, scope_name)) + b"".join(
-        _len_field(2, r) for r in records
-    )
-    return _len_field(1, resource) + _len_field(2, scope_logs)
-
-
-def encode_export_request(resource_logs: list[bytes]) -> bytes:
-    return b"".join(_len_field(1, rl) for rl in resource_logs)
 
 
 # --- traces: Span / ResourceSpans / ExportTraceServiceRequest ---------------
@@ -467,99 +427,7 @@ def _decode_kv(buf: bytes) -> tuple[str, str]:
     return k, val
 
 
-def decode_log_record(buf: bytes) -> dict:
-    rec = {
-        "time_unix_nano": 0,
-        "severity_number": 0,
-        "severity_text": "",
-        "body": "",
-        "attributes": {},
-        "observed_time_unix_nano": 0,
-        "event_name": "",
-    }
-    for f, _, v in _fields(buf):
-        if f == 1:
-            rec["time_unix_nano"] = v
-        elif f == 2:
-            rec["severity_number"] = v
-        elif f == 3:
-            rec["severity_text"] = v.decode("utf-8")
-        elif f == 5:
-            rec["body"] = _decode_any_string(v)
-        elif f == 6:
-            k, val = _decode_kv(v)
-            rec["attributes"][k] = val
-        elif f == 11:
-            rec["observed_time_unix_nano"] = v
-        elif f == 12:
-            rec["event_name"] = v.decode("utf-8")
-    return rec
-
-
-def decode_export_request(buf: bytes) -> list[dict]:
-    """→ [{resource_attributes, scope_name, records: [rec, ...]}]"""
-    out = []
-    for f, _, rl in _fields(buf):
-        if f != 1:
-            continue
-        entry = {"resource_attributes": {}, "scope_name": "", "records": []}
-        for f2, _, v2 in _fields(rl):
-            if f2 == 1:  # Resource
-                for f3, _, v3 in _fields(v2):
-                    if f3 == 1:
-                        k, val = _decode_kv(v3)
-                        entry["resource_attributes"][k] = val
-            elif f2 == 2:  # ScopeLogs
-                for f3, _, v3 in _fields(v2):
-                    if f3 == 1:
-                        for f4, _, v4 in _fields(v3):
-                            if f4 == 1:
-                                entry["scope_name"] = v4.decode("utf-8")
-                    elif f3 == 2:
-                        entry["records"].append(decode_log_record(v3))
-        out.append(entry)
-    return out
-
-
 # --- DataFrame boundary ------------------------------------------------------
-
-REQUEST_SCHEMA = T.StructType(
-    [
-        T.StructField("request_proto", T.BinaryType()),
-        T.StructField("n_records", T.LongType()),
-    ]
-)
-
-
-def to_export_request_proto(
-    tree: DataFrame, resource_col: str = "resource_attributes"
-) -> DataFrame:
-    """ResourceLogs tree rows → one protobuf request per tree chunk
-    (the exporter's encode stage; Arrow-batched mapInPandas)."""
-    import pandas as pd
-
-    def _encode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            protos, counts = [], []
-            for attrs, recs in zip(pdf[resource_col], pdf["log_records"]):
-                encoded = [
-                    encode_log_record(
-                        r["time_unix_nano"] or 0,
-                        r["severity_number"] or 0,
-                        r["severity_text"] or "",
-                        r["body"] or "",
-                    )
-                    for r in recs
-                ]
-                rl = encode_resource_logs(dict(attrs or {}), encoded)
-                protos.append(encode_export_request([rl]))
-                counts.append(len(recs))
-            yield pd.DataFrame(
-                {"request_proto": protos, "n_records": counts}
-            )
-
-    return tree.mapInPandas(_encode, REQUEST_SCHEMA)
-
 
 TRACE_REQUEST_SCHEMA = T.StructType(
     [

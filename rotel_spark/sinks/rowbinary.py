@@ -102,111 +102,12 @@ def _split_map_args(inner: str) -> tuple[str, str]:
     raise ValueError(f"bad Map type: Map({inner})")
 
 
-def encode_value(out: bytearray, chtype: str, v: Any) -> None:
-    if m := _LOWCARD_RE.match(chtype):
-        encode_value(out, m.group(1), v)
-        return
-    if m := _NULLABLE_RE.match(chtype):
-        if v is None:
-            out.append(1)  # ser.rs:99-103
-        else:
-            out.append(0)
-            encode_value(out, m.group(1), v)
-        return
-    if chtype == "Bool":
-        out.append(1 if v else 0)
-        return
-    if chtype in _FIXED:
-        fmt, _ = _FIXED[chtype]
-        out += struct.pack(fmt, v)
-        return
-    if chtype == "String":
-        raw = v.encode("utf-8") if isinstance(v, str) else bytes(v)
-        put_leb128(out, len(raw))
-        out += raw
-        return
-    if m := _ARRAY_RE.match(chtype):
-        inner = m.group(1)
-        items = list(v) if v is not None else []
-        put_leb128(out, len(items))
-        for item in items:
-            encode_value(out, inner, item)
-        return
-    if chtype == "JSON":
-        # A Spark row frame carries JSON columns as typed JSON strings
-        # (to_json keeps int/double/bool/array distinct); parse +
-        # path-expand at the codec boundary (transformer.rs:95-131)
-        if isinstance(v, str):
-            v = json_paths_from_str(v)
-        encode_json_column(out, v if v is not None else {})
-        return
-    if m := _MAP_RE.match(chtype):
-        kt, vt = _split_map_args(m.group(1))
-        # Arrow map columns arrive in pandas as sequences of (k, v)
-        # tuples, not dicts; None means empty
-        if v is None:
-            items = []
-        elif isinstance(v, dict):
-            items = list(v.items())
-        else:
-            items = list(v)
-        put_leb128(out, len(items))
-        for k, val in items:
-            encode_value(out, kt, k)
-            encode_value(out, vt, val)
-        return
-    raise ValueError(f"unsupported ClickHouse type: {chtype}")
-
-
-def decode_value(buf: bytes, off: int, chtype: str) -> tuple[Any, int]:
-    if m := _LOWCARD_RE.match(chtype):
-        return decode_value(buf, off, m.group(1))
-    if m := _NULLABLE_RE.match(chtype):
-        flag = buf[off]
-        off += 1
-        if flag == 1:
-            return None, off
-        return decode_value(buf, off, m.group(1))
-    if chtype == "Bool":
-        return buf[off] != 0, off + 1
-    if chtype in _FIXED:
-        fmt, width = _FIXED[chtype]
-        return struct.unpack_from(fmt, buf, off)[0], off + width
-    if chtype == "String":
-        n, off = read_leb128(buf, off)
-        if off + n > len(buf):
-            raise ValueError("truncated String")
-        return buf[off:off + n].decode("utf-8"), off + n
-    if m := _ARRAY_RE.match(chtype):
-        inner = m.group(1)
-        n, off = read_leb128(buf, off)
-        items = []
-        for _ in range(n):
-            item, off = decode_value(buf, off, inner)
-            items.append(item)
-        return items, off
-    if chtype == "JSON":
-        return decode_json_column(buf, off)
-    if m := _MAP_RE.match(chtype):
-        kt, vt = _split_map_args(m.group(1))
-        n, off = read_leb128(buf, off)
-        d = {}
-        for _ in range(n):
-            k, off = decode_value(buf, off, kt)
-            val, off = decode_value(buf, off, vt)
-            d[k] = val
-        return d, off
-    raise ValueError(f"unsupported ClickHouse type: {chtype}")
-
-
 def compile_encoder(chtype: str):
     """Type string → encode closure (out, v) -> None.
 
-    encode_value re-ran the Array/Nullable/Map regex dispatch on the
-    TYPE STRING for every value (rows × columns × wrappers matches);
-    compiling the schema once hoists all dispatch out of the row loop
-    (measured: the 100k-row log-table payload encode drops ~3×).
-    Byte output is identical to encode_value."""
+    The Array/Nullable/Map dispatch on the type string runs once per
+    schema column here, not once per value, so the row loop does no
+    regex matching."""
     if m := _LOWCARD_RE.match(chtype):
         return compile_encoder(m.group(1))
     if m := _NULLABLE_RE.match(chtype):
@@ -250,6 +151,9 @@ def compile_encoder(chtype: str):
 
         return enc_array
     if chtype == "JSON":
+        # A Spark row frame carries JSON columns as typed JSON strings
+        # (to_json keeps int/double/bool/array distinct); parse +
+        # path-expand at the codec boundary (transformer.rs:95-131)
         def enc_json(out, v):
             if isinstance(v, str):
                 v = json_paths_from_str(v)
@@ -261,6 +165,8 @@ def compile_encoder(chtype: str):
         kenc, venc = compile_encoder(kt), compile_encoder(vt)
 
         def enc_map(out, v, _kenc=kenc, _venc=venc):
+            # Arrow map columns arrive in pandas as sequences of (k, v)
+            # tuples, not dicts; None means empty
             if v is None:
                 items = []
             elif isinstance(v, dict):
@@ -277,8 +183,8 @@ def compile_encoder(chtype: str):
 
 
 def compile_decoder(chtype: str):
-    """Type string → decode closure (buf, off) -> (value, off).
-    decode_value with the dispatch hoisted (same value results)."""
+    """Type string → decode closure (buf, off) -> (value, off), the
+    type dispatch hoisted out of the row loop as in compile_encoder."""
     if m := _LOWCARD_RE.match(chtype):
         return compile_decoder(m.group(1))
     if m := _NULLABLE_RE.match(chtype):
@@ -555,33 +461,6 @@ LOG_ROW_CH_TYPES_JSON: list[tuple[str, str]] = [
     ) else t)
     for n, t in LOG_ROW_CH_TYPES
 ]
-
-# SpanRow field types (schema.rs:22-54)
-SPAN_ROW_CH_TYPES: list[tuple[str, str]] = [
-    ("Timestamp", "UInt64"),
-    ("TraceId", "String"),
-    ("SpanId", "String"),
-    ("ParentSpanId", "String"),
-    ("TraceState", "String"),
-    ("SpanName", "LowCardinality(String)"),
-    ("SpanKind", "LowCardinality(String)"),
-    ("ServiceName", "LowCardinality(String)"),
-    ("ResourceAttributes", "Map(String,String)"),
-    ("ScopeName", "String"),
-    ("ScopeVersion", "String"),
-    ("SpanAttributes", "Map(String,String)"),
-    ("Duration", "Int64"),
-    ("StatusCode", "LowCardinality(String)"),
-    ("StatusMessage", "String"),
-    ("Events.Timestamp", "Array(UInt64)"),
-    ("Events.Name", "Array(String)"),
-    ("Events.Attributes", "Array(Map(String,String))"),
-    ("Links.TraceId", "Array(String)"),
-    ("Links.SpanId", "Array(String)"),
-    ("Links.TraceState", "Array(String)"),
-    ("Links.Attributes", "Array(Map(String,String))"),
-]
-
 
 def rows_to_rowbinary(
     df: DataFrame, schema: list[tuple[str, str]], compress: bool = False

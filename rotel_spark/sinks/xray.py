@@ -27,16 +27,12 @@ Mirrors the reference's TraceTransformer
     aws.account_id default from the exporter config when the span
     didn't set them (env vars in the reference; explicit args here —
     executors don't share driver env).
-  * chunking — transformer.rs:52,103-113: segments batch into JSON
-    array payloads of at most 50 spans.
 
 Spark shape: segment assembly runs in an Arrow-batched mapInPandas
 (JSON with conditional keys + correct escaping is codec work, the
 same boundary where otlp_proto.py encodes — per-split, no shuffle,
 no driver involvement). Keys are emitted sorted to match serde_json's
-BTreeMap ordering. Chunking assigns chunk ids BEFORE the groupBy so
-no executor ever buffers more than one 50-span request (the
-bounded-buffer rule from sinks/otlp_shape.py).
+BTreeMap ordering.
 """
 
 from __future__ import annotations
@@ -45,9 +41,7 @@ import json
 from typing import Iterator
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-MAX_SPANS_PER_CHUNK = 50  # transformer.rs:52
 _MAX_VALUE = 256 * 1024
 _MAX_HTTP = 8192
 _MAX_ANNOTATION = 2048
@@ -275,37 +269,4 @@ def spans_to_segments(
         _apply,
         "xray_trace_id string, segment_id string, segment_type string,"
         " name string, segment_json string",
-    )
-
-
-def segments_to_requests(
-    segments: DataFrame, max_spans_per_chunk: int = MAX_SPANS_PER_CHUNK
-) -> DataFrame:
-    """Batch segments into JSON array payloads of ≤50 documents
-    (transformer.rs:52,103-113). Chunk ids are assigned BEFORE the
-    groupBy (spark_partition_id ++ row offset) so each request is a
-    bounded buffer and chunks never cross input splits — the same
-    scale rule as otlp_shape.to_resource_logs_tree."""
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy(F.spark_partition_id()).orderBy(
-        F.col("segment_id")
-    )
-    chunked = segments.withColumn(
-        "chunk",
-        F.concat(
-            F.spark_partition_id().cast("string"),
-            F.lit(":"),
-            F.floor(
-                (F.row_number().over(w) - 1) / max_spans_per_chunk
-            ).cast("string"),
-        ),
-    )
-    return chunked.groupBy("chunk").agg(
-        F.concat(
-            F.lit("["),
-            F.concat_ws(",", F.collect_list("segment_json")),
-            F.lit("]"),
-        ).alias("request_json"),
-        F.count(F.lit(1)).alias("n_segments"),
     )

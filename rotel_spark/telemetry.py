@@ -95,21 +95,6 @@ def events_to_datapoints(events: DataFrame) -> DataFrame:
     )
 
 
-def branch_telemetry(events: DataFrame) -> dict[str, DataFrame]:
-    """One scan → the three typed pipeline branches (agent.rs:806-906
-    static per-type wiring). Logs branch: error events as log records."""
-    spans = events_to_spans(events)
-    datapoints = events_to_datapoints(events)
-    logs = events.filter(F.col("event_type") == "error").select(
-        (F.unix_micros(F.col("ts").cast("timestamp")) * 1000).alias("time_unix_nano"),
-        F.lit(17).alias("severity_number"),
-        F.lit("ERROR").alias("severity_text"),
-        F.concat(F.lit("event error value="), F.col("value").cast("string"))
-        .alias("body"),
-    )
-    return {"traces": spans, "metrics": datapoints, "logs": logs}
-
-
 def spans_to_resource_tree(
     spans: DataFrame, max_spans_per_resource: int = 8192
 ) -> DataFrame:

@@ -1,108 +1,7 @@
-"""OTLP protobuf wire encoding: known-bytes vectors + lossless
-round-trip, pure-python and through the Spark boundary."""
+"""OTLP protobuf wire encoding of traces and metrics: known-bytes
+vectors + lossless pure-python round-trips."""
 
 from __future__ import annotations
-
-from pyspark.sql import functions as F
-
-from rotel_spark.sinks.otlp_proto import (
-    decode_export_request,
-    decode_log_record,
-    encode_export_request,
-    encode_log_record,
-    encode_resource_logs,
-    to_export_request_proto,
-)
-
-
-def test_known_wire_bytes():
-    """Hand-checked proto3 wire vectors (field<<3|wire, varint,
-    little-endian fixed64)."""
-    rec = encode_log_record(1, 9, "INFO", "hi")
-    # time_unix_nano: tag 0x09 (field 1, wire 1) + 8-byte LE 1
-    assert rec[:9] == b"\x09\x01\x00\x00\x00\x00\x00\x00\x00"
-    # severity_number: tag 0x10 (field 2, wire 0) + varint 9
-    assert rec[9:11] == b"\x10\x09"
-    # severity_text: tag 0x1a (field 3, wire 2) + len 4 + "INFO"
-    assert rec[11:17] == b"\x1a\x04INFO"
-    # body: tag 0x2a (field 5) + len 4 + AnyValue{0x0a len 2 "hi"}
-    assert rec[17:] == b"\x2a\x04\x0a\x02hi"
-
-    # proto3 default omission: zero severity / empty text drop out
-    assert encode_log_record(0, 0, "", "") == b"\x2a\x02\x0a\x00"
-
-
-def test_varint_multibyte():
-    rec = encode_log_record(0, 300, "", "")
-    # varint 300 = 0xac 0x02
-    assert b"\x10\xac\x02" in rec
-
-
-def test_roundtrip_pure_python():
-    recs = [
-        encode_log_record(
-            123456789,
-            17,
-            "ERROR",
-            "boom",
-            {"k": "v", "n": "5"},
-            observed_time_unix_nano=42,
-            event_name="evt",
-        ),
-        encode_log_record(7, 9, "INFO", ""),
-    ]
-    req = encode_export_request(
-        [encode_resource_logs({"service.name": "web"}, recs)]
-    )
-    out = decode_export_request(req)
-    assert len(out) == 1
-    entry = out[0]
-    assert entry["resource_attributes"] == {"service.name": "web"}
-    assert entry["scope_name"] == "rotel_spark"
-    r0 = entry["records"][0]
-    assert r0 == {
-        "time_unix_nano": 123456789,
-        "severity_number": 17,
-        "severity_text": "ERROR",
-        "body": "boom",
-        "attributes": {"k": "v", "n": "5"},
-        "observed_time_unix_nano": 42,
-        "event_name": "evt",
-    }
-    assert entry["records"][1]["severity_number"] == 9
-
-    single = decode_log_record(recs[0])
-    assert single["body"] == "boom"
-
-
-def test_spark_boundary_encode_decode(spark):
-    from rotel_spark.sinks.otlp_shape import to_resource_logs_tree
-
-    flat = spark.range(50).select(
-        (F.col("id") * 10).alias("time_unix_nano"),
-        F.lit(9).alias("severity_number"),
-        F.lit("INFO").alias("severity_text"),
-        F.concat(F.lit("b"), F.col("id")).alias("body"),
-        F.create_map(
-            F.lit("service.name"),
-            F.concat(F.lit("s"), (F.col("id") % 2).cast("string")),
-        ).alias("resource_attributes"),
-    )
-    tree = to_resource_logs_tree(flat)
-    protos = to_export_request_proto(tree).collect()
-    assert len(protos) == 2  # one request per resource chunk
-    total = 0
-    for row in protos:
-        decoded = decode_export_request(bytes(row.request_proto))
-        n = sum(len(e["records"]) for e in decoded)
-        assert n == row.n_records
-        total += n
-        assert decoded[0]["resource_attributes"]["service.name"] in (
-            "s0",
-            "s1",
-        )
-        assert decoded[0]["records"][0]["body"].startswith("b")
-    assert total == 50
 
 
 def test_negative_int_encodes_twos_complement():
@@ -135,6 +34,10 @@ def test_span_known_wire_bytes():
         "410200000000000000"
         "7a021802"
     )
+    # proto3 omits zero and empty values, so an all-default span is
+    # empty on the wire; varint 300 takes two bytes (0xac 0x02)
+    assert encode_span("", "", "", "", 0, 0, 0, 0) == b""
+    assert encode_span("", "", "", "", 300, 0, 0, 0) == b"\x30\xac\x02"
 
 
 def test_metric_gauge_known_wire_bytes():

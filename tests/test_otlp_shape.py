@@ -1,4 +1,4 @@
-"""rows ↔ ResourceLogs tree round-trip + kafka key."""
+"""rows ↔ ResourceLogs tree round-trip + proto-JSON export request."""
 
 from __future__ import annotations
 
@@ -79,22 +79,3 @@ def test_export_request_proto_json(spark):
     per_resource = to_export_request_json(tree, one_request=False)
     assert per_resource.count() == 4
 
-
-def test_kafka_key_order_insensitive(spark):
-    from rotel_spark.sources.kafka import kafka_key, to_kafka_batch
-
-    df = spark.createDataFrame([(1,)], "id int")
-    m1 = F.create_map(F.lit("a"), F.lit("1"), F.lit("b"), F.lit("2"))
-    m2 = F.create_map(F.lit("b"), F.lit("2"), F.lit("a"), F.lit("1"))
-    row = df.select(
-        kafka_key(m1).alias("k1"), kafka_key(m2).alias("k2")
-    ).collect()[0]
-    assert row.k1 == row.k2
-
-    batch = to_kafka_batch(
-        df.withColumn("resource_attributes", m1).withColumn("x", F.lit("y")),
-        value_cols=["id", "x"],
-    )
-    r = batch.collect()[0]
-    assert set(batch.columns) == {"key", "value"}
-    assert '"x":"y"' in r.value

@@ -11,12 +11,13 @@ from pyspark.sql import functions as F
 
 from rotel_spark.fixtures import extract_log_line, load_pages_full
 from rotel_spark.lineage import (
+    LINEAGE_SCHEMA,
     committed_ranges,
     observe_lineage,
     resume_filter,
     write_lineage,
 )
-from rotel_spark.plans.pipeline import build_pipeline, run_job
+from rotel_spark.plans.pipeline import build_pipeline, execute, run_job
 from rotel_spark.sinks.writer import fan_out
 from tests.harness import plan_of
 
@@ -205,6 +206,53 @@ def test_noop_rerun_commits_no_lineage_row(spark, sf_unit, tmp_path):
     assert rows[0].rows_in == counts["all"] > 0
     for name, n in counts.items():
         assert spark.read.parquet(str(tmp_path / name)).count() == n, name
+
+
+def test_run_job_commits_over_a_crashed_first_commit(
+    spark, sf_unit, tmp_path
+):
+    """A first lineage commit killed mid-write leaves `_temporary/0`
+    and no data file. The next run reads that as nothing committed: it
+    writes its sinks and commits its row, and the lineage it wrote
+    reads back with LINEAGE_SCHEMA's columns and types."""
+    cfg = _config(tmp_path, sf_unit)
+    lineage = pathlib.Path(cfg["lineage_path"])
+    (lineage / "_temporary" / "0").mkdir(parents=True)
+    counts = run_job(spark, cfg, run_id="r1")
+    assert counts["all"] > 0
+    for name, n in counts.items():
+        assert spark.read.parquet(str(tmp_path / name)).count() == n, name
+    rows = committed_ranges(spark, str(lineage), "r1").collect()
+    assert [r.rows_in for r in rows] == [counts["all"]]
+    written = spark.read.parquet(str(lineage)).schema
+    declared = spark.read.schema(LINEAGE_SCHEMA).parquet(str(lineage)).schema
+    assert [(f.name, f.dataType) for f in written] == [
+        (f.name, f.dataType) for f in declared
+    ]
+
+
+def test_quarantine_null_expression_row_lands_once(spark, tmp_path):
+    """A quarantine expression that is NULL fails the row, as it would
+    a filter: each source row lands in exactly one of the regular sinks
+    and the quarantine sink."""
+    df = spark.createDataFrame(
+        [(1, 200), (2, 500), (3, None)], "id long, status int"
+    )
+    cfg = {
+        "processors": [
+            {"kind": "quarantine", "expr": "status < 500",
+             "path": str(tmp_path / "dead")},
+        ],
+        "sinks": [{"name": "all", "path": str(tmp_path / "all")}],
+    }
+    counts = execute(spark, df, cfg, "r1", None)
+    assert counts == {"all": 1, "_quarantine": 2}
+    ids = [
+        r.id
+        for sink in ("all", "dead")
+        for r in spark.read.parquet(str(tmp_path / sink)).collect()
+    ]
+    assert sorted(ids) == [1, 2, 3]
 
 
 def test_pipeline_stage_order_preserved(spark):

@@ -1,11 +1,7 @@
 """Property-based tests (hypothesis) for the pure-python kernels:
-protobuf wire round-trip, AnyValue flatten, BMP/WAV codecs. No
-SparkSession needed."""
+AnyValue flatten, BMP/WAV codecs. No SparkSession needed."""
 
 from __future__ import annotations
-
-import json
-import math
 
 import numpy as np
 from hypothesis import given, settings
@@ -18,46 +14,8 @@ from rotel_spark.operators.multimodal import (
     make_bmp,
     make_wav,
 )
-from rotel_spark.sinks.otlp_proto import (
-    decode_export_request,
-    encode_export_request,
-    encode_log_record,
-    encode_resource_logs,
-)
 
 text = st.text(max_size=40)
-attr_maps = st.dictionaries(
-    st.text(min_size=1, max_size=10), text, max_size=5
-)
-
-
-@settings(max_examples=200, deadline=None)
-@given(
-    t=st.integers(min_value=0, max_value=2**63 - 1),
-    sev=st.integers(min_value=0, max_value=24),
-    sevtext=text,
-    body=text,
-    attrs=attr_maps,
-    obs=st.integers(min_value=0, max_value=2**63 - 1),
-    res=attr_maps,
-)
-def test_proto_roundtrip_lossless(t, sev, sevtext, body, attrs, obs, res):
-    rec = encode_log_record(t, sev, sevtext, body, attrs, obs)
-    req = encode_export_request([encode_resource_logs(res, [rec])])
-    out = decode_export_request(req)
-    assert len(out) == 1
-    assert out[0]["resource_attributes"] == res
-    r = out[0]["records"][0]
-    assert (
-        r["time_unix_nano"],
-        r["severity_number"],
-        r["severity_text"],
-        r["body"],
-        r["attributes"],
-        r["observed_time_unix_nano"],
-    ) == (t, sev, sevtext, body, attrs, obs)
-
-
 json_scalars = st.one_of(
     st.none(),
     st.booleans(),

@@ -7,25 +7,51 @@ import pytest
 
 from rotel_spark.sinks.rowbinary import (
     LOG_ROW_CH_TYPES,
-    SPAN_ROW_CH_TYPES,
+    compile_decoder,
+    compile_encoder,
     decode_rows,
-    decode_value,
     encode_rows,
-    encode_value,
     put_leb128,
     read_leb128,
 )
 
+# SpanRow field types (schema.rs:22-54): nested Array(Map) columns the
+# log row does not have
+SPAN_ROW_CH_TYPES = [
+    ("Timestamp", "UInt64"),
+    ("TraceId", "String"),
+    ("SpanId", "String"),
+    ("ParentSpanId", "String"),
+    ("TraceState", "String"),
+    ("SpanName", "LowCardinality(String)"),
+    ("SpanKind", "LowCardinality(String)"),
+    ("ServiceName", "LowCardinality(String)"),
+    ("ResourceAttributes", "Map(String,String)"),
+    ("ScopeName", "String"),
+    ("ScopeVersion", "String"),
+    ("SpanAttributes", "Map(String,String)"),
+    ("Duration", "Int64"),
+    ("StatusCode", "LowCardinality(String)"),
+    ("StatusMessage", "String"),
+    ("Events.Timestamp", "Array(UInt64)"),
+    ("Events.Name", "Array(String)"),
+    ("Events.Attributes", "Array(Map(String,String))"),
+    ("Links.TraceId", "Array(String)"),
+    ("Links.SpanId", "Array(String)"),
+    ("Links.TraceState", "Array(String)"),
+    ("Links.Attributes", "Array(Map(String,String))"),
+]
+
 
 def enc(chtype, v) -> bytes:
     out = bytearray()
-    encode_value(out, chtype, v)
+    compile_encoder(chtype)(out, v)
     return bytes(out)
 
 
 def rt(chtype, v):
     raw = enc(chtype, v)
-    back, off = decode_value(raw, 0, chtype)
+    back, off = compile_decoder(chtype)(raw, 0)
     assert off == len(raw)
     return back
 

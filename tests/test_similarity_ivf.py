@@ -7,8 +7,6 @@ from pyspark.sql import functions as F
 
 from rotel_spark.operators.similarity import (
     brute_force_topk,
-    ivf_assign,
-    ivf_build_centroids,
     ivf_topk,
 )
 
@@ -24,21 +22,6 @@ def _clustered_corpus(spark, n_clusters=4, per_cluster=50, dim=16, seed=3):
             rows.append((i, [float(x) for x in v]))
             i += 1
     return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-
-
-def test_ivf_assign_groups_clusters(spark):
-    df = _clustered_corpus(spark)
-    cent = ivf_build_centroids(df, n_cells=4, sample_rows=200)
-    assigned = ivf_assign(df, cent)
-    # vectors from the same generator cluster should share a cell:
-    # cluster id = vec_id // 50
-    agg = (
-        assigned.withColumn("true_cluster", (F.col("vec_id") / 50).cast("int"))
-        .groupBy("true_cluster")
-        .agg(F.count_distinct("ivf_cell").alias("cells"))
-        .collect()
-    )
-    assert all(r.cells == 1 for r in agg)
 
 
 def test_ivf_topk_recall_vs_brute_force(spark):

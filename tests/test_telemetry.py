@@ -11,7 +11,6 @@ from rotel_spark.functions.anyvalue import (
     typed_attrs_map,
 )
 from rotel_spark.telemetry import (
-    branch_telemetry,
     emf_group_datapoints,
     events_to_datapoints,
     events_to_spans,
@@ -62,15 +61,11 @@ def test_emf_grouping_counts(spark, sf_unit):
     assert emf.filter(F.col("n_metrics") != 1).count() == 0
 
 
-def test_branch_telemetry_one_scan_three_types(spark, sf_unit):
-    branches = branch_telemetry(_events(spark, sf_unit))
-    assert set(branches) == {"traces", "metrics", "logs"}
-    n_events = _events(spark, sf_unit).count()
-    assert branches["traces"].count() == n_events
-    assert branches["metrics"].count() == n_events
-    logs = branches["logs"]
-    assert 0 < logs.count() < n_events
-    assert logs.filter(F.col("severity_number") != 17).count() == 0
+def test_spans_and_datapoints_one_row_per_event(spark, sf_unit):
+    events = _events(spark, sf_unit)
+    n_events = events.count()
+    assert events_to_spans(events).count() == n_events
+    assert events_to_datapoints(events).count() == n_events
 
 
 def test_coerce_scalar_reference_rules():

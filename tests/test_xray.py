@@ -8,7 +8,6 @@ from rotel_spark.sinks.xray import (
     XRayTransformError,
     format_xray_trace_id,
     segment_json,
-    segments_to_requests,
     span_to_segment,
     spans_to_segments,
 )
@@ -197,8 +196,7 @@ class TestSpark:
             " end_time_unix_nano long,"
             " attributes map<string,string>",
         )
-        segs = spans_to_segments(df, "test-env").cache()
-        out = segs.collect()
+        out = spans_to_segments(df, "test-env").collect()
         assert len(out) == 120
         seg0 = json.loads(
             [r for r in out if r["segment_id"] == f"{0:016x}"][0][
@@ -209,10 +207,3 @@ class TestSpark:
         assert seg0["fault"] is True  # 0 % 7 == 0 → status 500
         assert seg0["metadata"] == {"environment": "test-env"}
 
-        reqs = segments_to_requests(segs.repartition(1)).collect()
-        sizes = sorted(r["n_segments"] for r in reqs)
-        # 120 spans on one partition → 50 + 50 + 20 (transformer.rs:52)
-        assert sizes == [20, 50, 50]
-        for r in reqs:
-            docs = json.loads(r["request_json"])
-            assert len(docs) == r["n_segments"]
